@@ -4,19 +4,22 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
+import java.util.concurrent.{ConcurrentHashMap, ExecutionException, FutureTask}
+
 /** Fixture-table access. Schemas come from Parquet footers — the reference
   * never declares schemas either (mkpipe_extractor_clickhouse/__init__.py:43,
   * `reader.load()` infers from the source).
   *
   * Timestamp normalization (session TZ is pinned UTC):
-  *   - `events.ts` is TIMESTAMP(NANOS) parquet. Spark 4.1.2 reads it natively
-  *     as a µs-truncated TIMESTAMP_NTZ (the same µs value DuckDB sees) and the
-  *     NTZ branch below casts it to TimestampType; on readers where only the
-  *     legacy nanos-as-long path exists (`legacy.parquet.nanosAsLong`, a no-op
-  *     on 4.1.2) the LongType branch truncates ns→µs explicitly and
-  *     [[graft.plans.PushdownNanosTimestamp]] restores scan pushdown. Both
-  *     branches stay: which one is live depends on the reader's nanos
-  *     handling, and the result is identical either way.
+  *   - the fixtures' `events.ts` is µs TIMESTAMP_NTZ parquet at every scale
+  *     factor (isAdjustedToUTC=false) and takes the NTZ branch below like
+  *     any other NTZ column;
+  *   - a genuine TIMESTAMP(NANOS) column (a ClickHouse DateTime64(9)
+  *     export) is unreadable on Spark 4.1.2 (PARQUET_TYPE_ILLEGAL) unless
+  *     `spark.sql.legacy.parquet.nanosAsLong` is set, and then reads as a
+  *     raw-nanos long: the LongType branch truncates ns→µs and
+  *     [[graft.plans.PushdownNanosTimestamp]] restores scan pushdown.
+  *     `PlansSpec` covers this with a real nanos file;
   *   - ms-precision columns load as TIMESTAMP_NTZ (isAdjustedToUTC=false);
   *     cast to TimestampType so instant functions (unix_micros, window) work.
   *     Under a UTC session both renderings are identical.
@@ -25,40 +28,41 @@ object Tables {
   val All = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // DataFrames are immutable plans — cache per (session, dir, table) so
-  // repeated reads skip file listing + footer schema inference (a fixed
-  // ~100ms planning tax per read otherwise). The outer map holds the session
-  // itself with reference-identity semantics (SparkSession doesn't override
-  // equals), so a lookup can never serve plans bound to a different session —
-  // the failure mode of the previous identityHashCode key, where a recycled
-  // hash could collide. Note the cached DataFrames strongly reference their
-  // session, so WeakHashMap entries in practice live until JVM exit; the
-  // retention is bounded by sessions-ever-created (typically 1) and a stale
-  // entry is unreachable by construction, never wrong.
-  private val cache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]())
+  // One memo map per session: (dir, tag) → a once-cell holding the value.
+  // The outer map holds the session itself with reference-identity
+  // semantics (SparkSession doesn't override equals), so a lookup can never
+  // serve plans bound to a different session. Memoized DataFrames strongly
+  // reference their session, so the weak-keyed entries in practice live
+  // until JVM exit; the retention is bounded by sessions-ever-created
+  // (typically 1) and a stale entry is unreachable by construction.
+  private val memos = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[(String, String), FutureTask[Any]]]())
 
-  // Every per-session memo map that keys on (dir, tag) registers here (by
-  // reference identity) so `invalidate` can evict all derived tables of a
-  // changed dir without each module exposing its own eviction hook.
-  private val registry = new java.util.concurrent.CopyOnWriteArrayList[
-    java.util.Map[SparkSession, _ <: java.util.Map[(String, String), _]]]()
-
-  /** Per-session inner cache, shared with other per-session memoizers
-    * (minhash/cluster/anchor/k-means tables in [[graft.ops.LlmPipeline]]).
+  /** The engine's one memo: the value `build` returns, computed once per
+    * (session, dir, tag). Raw reads ([[t]]), graph loads, baskets,
+    * signatures, centroids and materialized copies all memoize here, so
+    * [[invalidate]] reaches every one of them.
     *
-    * IMMUTABILITY CONTRACT: entries are keyed by (session, dir, tag) and
-    * NEVER invalidated by an underlying-data change. What an entry holds
-    * differs by layer, and that is exactly the hazard on a mutable dir:
+    * `build` runs in the calling thread OUTSIDE any map lock, so it may
+    * call other memos (derived tables compose: cluster labels read pairs
+    * read signatures read the raw table). Concurrent callers of the same
+    * key wait for the single build ([[inParallel]] chains rely on this).
+    * A build that throws is not cached — the next call retries — and its
+    * exception reaches every waiting caller unwrapped. A build must not
+    * recurse into its OWN key (it would wait on itself).
+    *
+    * IMMUTABILITY CONTRACT: entries are NEVER invalidated by an
+    * underlying-data change. What an entry holds differs by layer, and
+    * that is exactly the hazard on a mutable dir:
     *
     *   - a memoized RAW READ is a plan, not data — whether execution
     *     re-lists the dir (appends show through) or serves Spark's own
     *     file-status cache (appends invisible) is NONDETERMINISTIC under
     *     mutation (measured both ways across runs);
-    *   - DRIVER-SIDE results (k-means centroid matrices) and
-    *     localCheckpoint'ed tables (cluster labels) are frozen at first
-    *     use, permanently stale against a mutated dir;
+    *   - DRIVER-SIDE results (k-means centroid matrices), materialized
+    *     copies (round-trip and layout dirs) and localCheckpoint'ed tables
+    *     (cluster labels) are frozen at first use, permanently stale
+    *     against a mutated dir;
     *   - `persist`ed derived tables (token/anchor tables) sit in between:
     *     the block cache may serve frozen partitions or silently
     *     recompute through a re-listing scan — also nondeterministic.
@@ -73,43 +77,33 @@ object Tables {
     * adds a filesystem listing per access and still cannot refresh an
     * already-checkpointed derived table.
     */
-  private[graft] def sessionCache[V](
-      outer: java.util.Map[SparkSession, java.util.concurrent.ConcurrentHashMap[(String, String), V]],
-      spark: SparkSession): java.util.concurrent.ConcurrentHashMap[(String, String), V] = {
-    registry.synchronized {
-      var seen = false
-      val it = registry.iterator()
-      while (it.hasNext && !seen) seen = it.next() eq outer
-      if (!seen) registry.add(outer)
+  private[graft] def memo[V](spark: SparkSession, dir: String, tag: String)(build: => V): V = {
+    val m = memos.computeIfAbsent(spark, _ => new ConcurrentHashMap)
+    val key = (dir, tag)
+    val fresh = new FutureTask[Any](() => build)
+    val cell = m.putIfAbsent(key, fresh) match {
+      case null => fresh.run(); fresh
+      case prior => prior
     }
-    outer.synchronized {
-      var m = outer.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[(String, String), V]
-        outer.put(spark, m)
-      }
-      m
+    try cell.get().asInstanceOf[V]
+    catch {
+      case e: ExecutionException =>
+        m.remove(key, cell)
+        throw e.getCause
     }
   }
 
   /** Evict every memoized plan and derived table bound to `dir` for this
-    * session, across ALL modules' memo caches — the escape hatch the
-    * immutability contract on [[sessionCache]] names: call after changing
-    * a dir's contents in place, and the next access re-reads and
-    * re-derives. Eviction is by dir, not by (dir, tag): derived tables
-    * compose (cluster labels read signatures read the raw table), so a
-    * partial eviction could rebuild one layer on a stale lower layer.
+    * session — the escape hatch the immutability contract on [[memo]]
+    * names: call after changing a dir's contents in place, and the next
+    * access re-reads and re-derives. Eviction is by dir, not by (dir,
+    * tag): derived tables compose (cluster labels read signatures read the
+    * raw table), so a partial eviction could rebuild one layer on a stale
+    * lower layer.
     */
   def invalidate(spark: SparkSession, dir: String): Unit = {
-    registry.synchronized {
-      registry.forEach { outer =>
-        val m = outer.get(spark)
-        if (m != null) {
-          val it = m.keySet().iterator()
-          while (it.hasNext) if (it.next()._1 == dir) it.remove()
-        }
-      }
-    }
+    val m = memos.get(spark)
+    if (m != null) m.keySet().removeIf(_._1 == dir)
     // Also drop Spark's own file-status/plan caches under the path —
     // without this the freshly built plan can still serve the stale
     // listing, and WITH it the post-invalidate view is deterministic.
@@ -117,11 +111,14 @@ object Tables {
   }
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Session-level setup must run on every call, not only on cache miss —
-    // a fresh session hitting a warm (dir, name) key still needs them.
+    // Session-level setup runs on every call, not only on a memo miss, so
+    // a conf reset between reads cannot leave a warm key without it.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.plans.PushdownNanosTimestamp.install(spark)
-    sessionCache(cache, spark).computeIfAbsent((dir, name), _ => {
+    // DataFrames are immutable plans — memoized so repeated reads skip file
+    // listing + footer schema inference (a fixed ~100ms planning tax per
+    // read otherwise).
+    memo(spark, dir, s"table/$name") {
       val df = spark.read.parquet(s"$dir/$name.parquet")
       val cols: Array[Column] = df.schema.fields.map { f =>
         if (f.dataType == TimestampNTZType)
@@ -131,7 +128,7 @@ object Tables {
         else col(f.name)
       }
       df.select(cols.toSeq: _*)
-    })
+    }
   }
 
   /** Register every fixture table as a temp view for spark.sql paths. */
@@ -147,8 +144,8 @@ object Tables {
     * its own thread and the scheduler back-fills idle cores with the other
     * chain's tasks. The pool is sized to the thunk count and torn down
     * before returning — no threads outlive the call. Thunks must not
-    * depend on each other; per-session memos (computeIfAbsent) stay safe
-    * because a concurrent builder blocks the other thunks on the same key.
+    * depend on each other; [[memo]] stays safe because a concurrent builder
+    * blocks the other thunks on the same key.
     */
   private[graft] def inParallel[T](thunks: (() => T)*): Seq[T] =
     if (thunks.sizeIs <= 1) thunks.map(_()).toSeq

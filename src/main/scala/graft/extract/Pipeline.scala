@@ -27,23 +27,50 @@ final class InMemoryWatermarkStore extends WatermarkStore {
 /** File-backed store: one `table=watermark` line per table — survives runs,
   * driver-agnostic (java.util.Properties escaping handles ':' and spaces in
   * timestamp watermarks).
+  *
+  * `put` is crash- and writer-safe: the new file is written to a temp file
+  * in the same directory, forced to disk and renamed over the old one
+  * (`ATOMIC_MOVE`), so a crash mid-write leaves the previous watermarks
+  * intact and readers never see a partial file. The read-modify-write holds
+  * an exclusive lock on a sidecar `<file>.lock` — a `FileChannel` lock
+  * against other processes plus a JVM-wide monitor against other stores in
+  * this JVM (the OS lock is held per process, not per thread) — so two
+  * pipelines sharing the file never lose each other's tables.
   */
 final class FileWatermarkStore(path: java.nio.file.Path) extends WatermarkStore {
+  import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
+
+  private val file = path.toAbsolutePath.normalize
+
   private def load(): java.util.Properties = {
     val p = new java.util.Properties()
-    if (java.nio.file.Files.exists(path)) {
-      val in = java.nio.file.Files.newInputStream(path)
+    if (Files.exists(file)) {
+      val in = Files.newInputStream(file)
       try p.load(in) finally in.close()
     }
     p
   }
   def get(table: String): Option[String] = Option(load().getProperty(table))
-  def put(table: String, value: String): Unit = {
-    val p = load()
-    p.setProperty(table, value)
-    val out = java.nio.file.Files.newOutputStream(path)
-    try p.store(out, "graft watermarks") finally out.close()
-  }
+  def put(table: String, value: String): Unit =
+    classOf[FileWatermarkStore].synchronized {
+      val lockCh = java.nio.channels.FileChannel.open(
+        file.resolveSibling(s"${file.getFileName}.lock"),
+        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+      try {
+        lockCh.lock()
+        val p = load()
+        p.setProperty(table, value)
+        val tmp = Files.createTempFile(file.getParent, s"${file.getFileName}.", ".tmp")
+        try {
+          val ch = java.nio.channels.FileChannel.open(tmp, StandardOpenOption.WRITE)
+          try {
+            p.store(java.nio.channels.Channels.newOutputStream(ch), "graft watermarks")
+            ch.force(true)
+          } finally ch.close()
+          Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+        } finally Files.deleteIfExists(tmp)
+      } finally lockCh.close() // closing the channel releases its lock
+    }
 }
 
 /** Extractor variant registry — the engine's analogue of the reference's

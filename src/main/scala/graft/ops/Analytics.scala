@@ -725,18 +725,15 @@ object Analytics {
   // [[graft.ops.Graph.partsCoGraph]]) the part co-occurrence graph: the
   // order-keyed fact shuffle is the expensive stage of all four, and it is
   // parameter-independent. Memoized per (session, dir) under the
-  // [[graft.Tables.sessionCache]] immutability contract, localCheckpoint'ed
-  // so the memo holds no live lineage over the source scans.
-  private val basketsCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]())
-
+  // [[graft.Tables.memo]] immutability contract, localCheckpoint'ed so the
+  // memo holds no live lineage over the source scans.
   private[graft] def orderBaskets(spark: SparkSession, dir: String): DataFrame =
-    graft.Tables.sessionCache(basketsCache, spark).computeIfAbsent((dir, "baskets"), _ =>
+    graft.Tables.memo(spark, dir, "baskets") {
       t(spark, dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-        .localCheckpoint())
+        .localCheckpoint()
+    }
 
   /** Per-pair support (support ≥ 2) over the [[orderBaskets]] load — the
     * SECOND parameter-independent intermediate both [[basketPairs]] and
@@ -747,19 +744,13 @@ object Analytics {
     * the struct-HOF `transform`/`flatten` form: higher-order functions
     * evaluate interpreted outside WholeStageCodegen, and at the ~1.5M-pair
     * scale of sf0.1 the compiled loop measured 0.87 → 0.64 s warm on
-    * basket_pairs (the packed-long trick assumes part keys < 2³¹ — true of
-    * TPC-H keys by construction, same precondition graphNeighborJaccard
-    * states).
+    * basket_pairs (the packed-long trick needs part keys < 2³¹ — true of
+    * TPC-H keys by construction, checked like graphNeighborJaccard's).
     */
-  private[graft] def pairSupport(spark: SparkSession, dir: String): DataFrame = {
-    // Materialize the baskets BEFORE entering the memo: orderBaskets does
-    // its own computeIfAbsent on the SAME ConcurrentHashMap, and CHM
-    // forbids the mapping function from touching the map (recursive-update
-    // IllegalStateException / livelock when the two keys land in one bin).
-    val baskets = orderBaskets(spark, dir)
-    graft.Tables.sessionCache(basketsCache, spark).computeIfAbsent((dir, "pairsupp"), _ => {
+  private[graft] def pairSupport(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.memo(spark, dir, "pairsupp") {
       import spark.implicits._
-      baskets
+      orderBaskets(spark, dir)
         .select("ps").as[Array[Long]]
         .flatMap { ps =>
           // `ps` is sorted ascending, so the last element bounds them all:
@@ -783,8 +774,7 @@ object Analytics {
         .select(shiftrightunsigned(col("pk"), 32).as("part_a"),
           col("pk").bitwiseAND(lit(0xffffffffL)).as("part_b"), col("support"))
         .localCheckpoint()
-    })
-  }
+    }
 
   def basketPairs(spark: SparkSession, dir: String): DataFrame =
     pairSupport(spark, dir)
@@ -1436,8 +1426,9 @@ object Analytics {
     * state, not raw versions — latest-wins is a `max` over versions PACKED
     * into one int64 (`seq << 40 | cents`: seq is unique per key so the
     * packed max IS the rank-1 row of the old `row_number() DESC` window,
-    * and cents < 2⁴⁰ by the TPC-H price domain — o_totalprice tops out
-    * near 6×10⁵ dollars at every SF, 2⁴⁰ cents ≈ $10¹⁰) and the version
+    * and cents in [0, 2⁴⁰) by the TPC-H price domain — o_totalprice tops
+    * out near 6×10⁵ dollars at every SF, 2⁴⁰ cents ≈ $10¹⁰ — CHECKED per
+    * version in the packing projection, no extra job) and the version
     * count rides the same aggregate, so Tungsten's map-side combine
     * collapses each key's changelog before the exchange where the r14
     * twin-window form shuffled every version row and paid a per-partition
@@ -1461,7 +1452,9 @@ object Analytics {
       .select(col("o_orderkey").as("k"),
         floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
     def wave(pred: Column, seq: Int, newCents: Column): Column =
-      when(pred, lit(seq.toLong * (1L << 40)) + newCents)
+      when(pred, when(newCents >= 0 && newCents < (1L << 40), lit(seq.toLong << 40) + newCents)
+        .otherwise(raise_error(concat(
+          lit("cdc_apply packs cents into 40 bits, saw "), newCents.cast("string")))))
     val waves = array(
       wave(col("k") % 4 =!= 3, 0, col("cents")),
       wave(col("k") % 4 === 3, 1, col("cents")),
@@ -1643,19 +1636,15 @@ object Analytics {
       .orderBy("rank")
   }
 
-  private val bpeCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), Seq[(Long, String, String, Long)]]]())
-
   /** The 8-round learning recurrence behind [[textBpeMerges]], memoized per
     * (session, dir) so [[textBpeEncode]] reuses the merge table instead of
-    * re-running the loop (same [[graft.Tables.sessionCache]] immutability
+    * re-running the loop (same [[graft.Tables.memo]] immutability
     * contract as the centroid/θ_max memos). The returned value is the tiny
     * (rank, left, right, pair_count) list — a driver parameter, not data.
     */
   private def bpeLearn(
       spark: SparkSession, dir: String): Seq[(Long, String, String, Long)] =
-    graft.Tables.sessionCache(bpeCache, spark).computeIfAbsent((dir, "bpe_merges"), _ => {
+    graft.Tables.memo(spark, dir, "bpe_merges") {
       import spark.implicits._
       val words = t(spark, dir, "documents")
         .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
@@ -1685,7 +1674,7 @@ object Analytics {
         }
       }
       merges.toSeq
-    })
+    }
 
   /** One left-to-right non-overlapping merge pass — the kernel both the
     * learner and the encoder apply, so encoding a dictionary word with the

@@ -45,16 +45,11 @@ object Graph {
     */
   // The degree-annotated edge table is the graph LOAD, not the query —
   // memoized per (session, dir) like the IVF index and cluster-label
-  // tables (same immutability contract, [[graft.Tables.sessionCache]]),
-  // so repeated analytics over the same graph pay the extract+distinct
-  // once. localCheckpoint'ed: the memo must not hold a live lineage over
-  // the source scans.
-  private val edgeCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]())
-
+  // tables ([[graft.Tables.memo]]), so repeated analytics over the same
+  // graph pay the extract+distinct once. localCheckpoint'ed: the memo must
+  // not hold a live lineage over the source scans.
   private[graft] def tradeGraph(spark: SparkSession, dir: String): DataFrame =
-    graft.Tables.sessionCache(edgeCache, spark).computeIfAbsent((dir, "trade-graph"), _ => {
+    graft.Tables.memo(spark, dir, "trade-graph") {
       val base = t(spark, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
         .join(t(spark, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
@@ -64,7 +59,7 @@ object Graph {
         .unionAll(base.select((col("supp") + 1000000L).as("src"), col("cust").as("dst")))
       val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
       edges.join(deg, "src").localCheckpoint()
-    })
+    }
 
   /** One synchronous superstep: contributions r/deg flow along edges
     * (map-side, partial-aggregated), then r' = 0.15·Scale + 0.85·Σ. The
@@ -114,10 +109,6 @@ object Graph {
   // exactly one bucket → one file per bucket, the layout bucketed reads
   // like). External table in an exit-cleaned temp dir + per-JVM tag, same
   // decay discipline as FileFormats.bucketedTables.
-  private val bucketedEdgeCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), String]]())
-
   /** The shared bucketed-edge write recipe: persist an edge table ONCE,
     * bucketed AND sorted by `src` into 8 buckets at an exit-cleaned
     * external path, named uniquely per (dir, JVM) so concurrent suites
@@ -140,8 +131,9 @@ object Graph {
   }
 
   private[graft] def bucketedTradeGraph(spark: SparkSession, dir: String): String =
-    graft.Tables.sessionCache(bucketedEdgeCache, spark).computeIfAbsent((dir, "trade-graph-bkt"),
-      _ => writeBucketedEdges(tradeGraph(spark, dir), "edges", dir))
+    graft.Tables.memo(spark, dir, "trade-graph-bkt") {
+      writeBucketedEdges(tradeGraph(spark, dir), "edges", dir)
+    }
 
   /** PageRank for the regime where the rank vector has outgrown broadcast
     * (billion-node graphs): the O(E) edge table is persisted ONCE bucketed
@@ -291,7 +283,7 @@ object Graph {
     * distinct is a full fact-pair exchange).
     */
   private[graft] def domesticEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.Tables.sessionCache(edgeCache, spark).computeIfAbsent((dir, "domestic-edges"), _ => {
+    graft.Tables.memo(spark, dir, "domestic-edges") {
       val base = t(spark, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
         .join(t(spark, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
@@ -305,7 +297,7 @@ object Graph {
       base.select(col("cust").as("src"), (col("supp") + 1000000L).as("dst"))
         .unionAll(base.select((col("supp") + 1000000L).as("src"), col("cust").as("dst")))
         .localCheckpoint()
-    })
+    }
 
   /** The graph's node set (distinct src — total by the both-directions
     * convention), memoized per (session, dir) like the edge table itself:
@@ -315,24 +307,20 @@ object Graph {
     * plus a materializing action per query, paid 8× per session (guide
     * §2.4: identical work keyed identically shares one exchange). The
     * BUCKETED variants share it soundly: their edge tables are bucketed
-    * rewrites of the same rows. The edge memo is materialized BEFORE this
-    * memo's mapping function — computeIfAbsent must never re-enter the
-    * same map (the [[graft.ops.Analytics.pairSupport]] hazard).
+    * rewrites of the same rows.
     */
-  private[graft] def domesticNodes(spark: SparkSession, dir: String): DataFrame = {
-    val e = domesticEdges(spark, dir)
-    graft.Tables.sessionCache(edgeCache, spark).computeIfAbsent((dir, "domestic-nodes"),
-      _ => e.select(col("src").as("node")).distinct().localCheckpoint())
-  }
+  private[graft] def domesticNodes(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.memo(spark, dir, "domestic-nodes") {
+      domesticEdges(spark, dir).select(col("src").as("node")).distinct().localCheckpoint()
+    }
 
   /** [[domesticNodes]] for the trade graph — the PageRank variants' seed
-    * set (same memo discipline, same pre-materialized edge contract).
+    * set (same memo discipline).
     */
-  private[graft] def tradeNodes(spark: SparkSession, dir: String): DataFrame = {
-    val e = tradeGraph(spark, dir)
-    graft.Tables.sessionCache(edgeCache, spark).computeIfAbsent((dir, "trade-nodes"),
-      _ => e.select(col("src").as("node")).distinct().localCheckpoint())
-  }
+  private[graft] def tradeNodes(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.memo(spark, dir, "trade-nodes") {
+      tradeGraph(spark, dir).select(col("src").as("node")).distinct().localCheckpoint()
+    }
 
   /** Connected components of the DOMESTIC trade graph — an edge per
     * distinct customer↔supplier pair that trades within one nation
@@ -439,8 +427,9 @@ object Graph {
     * the label vector has outgrown broadcast.
     */
   private[graft] def bucketedDomesticEdges(spark: SparkSession, dir: String): String =
-    graft.Tables.sessionCache(bucketedEdgeCache, spark).computeIfAbsent((dir, "domestic-bkt"),
-      _ => writeBucketedEdges(domesticEdges(spark, dir), "dedges", dir))
+    graft.Tables.memo(spark, dir, "domestic-bkt") {
+      writeBucketedEdges(domesticEdges(spark, dir), "dedges", dir)
+    }
 
   /** Connected components for the beyond-broadcast regime (billion-node
     * graphs): the O(E) domestic edge table is persisted ONCE bucketed by
@@ -547,16 +536,19 @@ object Graph {
       // beats the self-label wherever one exists — so pack
       // priority·2³² | label into one int64 (labels are node ids < 2²¹ —
       // customers < 10⁶, suppliers offset to < 2·10⁶ — so bit 32 is free
-      // at any fixture scale; the same id-width precondition
-      // [[graphNeighborJaccard]]'s packed pairs state) and take the plain
-      // long min: self-labels carry the bit, the per-node winner (unique
-      // by construction) does not. A struct-min would force a
-      // SortAggregate; the packed long keeps the round in codegen'd
-      // HashAggregate with map-side combine.
+      // at any fixture scale) and take the plain long min: self-labels
+      // carry the bit, the per-node winner (unique by construction) does
+      // not. A struct-min would force a SortAggregate; the packed long
+      // keeps the round in codegen'd HashAggregate with map-side combine.
+      // Every label passes through the self-label side, so the bound is
+      // CHECKED there, in the packing projection — no extra job.
       val best = labelPropIncoming(e, labels, broadcastLabels)
         .select(col("inode").as("node"), col("new_lbl").as("pk"))
+      val selfPk = when(col("lbl") >= 0 && col("lbl") < (1L << 32), col("lbl") + lit(1L << 32))
+        .otherwise(raise_error(concat(
+          lit("label-prop packs labels into 32 bits, saw "), col("lbl").cast("string"))))
       labels = best
-        .unionAll(labels.select(col("node"), (col("lbl") + lit(1L << 32)).as("pk")))
+        .unionAll(labels.select(col("node"), selfPk.as("pk")))
         .groupBy("node").agg(min(col("pk")).as("pk"))
         .select(col("node"), col("pk").bitwiseAND(lit((1L << 32) - 1)).as("lbl"))
         .localCheckpoint()
@@ -909,7 +901,7 @@ object Graph {
     * original 10 s kcore at sf0.1 — and it is parameter-independent).
     */
   private[graft] def partsCoGraph(spark: SparkSession, dir: String): DataFrame =
-    graft.Tables.sessionCache(edgeCache, spark).computeIfAbsent((dir, "parts-cograph"), _ => {
+    graft.Tables.memo(spark, dir, "parts-cograph") {
       // Built over the shared basket load — the order-keyed fact shuffle
       // is paid once across the whole basket/graph family.
       val parts = Analytics.orderBaskets(spark, dir)
@@ -924,7 +916,7 @@ object Graph {
       und.select(col("x").as("src"), col("y").as("dst"))
         .unionAll(und.select(col("y").as("src"), col("x").as("dst")))
         .localCheckpoint()
-    })
+    }
 
   /** The part co-occurrence graph persisted ONCE bucketed by `src` — the
     * k-core sibling of [[bucketedDomesticEdges]] (same 8-bucket layout,
@@ -932,17 +924,17 @@ object Graph {
     * the surviving-node vector has outgrown broadcast.
     */
   private[graft] def bucketedPartsCoGraph(spark: SparkSession, dir: String): String =
-    graft.Tables.sessionCache(bucketedEdgeCache, spark).computeIfAbsent((dir, "parts-cograph-bkt"),
-      _ => writeBucketedEdges(partsCoGraph(spark, dir), "pedges", dir))
+    graft.Tables.memo(spark, dir, "parts-cograph-bkt") {
+      writeBucketedEdges(partsCoGraph(spark, dir), "pedges", dir)
+    }
 
   /** [[domesticNodes]] for the part co-occurrence graph — the k-core peel's
-    * round-0 alive set (same memo discipline, edge memo materialized first).
+    * round-0 alive set (same memo discipline).
     */
-  private[graft] def partsNodes(spark: SparkSession, dir: String): DataFrame = {
-    val e = partsCoGraph(spark, dir)
-    graft.Tables.sessionCache(edgeCache, spark).computeIfAbsent((dir, "parts-nodes"),
-      _ => e.select(col("src").as("node")).distinct().localCheckpoint())
-  }
+  private[graft] def partsNodes(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.memo(spark, dir, "parts-nodes") {
+      partsCoGraph(spark, dir).select(col("src").as("node")).distinct().localCheckpoint()
+    }
 
   /** The edge-touching stage of one peel round in the STATIC-edge
     * formulation ([[graphKcoreBucketed]]): alive-in-neighbor counts for
@@ -1176,7 +1168,8 @@ object Graph {
     // packed-long HOF 4.1s, typed flatMap with a compiled while-loop
     // 2.9s, hand map-side combine in mapPartitions 5.5s (boxed-key
     // churn - Tungsten's partial hash agg already does that job
-    // better). Packed key assumes ids < 2^31.
+    // better). The packed key needs ids < 2^31, checked per customer on
+    // the sorted `ss`'s last element.
     import spark.implicits._
     // AQE coalesces the collect_set output by its INPUT bytes (~15k tiny
     // rows → 2 post-shuffle tasks at sf0.1, measured via JobTrace: 5.25 s
@@ -1187,6 +1180,8 @@ object Graph {
     perCust.select("ss").as[Array[Long]]
       .repartition(spark.sparkContext.defaultParallelism)
       .flatMap { ss =>
+        require(ss.isEmpty || ss(ss.length - 1) < (1L << 31),
+          s"packed pair key needs supplier ids < 2^31, saw ${ss(ss.length - 1)}")
         val out = new scala.collection.mutable.ArrayBuffer[Long](
           ss.length * (ss.length - 1) / 2)
         var i = 0

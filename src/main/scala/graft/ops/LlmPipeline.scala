@@ -87,22 +87,14 @@ object LlmPipeline {
     * persisted signature table per session instead of each leaking a fresh
     * MEMORY_AND_DISK entry per invocation.
     */
-  private val minhashCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), (DataFrame, DataFrame)]]())
-
   private def minhashCandidates(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    graft.Tables.sessionCache(minhashCache, spark).computeIfAbsent((dir, "minhash"), _ =>
-      buildMinhashCandidates(spark, dir))
-
-  private def buildMinhashCandidates(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
-    val sigs = t(spark, dir, "documents")
-      .select(col("doc_id"),
-        graft.functions.MinHashSignature.minhash(spark, col("text"), NumHashes, ShingleLen).as("sig"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    (sigs, lshCandidatePairs(sigs))
-  }
+    graft.Tables.memo(spark, dir, "minhash") {
+      val sigs = t(spark, dir, "documents")
+        .select(col("doc_id"),
+          graft.functions.MinHashSignature.minhash(spark, col("text"), NumHashes, ShingleLen).as("sig"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      (sigs, lshCandidatePairs(sigs))
+    }
 
   /** LSH-banded near-dup candidate pairs from (doc_id, sig) signatures:
     * explode 16 bands → bucket = hash(band slice) → ONE
@@ -213,24 +205,19 @@ object LlmPipeline {
     * `curation_pipeline`, `dedup_clusters`) — unshared, each re-ran band
     * explode + bucket shuffle + verify join.
     */
-  private def confirmedPairs(spark: SparkSession, dir: String): DataFrame = {
-    // Resolve the candidates BEFORE entering computeIfAbsent: both memoize on
-    // the same ConcurrentHashMap, and a nested computeIfAbsent on one map is
-    // an IllegalStateException ("recursive update").
-    val (sigs, cands) = minhashCandidates(spark, dir)
-    graft.Tables.sessionCache(minhashCache, spark).computeIfAbsent((dir, "confirmed"), _ => {
+  private def confirmedPairs(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.memo(spark, dir, "confirmed") {
+      val (sigs, cands) = minhashCandidates(spark, dir)
       // Re-attach signatures only for the (few) surviving candidates, then
       // estimate Jaccard as the fraction of agreeing signature positions.
       val sa = sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"))
       val sb = sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"))
-      val confirmed = cands.join(sa, "doc_a").join(sb, "doc_b")
+      cands.join(sa, "doc_a").join(sb, "doc_b")
         .select(col("doc_a"), col("doc_b"),
           estJaccard(col("sig_a"), col("sig_b")).as("est_jaccard"))
         .filter(col("est_jaccard") >= 0.5)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      (confirmed, confirmed)
-    })._1
-  }
+    }
 
   def dedupNearMinhash(spark: SparkSession, dir: String): DataFrame =
     confirmedPairs(spark, dir).orderBy("doc_a", "doc_b")
@@ -330,10 +317,6 @@ object LlmPipeline {
     labels
   }
 
-  private val clustersCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]())
-
   /** Full corpus labeling, memoized per (session, dir): the iterative
     * label propagation is the most expensive plan in the inventory and
     * THREE consumers read its output (`dedup_clusters`,
@@ -352,13 +335,10 @@ object LlmPipeline {
     * its final labels cached by design; the checkpoint lets that round
     * cache be released with the plan).
     */
-  private def clusterLabels(spark: SparkSession, dir: String): DataFrame = {
-    // Resolve the pair table BEFORE entering computeIfAbsent — it memoizes
-    // on its own map, but keep the no-nested-computeIfAbsent discipline.
-    val pairs = confirmedPairs(spark, dir).select("doc_a", "doc_b")
-    graft.Tables.sessionCache(clustersCache, spark).computeIfAbsent((dir, "clusters"), _ => {
+  private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.memo(spark, dir, "clusters") {
       val nodes = t(spark, dir, "documents").select(col("doc_id"))
-      val labels = componentLabels(pairs)
+      val labels = componentLabels(confirmedPairs(spark, dir).select("doc_a", "doc_b"))
       val singletons = nodes.join(
           labels.select("doc_id"), Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("doc_id").as("label"))
@@ -369,8 +349,7 @@ object LlmPipeline {
         .localCheckpoint(true)
       labels.unpersist()
       result
-    })
-  }
+    }
 
   def dedupClusters(spark: SparkSession, dir: String): DataFrame =
     clusterLabels(spark, dir).orderBy("doc_id")
@@ -469,25 +448,25 @@ object LlmPipeline {
     * build.
     */
   private[graft] def ppjDocs(spark: SparkSession, dir: String): DataFrame =
-    graft.Tables.sessionCache(termsCache, spark)
-      .computeIfAbsent((dir, "ppj_docs"), _ =>
-        t(spark, dir, "documents")
-          .select(col("doc_id"), split(col("text"), " ").as("ws"))
-          .select(col("doc_id"), explode(array_distinct(expr(
-            // sequence(1, 0) would count DOWN in Spark — guard the short-doc case.
-            "CASE WHEN size(ws) >= 3 THEN transform(sequence(1, size(ws) - 2), " +
-              "i -> concat_ws(' ', ws[i-1], ws[i], ws[i+1])) ELSE CAST(array() AS array<string>) END")))
-            .as("term"))
-          .transform { sh =>
-            val docFreq = sh.groupBy("term").agg(count(lit(1)).as("df"))
-            sh.join(docFreq, "term")
-              .groupBy("doc_id")
-              .agg(sort_array(collect_list(struct(col("df"), col("term")))).as("ord"))
-              .select(col("doc_id"),
-                transform(col("ord"), o => o.getField("term")).as("toks"),
-                size(col("ord")).cast("long").as("m"))
-          }
-          .persist(StorageLevel.MEMORY_AND_DISK))
+    graft.Tables.memo(spark, dir, "ppj_docs") {
+      t(spark, dir, "documents")
+        .select(col("doc_id"), split(col("text"), " ").as("ws"))
+        .select(col("doc_id"), explode(array_distinct(expr(
+          // sequence(1, 0) would count DOWN in Spark — guard the short-doc case.
+          "CASE WHEN size(ws) >= 3 THEN transform(sequence(1, size(ws) - 2), " +
+            "i -> concat_ws(' ', ws[i-1], ws[i], ws[i+1])) ELSE CAST(array() AS array<string>) END")))
+          .as("term"))
+        .transform { sh =>
+          val docFreq = sh.groupBy("term").agg(count(lit(1)).as("df"))
+          sh.join(docFreq, "term")
+            .groupBy("doc_id")
+            .agg(sort_array(collect_list(struct(col("df"), col("term")))).as("ord"))
+            .select(col("doc_id"),
+              transform(col("ord"), o => o.getField("term")).as("toks"),
+              size(col("ord")).cast("long").as("m"))
+        }
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   def dedupJaccardPrefix(spark: SparkSession, dir: String,
       thresholdMicro: Long = 800000L): DataFrame = {
@@ -1025,13 +1004,13 @@ object LlmPipeline {
     // table is parameter-independent, and an un-memoized per-invocation
     // persist leaked one MEMORY_AND_DISK entry per call (Bench invokes every
     // query twice per sweep).
-    val anchors = graft.Tables.sessionCache(termsCache, spark)
-      .computeIfAbsent((dir, "anchors"), _ =>
-        t(spark, dir, "documents")
-          .select(col("doc_id"),
-            graft.functions.RollingFingerprint.rollingFingerprint(spark, col("text")).as("as"))
-          .filter(size(col("as")) > 0)
-          .persist(StorageLevel.MEMORY_AND_DISK))
+    val anchors = graft.Tables.memo(spark, dir, "anchors") {
+      t(spark, dir, "documents")
+        .select(col("doc_id"),
+          graft.functions.RollingFingerprint.rollingFingerprint(spark, col("text")).as("as"))
+        .filter(size(col("as")) > 0)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
     val counts = anchors.select(col("doc_id"), size(col("as")).as("n"))
     val exploded = anchors.select(col("doc_id"), explode(col("as")).as("anchor"))
     val keep = exploded.groupBy("anchor")
@@ -1206,20 +1185,16 @@ object LlmPipeline {
       dot(spark, col("embedding"), typedlit(c)) / (lit(cn) * col("norm"))
     }: _*)
 
-  private val cellStatsCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), Map[Int, Double]]]())
-
   /** Per-cell maximum member angle to its own centroid — IVF index METADATA
     * (at scale it is computed once at index build, exactly like the
     * centroid matrix; here it memoizes per (session, dir, k, iters) under
-    * the same [[graft.Tables.sessionCache]] immutability contract). One
+    * the same [[graft.Tables.memo]] immutability contract). One
     * k-row driver fetch; the aggregate itself is a single map-side-combined
     * pass over the corpus.
     */
   private[graft] def cellThetaMax(spark: SparkSession, dir: String,
       k: Int, iters: Int): Map[Int, Double] =
-    graft.Tables.sessionCache(cellStatsCache, spark).computeIfAbsent((dir, s"thmax_${k}_$iters"), _ => {
+    graft.Tables.memo(spark, dir, s"thmax_${k}_$iters") {
       val cents = kMeansCentroids(spark, dir, k, iters)
       t(spark, dir, "embeddings")
         .select(col("embedding"), l2(spark, col("embedding")).as("norm"))
@@ -1228,7 +1203,7 @@ object LlmPipeline {
         .groupBy("cell")
         .agg(max(acos(least(lit(1.0), greatest(lit(-1.0), col("cos_center"))))).as("th"))
         .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    })
+    }
 
   /** Cells that can possibly hold a vector within `radius` of the probe:
     * spherical triangle inequality gives angle(q, x) ≥ angle(q, c) −
@@ -1354,10 +1329,6 @@ object LlmPipeline {
       .toDF("rank", "vec_id", "rel_micro", "mmr_micro")
   }
 
-  private val kmeansCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), Seq[Seq[Double]]]]())
-
   /** Coarse IVF centroids by Lloyd's k-means (spherical assignment, mean
     * update). Seeding is deterministic ε-SEPARATED greedy over the 4k
     * lowest-vec_id vectors (one TakeOrdered, stable under any
@@ -1387,13 +1358,13 @@ object LlmPipeline {
     * per iteration, the same contract as the probe-vector fetch. A cell
     * that goes empty keeps its previous centroid. Memoized per (session,
     * dir, k, iters): the index builds once and every query reuses it — the
-    * IVF production shape. The memo obeys [[graft.Tables.sessionCache]]'s
+    * IVF production shape. The memo obeys [[graft.Tables.memo]]'s
     * immutability contract: a mutated embeddings dir serves the OLD index
     * until [[graft.Tables.invalidate]](spark, dir) (or a fresh session).
     */
   private[graft] def kMeansCentroids(spark: SparkSession, dir: String,
       k: Int, iters: Int): Seq[Seq[Double]] =
-    graft.Tables.sessionCache(kmeansCache, spark).computeIfAbsent((dir, s"kmeans_${k}_$iters"), _ => {
+    graft.Tables.memo(spark, dir, s"kmeans_${k}_$iters") {
       val emb = t(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val sample: Seq[Seq[Double]] = emb
         .orderBy("vec_id").limit(4 * k)
@@ -1421,7 +1392,7 @@ object LlmPipeline {
         cents = cents.indices.map(i => updated.getOrElse(i, cents(i)))
       }
       cents
-    })
+    }
 
   /** IVF-style pruned search over real k-means cells: the probe searches
     * only the nProbe nearest centroids' cells. The candidate set shrinks by
@@ -1509,7 +1480,7 @@ object LlmPipeline {
     // The brute-force truth and the four pruned probes are five mutually
     // independent collect() actions (12 serial jobs measured); submit them
     // concurrently (guide §2.6). The memoized centroid build still runs
-    // once — the first probe's computeIfAbsent blocks the other three on
+    // once — the first probe's memo build blocks the other three on
     // the same key — and each probe's result set is position-matched back
     // to its nProbe, so the emitted curve is unchanged.
     val probeNs = Seq(1, 2, 4, 10)
@@ -1526,10 +1497,6 @@ object LlmPipeline {
   }
 
   // ---------------------------------------------------------------- stored IVF index
-
-  // One persisted index per source dir per JVM (the store is a directory on
-  // disk — session-independent by design; the memo only avoids rebuilding).
-  private val ivfStoreCache = new java.util.concurrent.ConcurrentHashMap[String, String]
 
   /** Persist the IVF index to `outDir`: `centroids/` (cell → centroid
     * vector, the k×64 parameter matrix) and `vectors/` — the corpus
@@ -1556,11 +1523,11 @@ object LlmPipeline {
   }
 
   private[graft] def ivfStoreDir(spark: SparkSession, dir: String): String =
-    ivfStoreCache.computeIfAbsent(dir, _ => {
+    graft.Tables.memo(spark, dir, "ivf-store") {
       val out = graft.sources.FileFormats.exitCleanedTempDir("graft-ivfstore")
       saveIvfIndex(spark, dir, out)
       out
-    })
+    }
 
   /** IVF search over the PERSISTED index: centroids load as a k×64
     * parameter fetch, the probe ranks cells driver-side exactly as
@@ -1603,11 +1570,6 @@ object LlmPipeline {
   val PqSubspaces = 8
   val PqCodebookSize = 16
 
-  private val pqCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String),
-        (Seq[Seq[Seq[Double]]], DataFrame)]]())
-
   /** Nearest sub-centroid (L2, on unit-normalized inputs) for subspace `j`
     * of the row's normalized embedding slice, as a pure codegen expression:
     * argmin ‖s−c‖² ≡ argmax (dot(s,c) − ‖c‖²/2), built like [[nearestCell]]
@@ -1634,11 +1596,11 @@ object LlmPipeline {
     * split so subspace dot products sum to the full cosine. Lloyd runs L2
     * with ε-separated deterministic seeding (the [[MinSeedSeparation]]
     * discipline); an empty cell keeps its previous centroid. The memo obeys
-    * [[graft.Tables.sessionCache]]'s immutability contract.
+    * [[graft.Tables.memo]]'s immutability contract.
     */
   private[graft] def pqIndex(spark: SparkSession, dir: String,
       iters: Int = 5): (Seq[Seq[Seq[Double]]], DataFrame) =
-    graft.Tables.sessionCache(pqCache, spark).computeIfAbsent((dir, s"pq_$iters"), _ => {
+    graft.Tables.memo(spark, dir, s"pq_$iters") {
       val dsub = 64 / PqSubspaces
       val sample: Seq[Seq[Double]] = t(spark, dir, "embeddings")
         .orderBy("vec_id").limit(512)
@@ -1678,7 +1640,7 @@ object LlmPipeline {
         .select(col("vec_id"), codesColumn(spark, codebooks).as("codes"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       (codebooks, codes)
-    })
+    }
 
   /** The 8-nibble PQ code array for the current row's `embedding` (requires
     * a sibling `nrm` column) — one [[nearestSubCentroid]] argmin per
@@ -1738,10 +1700,6 @@ object LlmPipeline {
       .limit(5)
   }
 
-  private val ivfpqCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]())
-
   /** The IVF-PQ combined index table (vec_id, cell, codes): coarse k-means
     * cell + 8-nibble PQ code per vector, built in ONE scan of the
     * embeddings and memoized per (session, dir, k, iters). This is the
@@ -1753,12 +1711,12 @@ object LlmPipeline {
     * encode the raw normalized vector (inner-product PQ); encoding the
     * per-cell RESIDUAL instead would tighten quantization error at the
     * cost of k codebook trainings — noted as the upgrade path, not needed
-    * at the pinned recall. Memo obeys [[graft.Tables.sessionCache]]'s
+    * at the pinned recall. Memo obeys [[graft.Tables.memo]]'s
     * immutability contract.
     */
   private[graft] def ivfPqIndex(spark: SparkSession, dir: String,
       k: Int = 10, iters: Int = 2): DataFrame =
-    graft.Tables.sessionCache(ivfpqCache, spark).computeIfAbsent((dir, s"ivfpq_${k}_$iters"), _ => {
+    graft.Tables.memo(spark, dir, s"ivfpq_${k}_$iters") {
       val cents = kMeansCentroids(spark, dir, k, iters)
       val (codebooks, _) = pqIndex(spark, dir)
       t(spark, dir, "embeddings")
@@ -1766,7 +1724,7 @@ object LlmPipeline {
         .select(col("vec_id"), nearestCell(spark, cents).as("cell"),
           codesColumn(spark, codebooks).as("codes"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** IVF-PQ top-k: the two ANN reductions COMPOSED, the way a
     * billion-vector index actually serves — IVF prunes WHICH vectors are
@@ -2329,15 +2287,12 @@ object LlmPipeline {
     * once, every downstream aggregate reads the token column) replaces four
     * repeated explode scans with one.
     */
-  private val termsCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]())
-
   private def docTerms(spark: SparkSession, dir: String): DataFrame =
-    graft.Tables.sessionCache(termsCache, spark).computeIfAbsent((dir, "terms"), _ =>
+    graft.Tables.memo(spark, dir, "terms") {
       t(spark, dir, "documents")
         .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("term"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Per-language top-5 terms by frequency: explode → two-phase count →
     * per-key top-k window. The generator (`explode`) is the engine's UDTF story.

@@ -9,8 +9,10 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
 /** Optimizer rule restoring parquet pushdown for predicates over the
   * µs-normalized nanos timestamp.
   *
-  * `events.ts` is TIMESTAMP(NANOS) parquet, read as a nanos long and
-  * normalized to `timestamp_micros(ts DIV 1000)` ([[graft.Tables.t]]).
+  * A TIMESTAMP(NANOS) parquet column (e.g. a ClickHouse DateTime64(9)
+  * export; the fixtures' `events.ts` is µs and never reaches this rule) is
+  * read as a nanos long and normalized to `timestamp_micros(ts DIV 1000)`
+  * ([[graft.Tables.t]]).
   * A watermark predicate `tsµ >= lit` then sits on a *derived* column, so
   * FileSourceStrategy can only push `IsNotNull` — at 100 TB the incremental
   * extract would scan every row group. This rule rewrites comparisons

@@ -25,14 +25,9 @@ object FileFormats {
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("ts_us"), col("value"))
 
-  // One materialized copy per (source dir, format) per JVM — repeat
-  // invocations (Verify then Bench, determinism tests) re-read instead of
-  // re-writing a fresh temp dir each time.
-  private val rtCache = new java.util.concurrent.ConcurrentHashMap[(String, String), String]
-
-  /** Temp dir whose tree is deleted at JVM exit — the memoized materialized
-    * copies outlive any one SparkSession by design (the caches are per-JVM),
-    * so cleanup belongs to the JVM, not the session.
+  /** Temp dir whose tree is deleted at JVM exit — materialized copies are
+    * memoized per session ([[graft.Tables.memo]]) but their files are plain
+    * local dirs, so cleanup belongs to the JVM, not the session.
     */
   private[graft] def exitCleanedTempDir(prefix: String): String = {
     val path = java.nio.file.Files.createTempDirectory(prefix)
@@ -62,11 +57,14 @@ object FileFormats {
     // fails lookup; the fully-qualified FileFormat class resolves.
     val fmt =
       if (format == "avro") "org.apache.spark.sql.avro.AvroFileFormat" else format
-    val out = rtCache.computeIfAbsent((dir, format), _ => {
+    // One materialized copy per (source dir, format) — repeat invocations
+    // (Verify then Bench, determinism tests) re-read instead of re-writing a
+    // fresh temp dir each time.
+    val out = graft.Tables.memo(spark, dir, s"roundtrip-$format") {
       val path = exitCleanedTempDir(s"graft-$format")
       base.write.mode("overwrite").options(fmtOptions(format)).format(fmt).save(path)
       path
-    })
+    }
     spark.read.schema(base.schema).options(fmtOptions(format)).format(fmt).load(out)
       .orderBy("event_id")
   }
@@ -118,12 +116,12 @@ object FileFormats {
     * escape or length-prefix — noted, not needed for the fixture contract.
     */
   def scanTextRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = rtCache.computeIfAbsent((dir, "text"), _ => {
+    val out = graft.Tables.memo(spark, dir, "roundtrip-text") {
       val path = exitCleanedTempDir("graft-text")
       t(spark, dir, "documents").select(col("text"))
         .write.mode("overwrite").text(path)
       path
-    })
+    }
     spark.read.text(out).select(col("value").as("text")).orderBy("text")
   }
 
@@ -134,10 +132,10 @@ object FileFormats {
     * drift is a certainty, and mergeSchema's footer-only reconciliation
     * (no data rewrite, no backfill job) is the property that makes a
     * multi-year lake readable — the WRITE side never pays anything.
-    * Memoized per (JVM, dir) like the other materialized copies.
+    * Memoized per (session, dir) like the other materialized copies.
     */
   def scanSchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val out = rtCache.computeIfAbsent((dir, "evolve"), _ => {
+    val out = graft.Tables.memo(spark, dir, "roundtrip-evolve") {
       val path = exitCleanedTempDir("graft-evolve")
       val ev = t(spark, dir, "events")
       ev.filter(col("event_id") % 2 === 0)
@@ -147,7 +145,7 @@ object FileFormats {
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .write.mode("append").parquet(path)
       path
-    })
+    }
     spark.read.option("mergeSchema", "true").parquet(out)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .orderBy("event_id")
@@ -170,18 +168,16 @@ object FileFormats {
       .orderBy("o_orderkey")
   }
 
-  /** Write (once per JVM+dir — the cache key is the source dir, and the
-    * written files outlive any single session) orders partitioned by status;
-    * returns path. Cleaned at JVM exit like the round-trip dirs.
+  /** Write (once per session+dir) orders partitioned by status; returns
+    * path. Cleaned at JVM exit like the round-trip dirs.
     */
-  private val partCache = new java.util.concurrent.ConcurrentHashMap[String, String]
   private[graft] def partitionedOrders(spark: SparkSession, dir: String): String =
-    partCache.computeIfAbsent(dir, _ => {
+    graft.Tables.memo(spark, dir, "partitioned-orders") {
       val out = exitCleanedTempDir("graft-part")
       t(spark, dir, "orders")
         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
       out
-    })
+    }
 
   // ---------------------------------------------------------------- z-order layout
 
@@ -201,7 +197,7 @@ object FileFormats {
     }.reduce(_ + _)
 
   /** Materialize the SAME events projection under THREE physical layouts
-    * (once per JVM+dir): `linear` — range-partitioned and sorted by
+    * (once per session+dir): `linear` — range-partitioned and sorted by
     * event_id, the "insert-order" lake layout; `zorder` — sorted by the
     * Morton code of (user_id, value), the OPTIMIZE ZORDER layout; and
     * `hilbert` — sorted by the native Hilbert-curve index over the same
@@ -212,9 +208,8 @@ object FileFormats {
     */
   private[graft] final case class Layouts(linear: String, zorder: String,
       hilbert: String, loU: Long, hiU: Long, loV: Long, hiV: Long)
-  private val zCache = new java.util.concurrent.ConcurrentHashMap[String, Layouts]
   private[graft] def zorderLayouts(spark: SparkSession, dir: String): Layouts =
-    zCache.computeIfAbsent(dir, _ => {
+    graft.Tables.memo(spark, dir, "layouts") {
       val ev = t(spark, dir, "events")
         .select(col("event_id"), col("user_id"),
           floor(col("value") * 100 + 0.5).cast("long").as("value_c"))
@@ -245,7 +240,7 @@ object FileFormats {
       val hilbert = sortedBy(
         graft.functions.HilbertIndex.hilbert(spark, u16, v16, 16), "graft-hilbert")
       Layouts(linear, zorder, hilbert, loU, hiU, loV, hiV)
-    })
+    }
 
   /** File-skipping report for the two layouts under a 2-D predicate box —
     * the middle 20% of each dimension's range (derived from the same 1-row
@@ -306,14 +301,6 @@ object FileFormats {
     layouts.map { case (n, p) => stats(n, p) }.reduce(_ unionAll _).orderBy("layout")
   }
 
-  // Bucketed table names are catalog entries, so the memo is per-SESSION
-  // (a table saved into one session's in-memory catalog is invisible to
-  // another session) — same discipline as the LlmPipeline derived-table
-  // memos, including the Tables.invalidate registration.
-  private val bucketedCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), (String, String)]]())
-
   // JVM-unique suffix: table NAMES live in the shared external catalog and
   // managed LOCATIONS would outlive the JVM (a leftover
   // spark-warehouse/graft_bkt_* dir from a previous run wedges a fresh
@@ -324,7 +311,7 @@ object FileFormats {
     java.lang.Long.toHexString(java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime)
 
   private[graft] def bucketedTables(spark: SparkSession, dir: String): (String, String) =
-    graft.Tables.sessionCache(bucketedCache, spark).computeIfAbsent((dir, "bucketed"), _ => {
+    graft.Tables.memo(spark, dir, "bucketed") {
       val tag = java.lang.Integer.toHexString(dir.hashCode) + "_" + jvmTag
       val (to, tc) = (s"graft_bkt_orders_$tag", s"graft_bkt_customer_$tag")
       // repartition(8, key) uses the SAME HashPartitioning expression
@@ -346,28 +333,10 @@ object FileFormats {
         .bucketBy(8, "c_custkey").sortBy("c_custkey")
         .saveAsTable(tc)
       (to, tc)
-    })
-
-  /** Co-located join over bucketed tables — the shuffle-free big-join
-    * answer at 100 TB. Both sides are written ONCE bucketed by the join key
-    * (8 buckets, same count both sides), so the sort-merge join reads
-    * bucket i of orders against bucket i of customer directly: NO exchange
-    * on either side of the join (plan-pinned in PlanShapeSpec; the MERGE
-    * hint keeps the small fixture side from broadcasting so the bucketed
-    * path is what executes). The only shuffle in the whole query is the
-    * 5-group rollup AFTER the join.
-    *
-    * This is the pattern that amortizes: the bucketing write costs one
-    * shuffle, then every subsequent join on that key — daily loads, N
-    * different queries — pays zero. The streaming MERGE sink and the CDC
-    * apply kernel join against exactly such a bucketed snapshot.
-    */
-  // One materialized asset directory per source dir per JVM (files are
-  // session-independent, so a plain dir-keyed memo is enough).
-  private val binCache = new java.util.concurrent.ConcurrentHashMap[String, String]
+    }
 
   private[graft] def binaryAssetDir(spark: SparkSession, dir: String): String =
-    binCache.computeIfAbsent(dir, _ => {
+    graft.Tables.memo(spark, dir, "binary-assets") {
       val out = exitCleanedTempDir("graft-binassets")
       // Each task writes through the Hadoop FileSystem its path RESOLVES to
       // (executor-side getFileSystem), not java.nio: on a cluster the
@@ -389,7 +358,7 @@ object FileFormats {
           }
         }
       out
-    })
+    }
 
   /** Raw-asset ingestion through the built-in `binaryFile` DataSource — the
     * lake's media-landing read path (image/audio dumps arrive as FILES, not
@@ -415,6 +384,20 @@ object FileFormats {
         sha2(col("content"), 256).as("fingerprint"))
       .orderBy("asset_id")
 
+  /** Co-located join over bucketed tables — the shuffle-free big-join
+    * answer at 100 TB. Both sides are written ONCE bucketed by the join key
+    * (8 buckets, same count both sides), so the sort-merge join reads
+    * bucket i of orders against bucket i of customer directly: NO exchange
+    * on either side of the join (plan-pinned in PlanShapeSpec; the MERGE
+    * hint keeps the small fixture side from broadcasting so the bucketed
+    * path is what executes). The only shuffle in the whole query is the
+    * 5-group rollup AFTER the join.
+    *
+    * This is the pattern that amortizes: the bucketing write costs one
+    * shuffle, then every subsequent join on that key — daily loads, N
+    * different queries — pays zero. The streaming MERGE sink and the CDC
+    * apply kernel join against exactly such a bucketed snapshot.
+    */
   def joinBucketedColocated(spark: SparkSession, dir: String): DataFrame = {
     val (to, tc) = bucketedTables(spark, dir)
     spark.table(to).hint("MERGE")

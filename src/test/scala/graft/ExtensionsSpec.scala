@@ -89,14 +89,14 @@ class ExtensionsSpec extends AnyFunSuite {
         graft.functions.SimHash64.simhash(s, col("text"))).head().getLong(0)
       assert(row.getAs[Long]("sim") == viaHelper)
 
-      // The injected optimizer rule fires: a predicate on the ns→µs derived
-      // ts column reaches the parquet scan as a pushed raw-nanos filter.
+      // A predicate on the normalized ts column reaches the parquet scan as
+      // a pushed filter.
       val pushed = Tables.t(s, sf, "events")
         .filter(col("ts") >=
           org.apache.spark.sql.functions.lit("2024-01-15 00:00:00").cast("timestamp"))
         .queryExecution.executedPlan.toString
       assert(pushed.contains("PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts,"),
-        s"nanos pushdown rule did not fire:\n$pushed")
+        s"ts predicate not pushed to the scan:\n$pushed")
 
       // The injected PLANNER STRATEGY plans the native as-of join while the
       // session's experimental list stays EMPTY — proving the extensions

@@ -1487,6 +1487,41 @@ class OpsSpec extends SparkSpec {
     assert(got == Seq((1L, 2L, 2L, 666666L), (1L, 3L, 1L, 333333L)), s"got $got")
   }
 
+  /** Runs `body` and returns the message chain of the failure it must raise. */
+  private def failureText(body: => Unit): String = {
+    val e = intercept[Throwable](body)
+    Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+  }
+
+  test("graphNeighborJaccard fails loudly on supplier ids that break the 2^31 packed key") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-nj-guard").toString
+    import spark.implicits._
+    Seq((101L, 1L), (101L, 1L << 31)).toDF("l_orderkey", "l_suppkey")
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    Seq((101L, 1L)).toDF("o_orderkey", "o_custkey")
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    val msg = failureText(Graph.graphNeighborJaccard(spark, dir).collect())
+    assert(msg.contains("supplier ids < 2^31"), msg)
+  }
+
+  test("label propagation fails loudly on labels that break the 2^32 packed key") {
+    import spark.implicits._
+    val big = (1L << 32) + 5L
+    val e = Seq((1L, big), (big, 1L)).toDF("src", "dst")
+    val msg = failureText(Graph.labelPropLabelsOf(e, rounds = 1).collect())
+    assert(msg.contains("label-prop packs labels into 32 bits"), msg)
+  }
+
+  test("cdcApply fails loudly on cents that break the 2^40 packed version") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cdc-guard").toString
+    import spark.implicits._
+    // 2e10 dollars = 2e12 cents > 2^40 (about 1.1e12).
+    Seq((1L, 100.25), (2L, 2.0e10)).toDF("o_orderkey", "o_totalprice")
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    val msg = failureText(Analytics.cdcApply(spark, dir).collect())
+    assert(msg.contains("cdc_apply packs cents into 40 bits"), msg)
+  }
+
   test("eventsHoltForecast runs the exact integer recurrence, trends both ways") {
     // up: days [0.10, 0.20, 0.30] → l=(20+10+0)/2=15,t=(15-10)/2=2;
     //     l=(30+15+2)/2=23, t=(23-15+2)/2=5 → forecast 28.

@@ -45,6 +45,46 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/events").count() == 1001)
   }
 
+  test("watermark file: a stray partial temp file from a crashed put leaves the previous watermarks readable") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-wm-crash")
+    val wmPath = dir.resolve("watermarks.properties")
+    val store = new FileWatermarkStore(wmPath)
+    store.put("events", "2024-01-30 12:00:00")
+    store.put("lineitem", "59999")
+    // What a crash between the temp write and the rename leaves behind.
+    java.nio.file.Files.write(dir.resolve("watermarks.properties.12345.tmp"),
+      "events=2024-02-0".getBytes("UTF-8"))
+    val fresh = new FileWatermarkStore(wmPath)
+    assert(fresh.get("events").contains("2024-01-30 12:00:00"))
+    assert(fresh.get("lineitem").contains("59999"))
+    fresh.put("orders", "6000")
+    val after = new FileWatermarkStore(wmPath)
+    assert(Seq("events", "lineitem", "orders").map(after.get) ==
+      Seq(Some("2024-01-30 12:00:00"), Some("59999"), Some("6000")))
+  }
+
+  test("watermark file: two stores on one path putting different tables concurrently keep both") {
+    val wmPath = java.nio.file.Files.createTempDirectory("graft-wm-race").resolve("wm.properties")
+    val stores = Seq(new FileWatermarkStore(wmPath), new FileWatermarkStore(wmPath))
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val futs = stores.zipWithIndex.map { case (st, w) =>
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            start.await()
+            (0 until 50).foreach(i => st.put(s"t${w}_$i", s"$i"))
+          }
+        })
+      }
+      start.countDown()
+      futs.foreach(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdown()
+    val fresh = new FileWatermarkStore(wmPath)
+    for (w <- 0 to 1; i <- 0 until 50)
+      assert(fresh.get(s"t${w}_$i").contains(s"$i"), s"lost t${w}_$i")
+  }
+
   test("live JDBC extraction composes with the indexed dedup sink in one Pipeline.run phase") {
     // The production shape end-to-end: a live SQL source (embedded Derby),
     // the reference's incremental decision tree (inclusive watermark,

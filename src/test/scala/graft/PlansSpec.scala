@@ -17,13 +17,13 @@ class PlansSpec extends SparkSpec {
   test("watermark predicate is pushed to the parquet scan") {
     val df = events.filter(col("ts") >= lit("2024-01-15 00:00:00").cast("timestamp"))
     val scan = df.queryExecution.executedPlan.toString
-    // Two reader regimes, one invariant — the filter must reach the scan:
-    //   - Spark ≥4.1.2 reads parquet TIMESTAMP(NANOS) natively as µs-truncated
-    //     TIMESTAMP_NTZ and pushes the predicate through the normalizing cast
-    //     as an NTZ scan filter (row-group stats apply);
-    //   - older readers surface the column as a raw-nanos long
+    // Two input regimes, one invariant — the filter must reach the scan:
+    //   - the fixtures' µs TIMESTAMP_NTZ column pushes through the
+    //     normalizing cast as an NTZ scan filter (row-group stats apply);
+    //   - a TIMESTAMP(NANOS) column surfaces as a raw-nanos long
     //     (legacy.parquet.nanosAsLong), where [[PushdownNanosTimestamp]]
-    //     rewrites the µs comparison into the equivalent raw-nanos filter.
+    //     rewrites the µs comparison into the equivalent raw-nanos filter
+    //     (pinned on a real nanos file below).
     val ntzPush = scan.contains("GreaterThanOrEqual(ts,2024-01-15T00:00")
     val nanosPush = scan.contains("GreaterThanOrEqual(ts,1705276800000000000")
     assert(ntzPush || nanosPush, s"pushdown missing from plan:\n$scan")
@@ -66,6 +66,72 @@ class PlansSpec extends SparkSpec {
     // scan in the first test), and stays correct for negative ns.
     val oneUs = new Timestamp(0L); oneUs.setNanos(1000)
     assert(df.filter(col("ts") >= lit(oneUs)).count() == 1)
+  }
+
+  test("real TIMESTAMP(NANOS) parquet: Tables.t truncates to µs, pushes raw-nanos filters, extracts incrementally") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    // A ClickHouse DateTime64(9)-style export: nanosecond instants, several
+    // sharing one µs (999 ns apart) so truncation and boundaries both show.
+    val base = 1704067200000000L // 2024-01-01T00:00:00Z in µs
+    val ns: Seq[Long] = (0L until 6L).flatMap(k => Seq(0L, 1L, 999L).map(d => (base + k) * 1000L + d))
+    val dir = java.nio.file.Files.createTempDirectory("graft-nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val groups = new SimpleGroupFactory(schema)
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet/part-00000.parquet"))
+      .withType(schema).build()
+    try ns.zipWithIndex.foreach { case (v, i) =>
+      w.write(groups.newGroup().append("event_id", i.toLong).append("ts", v))
+    } finally w.close()
+
+    // Spark cannot read the file at all without the legacy nanos-as-long conf.
+    val plain = spark.newSession()
+    plain.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val illegal = intercept[Exception](plain.read.parquet(s"$dir/events.parquet").collect())
+    assert(Iterator.iterate(illegal: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("PARQUET_TYPE_ILLEGAL")), illegal)
+
+    // Tables.t: the LongType branch truncates ns → µs TimestampType.
+    val ev = Tables.t(spark, dir, "events")
+    assert(ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    val us = ev.select(col("event_id"), unix_micros(col("ts"))).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(us == ns.zipWithIndex.map { case (v, i) => i.toLong -> v / 1000 }.toMap)
+
+    // The µs predicate reaches the scan as the equivalent raw-nanos filter,
+    // and every comparison keeps µs semantics at the boundary.
+    val b = base + 3
+    val bts = new Timestamp(b / 1000); bts.setNanos(((b % 1000000) * 1000).toInt)
+    val scan = ev.filter(col("ts") > lit(bts)).queryExecution.executedPlan.toString
+    assert(scan.contains(s"GreaterThanOrEqual(ts,${(b + 1) * 1000})"), scan)
+    def check(name: String, pred: Column, keep: Long => Boolean): Unit =
+      assert(ev.filter(pred).count() == ns.count(v => keep(v / 1000)), name)
+    check("geq", col("ts") >= lit(bts), _ >= b)
+    check("gt", col("ts") > lit(bts), _ > b)
+    check("lt", col("ts") < lit(bts), _ < b)
+    check("leq", col("ts") <= lit(bts), _ <= b)
+    check("eq", col("ts") === lit(bts), _ == b)
+
+    // Incremental extract on ts: the watermark is the µs max, and the
+    // inclusive re-read returns exactly the rows in that last µs — all
+    // three ns siblings — through a pushed raw-nanos scan filter.
+    import graft.extract.Extractor
+    import graft.model._
+    val cfg = TableConfig("events", replicationMethod = ReplicationMethod.Incremental,
+      iterateColumn = Some("ts"), iterateColumnType = IterateType.DatetimeCol)
+    val ex = new Extractor(dir, cacheBatches = false)
+    val first = ex.extract(spark, cfg)
+    assert(first.df.get.count() == ns.size)
+    assert(first.lastPoint.contains("2024-01-01 00:00:00.000005"), first.lastPoint)
+    val second = ex.extract(spark, cfg, first.lastPoint)
+    val reread = second.df.get
+    assert(reread.queryExecution.executedPlan.toString
+      .contains(s"GreaterThanOrEqual(ts,${(base + 5) * 1000})"))
+    assert(reread.select("event_id").collect().map(_.getLong(0)).sorted.toSeq ==
+      ns.zipWithIndex.collect { case (v, i) if v / 1000 == base + 5 => i.toLong })
   }
 
   test("levenshtein guard covers reversed and strict spellings, skips non-deterministic args") {
