@@ -62,10 +62,9 @@ object Main {
     for (run <- 1 to runs) {
       val results = pipeline.run(spark, tables, outDir)
       val summary = results.map { case (name, r) =>
-        // Count the WRITTEN sink, not r.df — the pipeline has already
-        // unpersisted the batch, so df.count() would re-execute the whole
-        // extract (on a live JDBC source: a second full source read per
-        // table, purely for a log line).
+        // Count the WRITTEN sink, not r.df — the batch is not cached, so
+        // df.count() would re-execute the whole extract (on a live JDBC
+        // source: another full source read per table, purely for a log line).
         val target = tables.find(_.name == name).map(_.effectiveTargetName).getOrElse(name)
         // No Try-swallow here: if the extract claims it wrote a batch, an
         // unreadable sink (corrupt footer, permissions) is a real failure

@@ -26,9 +26,8 @@ object SparkEntry {
   // ------------------------------------------------------------ extraction
   // These run the real Extractor decision tree (graft.extract.Extractor),
   // then project timestamps to epoch micros + impose a deterministic order
-  // for the oracle compare. cacheBatches=false: Verify/Bench execute each
-  // returned df exactly once and nothing here could unpersist afterwards —
-  // the caching (+ unpersist-after-load) path is Pipeline.run's.
+  // for the oracle compare. The extractor caches nothing, so the returned
+  // df is a plain plan that Verify/Bench execute like any other query.
 
   private def eventsOut(df: DataFrame): DataFrame =
     df.select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
@@ -44,29 +43,29 @@ object SparkEntry {
     iterateColumn = Some("event_id"), iterateColumnType = IterateType.IntCol)
 
   private def extractFull(spark: SparkSession, dir: String): DataFrame =
-    new Extractor(dir, cacheBatches = false).extract(spark, TableConfig("orders")).df.get
+    new Extractor(dir).extract(spark, TableConfig("orders")).df.get
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"), unix_micros(col("o_orderdate")).as("o_orderdate_us"),
         col("o_orderpriority"))
       .orderBy("o_orderkey")
 
   private def extractIncrInitial(spark: SparkSession, dir: String): DataFrame =
-    eventsOut(new Extractor(dir, cacheBatches = false).extract(spark, eventsIncrTs, lastPoint = None).df.get)
+    eventsOut(new Extractor(dir).extract(spark, eventsIncrTs, lastPoint = None).df.get)
 
   private def extractIncrWatermark(spark: SparkSession, dir: String): DataFrame =
-    eventsOut(new Extractor(dir, cacheBatches = false)
+    eventsOut(new Extractor(dir)
       .extract(spark, eventsIncrTs, lastPoint = Some("2024-01-15 00:00:00")).df.get)
 
   private def extractIncrBounds(spark: SparkSession, dir: String): DataFrame =
-    eventsOut(new Extractor(dir, cacheBatches = false).extract(spark,
+    eventsOut(new Extractor(dir).extract(spark,
       eventsIncrId.copy(filterLowerBound = Some("200"), filterUpperBound = Some("700"))).df.get)
 
   private def extractIncrLowerOnly(spark: SparkSession, dir: String): DataFrame =
-    eventsOut(new Extractor(dir, cacheBatches = false).extract(spark,
+    eventsOut(new Extractor(dir).extract(spark,
       eventsIncrId.copy(filterLowerBound = Some("500"))).df.get)
 
   private def watermarkMax(spark: SparkSession, dir: String): DataFrame =
-    new Extractor(dir, cacheBatches = false)
+    new Extractor(dir)
       .extract(spark, eventsIncrTs, lastPoint = Some("2024-01-15 00:00:00")).df.get
       .agg(unix_micros(max(col("ts"))).as("max_val"))
 
@@ -100,7 +99,7 @@ object SparkEntry {
     * aggregate demands of any custom_query (`__init__.py:110-115`).
     */
   private def customQueryClickhouse(spark: SparkSession, dir: String): DataFrame =
-    new Extractor(dir, cacheBatches = false).extract(spark,
+    new Extractor(dir).extract(spark,
       eventsIncrTs.copy(customQuery = Some(
         """SELECT event_id, ts, user_id, toYYYYMM(ts) AS ym,
           |       CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id) AS BIGINT) AS rn
@@ -119,7 +118,7 @@ object SparkEntry {
     * first-two-buckets shape ClickHouse dashboards lean on.
     */
   private def customQueryDashboard(spark: SparkSession, dir: String): DataFrame =
-    new Extractor(dir, cacheBatches = false).extract(spark,
+    new Extractor(dir).extract(spark,
       eventsIncrTs.copy(customQuery = Some(
         """SELECT user_id, toStartOfFifteenMinutes(ts) AS bucket,
           |  toInt64(countIf(event_type = 'purchase')) AS n_buy,
@@ -141,7 +140,7 @@ object SparkEntry {
     * watermark max is then computed on the result as in the reference.
     */
   private def customQueryExtract(spark: SparkSession, dir: String): DataFrame =
-    new Extractor(dir, cacheBatches = false).extract(spark,
+    new Extractor(dir).extract(spark,
       eventsIncrTs.copy(customQuery = Some(
         "SELECT event_id, ts, user_id, event_type, value FROM events {query_filter}")),
       lastPoint = Some("2024-01-10 00:00:00")).df.get

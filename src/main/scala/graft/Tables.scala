@@ -1,14 +1,25 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
 import java.util.concurrent.{ConcurrentHashMap, ExecutionException, FutureTask}
+import scala.util.Try
 
 /** Fixture-table access. Schemas come from Parquet footers — the reference
   * never declares schemas either (mkpipe_extractor_clickhouse/__init__.py:43,
   * `reader.load()` infers from the source).
+  *
+  * A cold read launches no Spark job: [[readParquet]] reads on the driver
+  * the one footer Spark's own inference would read in a job, and hands the
+  * schema to `spark.read`.
   *
   * Timestamp normalization (session TZ is pinned UTC):
   *   - the fixtures' `events.ts` is µs TIMESTAMP_NTZ parquet at every scale
@@ -115,19 +126,53 @@ object Tables {
     // a conf reset between reads cannot leave a warm key without it.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.plans.PushdownNanosTimestamp.install(spark)
-    // DataFrames are immutable plans — memoized so repeated reads skip file
-    // listing + footer schema inference (a fixed ~100ms planning tax per
-    // read otherwise).
-    memo(spark, dir, s"table/$name") {
-      val df = spark.read.parquet(s"$dir/$name.parquet")
-      val cols: Array[Column] = df.schema.fields.map { f =>
-        if (f.dataType == TimestampNTZType)
-          col(f.name).cast("timestamp").as(f.name)
-        else if (f.name == "ts" && f.dataType == LongType)
-          timestamp_micros(expr("ts DIV 1000")).as("ts")
-        else col(f.name)
-      }
-      df.select(cols.toSeq: _*)
+    // DataFrames are immutable plans — memoized so repeated reads skip the
+    // file listing and the footer read.
+    memo(spark, dir, s"table/$name")(normalize(readParquet(spark, s"$dir/$name.parquet")))
+  }
+
+  /** The timestamp normalization in the header, as one projection. */
+  private[graft] def normalize(df: DataFrame): DataFrame =
+    df.select(df.schema.fields.toSeq.map { f =>
+      if (f.dataType == TimestampNTZType) col(f.name).cast("timestamp").as(f.name)
+      else if (f.name == "ts" && f.dataType == LongType) timestamp_micros(expr("ts DIV 1000")).as("ts")
+      else col(f.name)
+    }: _*)
+
+  /** `spark.read.parquet(path)` without its schema-inference job. Spark's
+    * non-merging inference reads one footer — `_common_metadata`, else
+    * `_metadata`, else the first data file by path — in a one-task job
+    * (57–70 ms per cold read). Here that footer is read on the driver and
+    * converted with the flags that job uses, and Spark reads the path with
+    * the result as its schema: the scan, its listing and its checks stay
+    * Spark's. With schema merging on, no file to read (an empty dir, a
+    * missing path) or a footer that will not read, Spark infers as usual
+    * and raises its own errors.
+    */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val conf = state.conf
+    val files = new InMemoryFileIndex(spark, Seq(new Path(path)), Map.empty, None)
+      .allFiles().sortBy(_.getPath.toString)
+    val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
+    val footerFile = summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    val schema: Option[StructType] = footerFile.flatMap { f =>
+      Try {
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, state.newHadoopConf()), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter)
+      }.toOption
+    }
+    schema.filter(_ => !conf.isParquetSchemaMergingEnabled) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None    => spark.read.parquet(path)
     }
   }
 

@@ -3,7 +3,6 @@ package graft.extract
 import graft.model._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** The extraction engine — a Spark-first reimplementation of the reference's
   * `ClickhouseExtractor.extract` decision tree
@@ -12,22 +11,41 @@ import org.apache.spark.storage.StorageLevel
   * Differences from the reference, by design:
   *   - The pushed SQL runs on Catalyst over temp views instead of being shipped
   *     to ClickHouse (__init__.py:40,101): the engine IS the analytic engine.
-  *   - The batch is persisted (MEMORY_AND_DISK) before the existence probe,
-  *     watermark max, and downstream write — the reference executes the pushed
-  *     query up to 3× with no cache (__init__.py:103,112,132-134).
+  *   - An incremental batch runs in two passes, one of them column-pruned,
+  *     with no cache: one `count` + `max(iterate column)` aggregate (reads
+  *     only the iterate and filter columns; count 0 is the empty-batch
+  *     probe) before the load, then the load's write. The reference runs
+  *     the pushed query up to 3× (take(1), agg-max, write;
+  *     __init__.py:103,112,132-134). A source that grows between the two
+  *     passes only makes the load see rows past the watermark, which the
+  *     next run's inclusive predicate re-reads (at-least-once, as there).
   *   - Non-custom-query extraction uses native Column predicates (filter pushed
   *     to the Parquet scan) rather than SQL text; the SQL renderer is kept for
   *     `custom_query` template parity and is property-tested equivalent.
   *
-  * Scale notes (100 TB): the watermark max is a partial+final aggregate (no
-  * data movement beyond one row per partition); the existence probe is a
-  * CollectLimit(1) that short-circuits; `partitionsCount` maps to stride
-  * partitioning on a JDBC source and to `repartitionByRange` here
-  * (README.md:85-93); caching is bounded by executor storage with disk spill.
+  * Measured and rejected:
+  *   - Persisting the batch (MEMORY_AND_DISK) before probe, max and write —
+  *     the engine's earlier design. On `perfbench` replicate (5 tables per
+  *     cycle, 2 incremental) a traced cycle took 18 jobs with it, 5 of them
+  *     the schema jobs of cold [[graft.Tables.t]] reads, and takes 9 with
+  *     neither. The cached path's own share, 13 jobs against 9, is derived
+  *     (18 − 5), not run on its own: the `take(1)` probe scales up over the
+  *     partitions the watermark prunes, and the persisted batch spilled
+  *     under a small storage pool. Both removals together took the cycle
+  *     median from 1414 to 1085 ms (10 alternating pairs, 4-core box).
+  *   - Taking the watermark from `Dataset.observe` on the load's write
+  *     (one pass, cycles 967 ms): the `Observation` is filled through the
+  *     listener bus, so it was set when the write returned in only 5 of 20
+  *     writes, and a downstream `limit` filled it with a partial max
+  *     (124596 against 149999). The watermark would depend on the loader.
+  *
+  * Scale notes (100 TB): the count + max is a partial+final aggregate (one
+  * row per partition moves, over only the columns it reads); `extract` does
+  * not apply `partitionsCount` on Parquet — only [[readPartitioned]] (a
+  * `repartitionByRange`) and JDBC stride reads use it (README.md:85-93).
   */
 final class Extractor(
     sfDir: String,
-    cacheBatches: Boolean = true,
     /** Source strategy: how a table name becomes a DataFrame. Defaults to
       * the Parquet fixtures; a JDBC-backed variant passes
       * `(s, n) => JdbcSource.load(s, conn, TableConfig(n))` and the whole
@@ -105,7 +123,7 @@ final class Extractor(
       lastPoint: Option[String],
       customQuery: Option[String]): ExtractResult = {
     val iterCol = table.iterateColumn.get
-    val df0 = customQuery match {
+    val df = customQuery match {
       case Some(q) =>
         // Template path: SQL-clause parity with the reference (__init__.py:96-97),
         // executed by Catalyst over a temp view instead of by ClickHouse —
@@ -120,22 +138,21 @@ final class Extractor(
         readTable(spark, table.name).filter(pred)
     }
     val (_, mode) = Predicates.incrementalClause(table, lastPoint)
-    val df = if (cacheBatches) df0.persist(StorageLevel.MEMORY_AND_DISK) else df0
 
-    // Existence probe (reference A10, __init__.py:103): CollectLimit(1).
-    if (df.take(1).isEmpty) {
+    // Existence probe + watermark (reference A10/A11, __init__.py:103,110-115)
+    // in ONE column-pruned aggregate: it reads only the iterate and filter
+    // columns, and the load is the batch's second and last pass.
+    val probe = df.agg(count(lit(1)), max(col(iterCol))).head()
+    if (probe.getLong(0) == 0L) {
       // Empty-batch tri-state (reference __init__.py:103-108): overwrite keeps
       // the empty df so the loader truncates; append returns None (no-op).
-      if (cacheBatches) df.unpersist()
       mode match {
-        case SaveMode.Overwrite => ExtractResult(Some(df0), SaveMode.Overwrite, None)
+        case SaveMode.Overwrite => ExtractResult(Some(df), SaveMode.Overwrite, None)
         case _                  => ExtractResult(None, SaveMode.Append, None)
       }
     } else {
-      // Watermark (reference A11, __init__.py:110-115): global max over the
-      // extracted batch, stringified. Partial+final HashAggregate — scales.
-      val maxVal = df.agg(max(col(iterCol)).alias("max_val")).head().get(0)
-      ExtractResult(Some(df), mode, Option(maxVal).map(stringify))
+      // The watermark stringified; an all-null iterate column has no max.
+      ExtractResult(Some(df), mode, Option(probe.get(1)).map(stringify))
     }
   }
 

@@ -127,7 +127,6 @@ final class Pipeline(
           case None    => extractor.load(r, table, outPath)
         }
         r.lastPoint.foreach(watermarks.put(table.name, _))
-        r.df.filter(_.storageLevel.useMemory).foreach(_.unpersist())
         r
       }
       attempt match {

@@ -47,8 +47,7 @@ class JdbcSourceSpec extends SparkSpec {
       // The FULL extract decision tree against the live source: the engine's
       // Column predicates reach the source as pushed filters (the reference
       // hand-builds this WHERE clause, __init__.py:73-99).
-      val ex = new graft.extract.Extractor("-", cacheBatches = false,
-        source = Some((s, n) => JdbcSource.load(s, conn, TableConfig(n))))
+      val ex = new graft.extract.Extractor("-", source = Some((s, n) => JdbcSource.load(s, conn, TableConfig(n))))
       val incr = TableConfig("events_j",
         replicationMethod = ReplicationMethod.Incremental,
         iterateColumn = Some("event_id"), iterateColumnType = IterateType.IntCol)
@@ -71,7 +70,7 @@ class JdbcSourceSpec extends SparkSpec {
       // resolves "derby" exactly the way the reference's entry-point
       // machinery resolves variant='clickhouse' (setup.py:10-14).
       graft.extract.ExtractorRegistry.register("derby",
-        _ => new graft.extract.Extractor("-", cacheBatches = false,
+        _ => new graft.extract.Extractor("-",
           source = Some((s, n) => JdbcSource.load(s, conn, TableConfig(n)))))
       val viaRegistry = graft.extract.ExtractorRegistry("derby")("-")
         .extract(spark, TableConfig("events_j"))

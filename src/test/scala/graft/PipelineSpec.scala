@@ -23,26 +23,57 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("pipeline run persists watermarks and second run appends only the boundary row") {
+    // A fresh landing dir, so the table reads below are cold.
+    val landing = java.nio.file.Files.createTempDirectory("graft-landing")
+    for (t <- Seq("events", "nation"))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/$t.parquet"), landing.resolve(s"$t.parquet"))
+    val dir = landing.toString
     val wmPath = java.nio.file.Files.createTempFile("graft-wm", ".properties")
     val store = new FileWatermarkStore(wmPath)
     val out = java.nio.file.Files.createTempDirectory("graft-pipe").toString
-    val pipe = new Pipeline(new Extractor(sf), store)
+    val sc = spark.sparkContext
+    def jobs[T](body: => T) = org.apache.spark.JobCount(sc)(body)
 
-    val run1 = pipe.run(spark, Seq(incrId), out)
+    // A cold table read builds its plan on the driver: no schema job.
+    for (t <- Seq("events", "nation"))
+      assert(jobs(Tables.t(spark, dir, t))._2 == 0, s"cold read of $t launched a job")
+
+    // Nothing is cached: the loader sees no RDD persisted beyond those
+    // already there. Each incremental table run takes at most 3 jobs (one
+    // count + max aggregate, two under AQE, then the write), a full
+    // refresh 1 (the write).
+    val before = sc.getPersistentRDDs.keySet
+    val persisted = scala.collection.mutable.Set.empty[Int]
+    def pipe = {
+      val ex = new Extractor(dir)
+      new Pipeline(ex, store, Some { (r: ExtractResult, t: TableConfig, o: String) =>
+        persisted ++= sc.getPersistentRDDs.keySet -- before
+        ex.load(r, t, o)
+      })
+    }
+    val (run1, jobs1) = jobs(pipe.run(spark, Seq(incrId), out))
     assert(run1.head._2.isSuccess)
     assert(store.get("events").contains("999")) // max(event_id) at sf0.001
+    assert(jobs1 <= 3, s"incremental run 1 took $jobs1 jobs")
 
     // A fresh pipeline over the same store (new process simulation): the
     // inclusive watermark re-extracts exactly the boundary row, append mode.
-    val run2 = new Pipeline(new Extractor(sf), store).run(spark, Seq(incrId), out)
+    val (run2, jobs2) = jobs(pipe.run(spark, Seq(incrId), out))
     run2.head._2 match {
       case Success(r) =>
         assert(r.writeMode == org.apache.spark.sql.SaveMode.Append)
         assert(r.lastPoint.contains("999"))
       case Failure(e) => fail(e)
     }
+    assert(jobs2 <= 3, s"incremental run 2 took $jobs2 jobs")
     // Target now holds initial 1000 rows + the re-extracted boundary row.
     assert(spark.read.parquet(s"$out/events").count() == 1001)
+
+    val (full, jobsFull) = jobs(pipe.run(spark, Seq(TableConfig("nation")), out))
+    assert(full.head._2.isSuccess)
+    assert(jobsFull <= 1, s"full-refresh run took $jobsFull jobs")
+    assert(spark.read.parquet(s"$out/nation").count() == 25)
+    assert(persisted.isEmpty, s"a batch was persisted: RDDs $persisted")
   }
 
   test("watermark file: a stray partial temp file from a crashed put leaves the previous watermarks readable") {
@@ -106,8 +137,7 @@ class PipelineSpec extends SparkSpec {
       (0 until 5).foreach(i => insert(i.toLong, texts(i)))
 
       val conn = ConnectionConfig(jdbcUrl = Some(url), user = "", password = "")
-      def extractor = new Extractor("-", cacheBatches = false,
-        source = Some((s, n) => JdbcSource.load(s, conn, TableConfig(n))))
+      def extractor = new Extractor("-", source = Some((s, n) => JdbcSource.load(s, conn, TableConfig(n))))
       val wmPath = java.nio.file.Files.createTempFile("graft-wm-cur", ".properties")
       val store = new FileWatermarkStore(wmPath)
       val out = java.nio.file.Files.createTempDirectory("graft-curated").toString
@@ -170,8 +200,7 @@ class PipelineSpec extends SparkSpec {
       insert(1L, "f g h i j")
 
       val conn = ConnectionConfig(jdbcUrl = Some(url), user = "", password = "")
-      def extractor = new Extractor("-", cacheBatches = false,
-        source = Some((s, n) => JdbcSource.load(s, conn, TableConfig(n))))
+      def extractor = new Extractor("-", source = Some((s, n) => JdbcSource.load(s, conn, TableConfig(n))))
       val wmPath = java.nio.file.Files.createTempFile("graft-wm-nov", ".properties")
       val store = new FileWatermarkStore(wmPath)
       val out = java.nio.file.Files.createTempDirectory("graft-novload").toString

@@ -17,16 +17,12 @@ class PlansSpec extends SparkSpec {
   test("watermark predicate is pushed to the parquet scan") {
     val df = events.filter(col("ts") >= lit("2024-01-15 00:00:00").cast("timestamp"))
     val scan = df.queryExecution.executedPlan.toString
-    // Two input regimes, one invariant — the filter must reach the scan:
-    //   - the fixtures' µs TIMESTAMP_NTZ column pushes through the
-    //     normalizing cast as an NTZ scan filter (row-group stats apply);
-    //   - a TIMESTAMP(NANOS) column surfaces as a raw-nanos long
-    //     (legacy.parquet.nanosAsLong), where [[PushdownNanosTimestamp]]
-    //     rewrites the µs comparison into the equivalent raw-nanos filter
-    //     (pinned on a real nanos file below).
-    val ntzPush = scan.contains("GreaterThanOrEqual(ts,2024-01-15T00:00")
-    val nanosPush = scan.contains("GreaterThanOrEqual(ts,1705276800000000000")
-    assert(ntzPush || nanosPush, s"pushdown missing from plan:\n$scan")
+    // The fixtures' `events.ts` is µs TIMESTAMP_NTZ: the filter pushes
+    // through the normalizing cast as an NTZ scan filter (row-group stats
+    // apply). The TIMESTAMP(NANOS) regime's raw-nanos rewrite is pinned on a
+    // real nanos file below.
+    assert(scan.contains("PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts,2024-01-15T00:00)]"),
+      s"NTZ pushdown missing from plan:\n$scan")
   }
 
   test("rewritten comparisons preserve semantics at exact µs boundaries") {
@@ -69,23 +65,8 @@ class PlansSpec extends SparkSpec {
   }
 
   test("real TIMESTAMP(NANOS) parquet: Tables.t truncates to µs, pushes raw-nanos filters, extracts incrementally") {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.schema.MessageTypeParser
-    // A ClickHouse DateTime64(9)-style export: nanosecond instants, several
-    // sharing one µs (999 ns apart) so truncation and boundaries both show.
-    val base = 1704067200000000L // 2024-01-01T00:00:00Z in µs
-    val ns: Seq[Long] = (0L until 6L).flatMap(k => Seq(0L, 1L, 999L).map(d => (base + k) * 1000L + d))
-    val dir = java.nio.file.Files.createTempDirectory("graft-nanos").toString
-    val schema = MessageTypeParser.parseMessageType(
-      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
-    val groups = new SimpleGroupFactory(schema)
-    val w = ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet/part-00000.parquet"))
-      .withType(schema).build()
-    try ns.zipWithIndex.foreach { case (v, i) =>
-      w.write(groups.newGroup().append("event_id", i.toLong).append("ts", v))
-    } finally w.close()
+    import NanosFixture.{base, ns}
+    val dir = NanosFixture.write()
 
     // Spark cannot read the file at all without the legacy nanos-as-long conf.
     val plain = spark.newSession()
@@ -122,7 +103,7 @@ class PlansSpec extends SparkSpec {
     import graft.model._
     val cfg = TableConfig("events", replicationMethod = ReplicationMethod.Incremental,
       iterateColumn = Some("ts"), iterateColumnType = IterateType.DatetimeCol)
-    val ex = new Extractor(dir, cacheBatches = false)
+    val ex = new Extractor(dir)
     val first = ex.extract(spark, cfg)
     assert(first.df.get.count() == ns.size)
     assert(first.lastPoint.contains("2024-01-01 00:00:00.000005"), first.lastPoint)
