@@ -18,13 +18,15 @@ import graft.model.{IterateType, ReplicationMethod, TableConfig}
   * mkpipe_extractor_clickhouse/__init__.py:89).
   *
   * A second phase loads the `documents` table through the INDEXED
-  * incremental-dedup sink ([[graft.streaming.StreamingExtract.incrementalDedupSink]]):
+  * incremental-dedup sink
+  * ([[graft.streaming.StreamingExtract.incrementalDedupSink]], text
+  * modality — the same sink and kernel serve embeddings and media):
   * each run uses a FRESH checkpoint, so the whole table is re-delivered
   * every time — the at-least-once worst case. Run 1 admits every
   * non-duplicate document (in-batch exact/near dedup applies on the first
-  * load too) and writes the sidecar index; later runs drop every re-delivery against
-  * the STORED index (the sink itself is never re-read or re-banded) and
-  * append nothing.
+  * load too) and writes the `<sink>.idx/{sigs,bands,hashes}` sidecar
+  * index; later runs drop every re-delivery against the STORED index (the
+  * sink itself is never re-read or re-banded) and append nothing.
   */
 object Main {
   def main(args: Array[String]): Unit = {

@@ -120,8 +120,8 @@ object LlmPipeline {
 
   /** (doc_id, band, bucket) banding of a (doc_id, sig) signature table —
     * the LSH key stream both the self-pair kernel ([[bucketedPairs]]) and
-    * the cross-table incremental dedup ([[incrementalDedupSurvivors]])
-    * consume.
+    * the text modality of the cross-table incremental dedup
+    * ([[incrementalDedup]], [[Modality.text]]) consume.
     */
   private[graft] def bandedSig(sigs: DataFrame): DataFrame =
     sigs
@@ -808,6 +808,24 @@ object LlmPipeline {
     IndexedSeq.fill(n)(IndexedSeq.fill(64)(rng.nextGaussian()))
   }
 
+  /** Banded SRP sign codes for an embedding column: `numBands` structs of
+    * (band, bucket) where bucket packs `planesPerBand` hyperplane sign bits.
+    * Shared by [[dedupNearEmbedding]] (self-pair LSH) and
+    * [[Modality.embedding]] (cross-table LSH, where the codes are
+    * STORED with each admitted vector so loaded vectors are never
+    * re-projected).
+    */
+  private[graft] def srpBandCodes(spark: SparkSession, emb: Column,
+      numBands: Int = 4, planesPerBand: Int = 8): Column = {
+    val planes = srpPlanes(numBands * planesPerBand)
+    def bandCode(band: Int): Column = (0 until planesPerBand).map { h =>
+      when(dot(spark, emb, typedlit(planes(band * planesPerBand + h))) > 0,
+        lit(1L << h)).otherwise(lit(0L))
+    }.reduce(_ bitwiseOR _)
+    array((0 until numBands).map(b =>
+      struct(lit(b).as("band"), bandCode(b).as("bucket"))): _*)
+  }
+
   /** Embedding-cosine near-dup via BANDED signed-random-projection LSH,
     * mirroring the MinHash band structure: `numBands` bands of
     * `planesPerBand` hyperplane sign bits each; vectors sharing ANY band's
@@ -828,24 +846,6 @@ object LlmPipeline {
     * near-dups (max pairwise cosine ≈ 0.51), so any real threshold would
     * return an empty, undemonstrative result.
     */
-  /** Banded SRP sign codes for an embedding column: `numBands` structs of
-    * (band, bucket) where bucket packs `planesPerBand` hyperplane sign bits.
-    * Shared by [[dedupNearEmbedding]] (self-pair LSH) and
-    * [[incrementalDedupEmbeddings]] (cross-table LSH, where the codes are
-    * STORED with each admitted vector so loaded vectors are never
-    * re-projected).
-    */
-  private[graft] def srpBandCodes(spark: SparkSession, emb: Column,
-      numBands: Int = 4, planesPerBand: Int = 8): Column = {
-    val planes = srpPlanes(numBands * planesPerBand)
-    def bandCode(band: Int): Column = (0 until planesPerBand).map { h =>
-      when(dot(spark, emb, typedlit(planes(band * planesPerBand + h))) > 0,
-        lit(1L << h)).otherwise(lit(0L))
-    }.reduce(_ bitwiseOR _)
-    array((0 until numBands).map(b =>
-      struct(lit(b).as("band"), bandCode(b).as("bucket"))): _*)
-  }
-
   def dedupNearEmbedding(spark: SparkSession, dir: String, threshold: Double = 0.9,
       numBands: Int = 4, planesPerBand: Int = 8): DataFrame = {
     // Precompute each vector's norm once BEFORE the pair join: the per-pair
@@ -1801,70 +1801,123 @@ object LlmPipeline {
       .orderBy("doc_id")
   }
 
-  /** The stored dedup-index tables an incremental sink maintains ALONGSIDE
-    * its data — the state that lets each micro-batch dedup against the
-    * whole loaded history without ever re-reading or re-hashing it:
+  /** The stored dedup index an incremental sink maintains ALONGSIDE its
+    * data — the state that lets each micro-batch dedup against the whole
+    * loaded history without ever re-reading or re-hashing it. One narrow,
+    * append-only table per role; a [[Modality]] keeps the roles it uses
+    * and leaves the others None:
     *
-    *   - `hashes`  (content_hash): one 32-byte row per loaded doc — the
-    *     exact-dup anti-join side;
-    *   - `sigs`    (doc_id, sig): the stored MinHash signatures — the
-    *     near-dup CONFIRM side (joined only for candidate ids);
-    *   - `bands`   (band, bucket, doc_id): the LSH band index — the
-    *     near-dup candidate-generation side, with per-bucket membership
-    *     CAPPED at [[MaxAllPairsBucket]] rows (see [[newBandRows]] for the
-    *     precise guarantee).
+    *   - `hashes`: the exact key (`content_hash` / `payload_hash`), one row
+    *     per admitted row — the exact-dup anti-join side;
+    *   - `confirm`: the id plus the confirm columns (`sig`, or `embedding`
+    *     and `norm`) — the near-dup CONFIRM side, joined only for
+    *     candidate ids;
+    *   - `bands` (band, bucket, doc_id): the LSH band index — the near-dup
+    *     candidate-generation side, per-bucket membership CAPPED at
+    *     [[MaxAllPairsBucket]] rows (see [[capBandRows]] for the precise
+    *     guarantee).
     *
-    * All three are narrow and append-only; the documents themselves never
-    * participate in a dedup plan after they are first admitted. At 100 TB
-    * the index tables would additionally be bucketed/partitioned on their
-    * join keys so a batch prunes to the affected partitions — the table
-    * SHAPE is already that one.
+    * The loaded rows themselves never participate in a dedup plan after
+    * they are first admitted. At 100 TB the tables would additionally be
+    * bucketed/partitioned on their join keys (the band table already is,
+    * on (band, bpfx)) — the table SHAPE is already that one.
     */
-  final case class DedupIndexTables(hashes: DataFrame, sigs: DataFrame, bands: DataFrame)
+  final case class DedupIndex(hashes: Option[DataFrame], confirm: Option[DataFrame],
+      bands: Option[DataFrame])
 
-  /** Derive [[DedupIndexTables]] by re-hashing a raw enriched sink (columns
-    * `doc_id`, `content_hash`, `sig`) — the BOOTSTRAP path, run ONCE when an
-    * indexed sink adopts a pre-existing unindexed sink. Every steady-state
-    * batch must read the stored tables instead (the whole point of the
-    * index: the r4 design re-ran this derivation per micro-batch, O(|sink|)
-    * band rows shuffled per batch — the one scale-killer the round-4 audit
-    * flagged).
+  /** A modality's near-dup step: `bands` maps enriched rows to their
+    * (doc_id, band, bucket) LSH rows, `confirmCols` are the enriched
+    * columns the confirm predicate reads (stored with the id in the
+    * `confirmTable` sidecar), and `isDup` compares them as `<c>_a` (the
+    * batch row) against `<c>_b` (a lower-id batch row or a stored row).
     */
-  def indexFromSink(sink: DataFrame): DedupIndexTables = DedupIndexTables(
-    hashes = sink.select("content_hash"),
-    sigs = sink.select("doc_id", "sig"),
-    bands = newBandRows(sink.select("doc_id", "sig"), None))
+  final case class NearDup(bands: DataFrame => DataFrame, confirmTable: String,
+      confirmCols: Seq[String], isDup: SparkSession => Column)
 
-  /** Band rows to ADD to a stored band table for newly admitted docs,
-    * enforcing the per-bucket cap: a bucket retains at most
-    * [[MaxAllPairsBucket]] member rows (lowest doc_ids at bootstrap,
-    * arrival order across batches), so a batch doc joining any bucket
-    * touches a BOUNDED member set and one degenerate bucket can never go
-    * |batch|×|bucket| quadratic.
-    *
-    * Weaker guarantee than the self-pair star-link, stated precisely: a
-    * batch doc that is a near-dup ONLY of evicted (post-cap) members of a
-    * full bucket — and shares no other band with them — is admitted even
-    * though it is a duplicate, and unlike the in-batch star-link there is
-    * no transitive collapse to recover it. The loss is bounded to buckets
-    * that overflow with mutually NON-duplicate members: every stored doc
-    * was itself checked against the index before admission, so bucket
-    * members are pairwise sub-threshold and an overflowing bucket is a
-    * band-collision pile-up, not a duplicate cluster (a true duplicate
-    * pile never reaches the cap — its members are dropped, not stored).
-    * The recall-preserving alternative — sub-bucket salting, re-banding an
-    * oversized bucket's members under a second hash — multiplies the
-    * batch-side probe fan-out by the salt count; the capped form is the
-    * right default at real dup rates.
-    *
-    * Existing bucket occupancy is counted only for the buckets this batch
-    * touches: the stored table is semi-joined to the (broadcast, tiny)
-    * batch bucket-key set before the count, so the aggregate shuffles
-    * matched rows, not the whole index.
+  /** One content modality of the incremental dedup kernel
+    * ([[incrementalDedup]]): the id column, the per-row enrich step (run
+    * once per batch, `localCheckpoint`ed when `checkpoint`), an optional
+    * exact key, an optional near-dup step, and the sidecar tables in the
+    * order a sink appends them after its data — the LAST one is the
+    * adoption/read gate, so its presence implies a complete index.
     */
-  def newBandRows(newSigs: DataFrame, storedBands: Option[DataFrame],
-      touched: Option[Seq[Long]] = None): DataFrame =
-    capBandRows(bandedSig(newSigs), storedBands, touched)
+  final case class Modality(idCol: String, enrich: (SparkSession, DataFrame) => DataFrame,
+      checkpoint: Boolean, exactKey: Option[String], near: Option[NearDup],
+      appendOrder: Seq[String]) {
+
+    /** The table of `idx` stored in the sidecar `name` of [[appendOrder]]. */
+    def sidecar(idx: DedupIndex, name: String): DataFrame = (name match {
+      case "hashes" => idx.hashes
+      case "bands" => idx.bands
+      case _ => idx.confirm
+    }).get
+  }
+
+  object Modality {
+
+    /** Documents (doc_id, text): exact dedup on sha2(text), near dedup by
+      * MinHash LSH bands confirmed at estimated Jaccard ≥ `threshold`.
+      * Sidecars `sigs` → `bands` → `hashes`. Hashes-first would be the one
+      * corrupting order: a replayed row already in the hash table is
+      * dropped by the exact anti-join BEFORE the sig/band appends re-run,
+      * so those docs' sigs and band rows would stay permanently missing
+      * and future near-dups of them silently admitted.
+      */
+    def text(threshold: Double = 0.5): Modality = Modality("doc_id",
+      (spark, b) => b
+        .withColumn("content_hash", sha2(col("text"), 256))
+        .withColumn("sig",
+          graft.functions.MinHashSignature.minhash(spark, col("text"), NumHashes, ShingleLen)),
+      checkpoint = true, exactKey = Some("content_hash"),
+      near = Some(NearDup(bandedSig, "sigs", Seq("sig"),
+        _ => estJaccard(col("sig_a"), col("sig_b")) >= threshold)),
+      appendOrder = Seq("sigs", "bands", "hashes"))
+
+    /** Vectors (vec_id, embedding): no exact step — re-deliveries and
+      * copies are the cosine-1.0 case of the near step (zero vectors via
+      * [[cosineDup]]'s equality branch) — and near dedup by banded SRP
+      * codes ([[srpBandCodes]], stored with each admitted vector so loaded
+      * vectors are never re-projected) confirmed by exact cosine ≥
+      * `threshold` with precomputed norms. Sidecars `bands` → `vecs`.
+      */
+    def embedding(threshold: Double = 0.99): Modality = Modality("vec_id",
+      (spark, b) => b
+        .withColumn("norm", l2(spark, col("embedding")))
+        .withColumn("codes", srpBandCodes(spark, col("embedding"))),
+      checkpoint = true, exactKey = None,
+      near = Some(NearDup(embBands, "vecs", Seq("embedding", "norm"),
+        spark => cosineDup(spark, threshold))),
+      appendOrder = Seq("bands", "vecs"))
+
+    /** Media assets (asset_id, payload): exact payload-content dedup on the
+      * [[graft.ops.Multimodal]] `sha2(payload)` key only — the stored side
+      * is hashes, and batch payloads never join against stored bytes.
+      * Near-dup media (re-encodes, crops) is the embedding modality's job:
+      * decode features to vectors first. The sha2 is not checkpointed: the
+      * enriched batch has one consumer. Sidecar `hashes`.
+      */
+    val media: Modality = Modality("asset_id",
+      (_, b) => b.withColumn("payload_hash", sha2(col("payload"), 256)),
+      checkpoint = false, exactKey = Some("payload_hash"), near = None,
+      appendOrder = Seq("hashes"))
+  }
+
+  /** The index rows that enriched, admitted `rows` contribute under `m`:
+    * their exact keys, their confirm columns, and their band rows capped
+    * against the `stored` band table ([[capBandRows]]; `cells` is the
+    * touched-cell set the dedup step already collected). Run over a whole
+    * pre-existing unindexed sink (no stored index) it is the one-time
+    * BOOTSTRAP; run over a batch's survivors it is that batch's appends.
+    * Every steady-state batch reads the stored tables instead of
+    * re-deriving them (the r4 design re-derived the index from the sink
+    * per micro-batch, O(|sink|) band rows shuffled per batch — the one
+    * scale-killer the round-4 audit flagged).
+    */
+  def indexRows(rows: DataFrame, m: Modality, stored: Option[DedupIndex] = None,
+      cells: Option[Seq[Long]] = None): DedupIndex = DedupIndex(
+    hashes = m.exactKey.map(k => rows.select(k)),
+    confirm = m.near.map(n => rows.select((m.idCol +: n.confirmCols).map(col): _*)),
+    bands = m.near.map(n => capBandRows(n.bands(rows), stored.flatMap(_.bands), cells)))
 
   /** Number of `bpfx` sub-partitions a STORED band table is written with
     * (`bpfx = pmod(bucket, BandPartitions)`): partitioning by `band` alone
@@ -1887,8 +1940,8 @@ object LlmPipeline {
     * materialized (checkpointed), so the collect is a cheap scan, not a
     * recomputation; and a batch that both prunes candidates AND caps
     * appends must collect ONCE and pass the cells to both steps
-    * ([[incrementalDedupSurvivorsIndexedCells]] → [[newBandRows]]) rather
-    * than launching two near-identical driver jobs per micro-batch.
+    * ([[incrementalDedup]] → [[indexRows]]) rather than launching two
+    * near-identical driver jobs per micro-batch.
     */
   private[graft] def touchedCells(probeBands: DataFrame): Seq[Long] =
     probeBands
@@ -1898,7 +1951,10 @@ object LlmPipeline {
   /** Prune a stored band table to a pre-collected touched-cell set,
     * applied as a STATIC predicate on partition columns only, so the scan
     * prunes deterministically (visible as PartitionFilters in the physical
-    * plan) instead of betting on dynamic partition pruning.
+    * plan) instead of betting on dynamic partition pruning. The stored
+    * table carries `bpfx` only when it was written partitioned (see
+    * [[graft.streaming.StreamingExtract]]'s band writes); an unpartitioned
+    * table passes through untouched.
     *
     * Degenerate-batch short-circuit: a big enough batch touches EVERY
     * bpfx cell of every band it bands into — and since every signature
@@ -1923,27 +1979,38 @@ object LlmPipeline {
           .select("band", "bucket", "doc_id")
     }
 
-  /** Prune a stored band table to the (band, bpfx) grid cells a probe's
-    * band rows touch. The stored table carries `bpfx` only when it was
-    * written partitioned (see
-    * [[graft.streaming.StreamingExtract]]'s band writes); an unpartitioned
-    * table passes through untouched (and the probe is then never scanned
-    * for cells at all).
-    */
-  private[graft] def pruneBandsToTouched(stored: DataFrame, probeBands: DataFrame): DataFrame =
-    if (!stored.columns.contains("bpfx")) stored
-    else pruneBandsToCells(stored, touchedCells(probeBands))
-
-  /** Shared cap-enforcing core of [[newBandRows]] (MinHash sigs) and
-    * [[newEmbBandRows]] (SRP codes): `nb` is the batch's (band, bucket,
-    * doc_id) band rows; the stored table, when present, contributes only
-    * the occupancy of touched buckets (partition-pruned via
-    * [[pruneBandsToCells]], then semi-joined to the broadcast touched
-    * key set). `touchedGrid`, when provided, is a pre-collected cell set
-    * covering `nb`'s band rows (a superset is fine — the semi-join on
-    * exact (band, bucket) keys makes over-pruning impossible): the sink
-    * passes the cells its dedup step already collected, so one driver
-    * fetch serves both steps.
+  /** Band rows to ADD to a stored band table for newly admitted rows,
+    * enforcing the per-bucket cap: a bucket retains at most
+    * [[MaxAllPairsBucket]] member rows (lowest ids at bootstrap, arrival
+    * order across batches), so a batch row joining any bucket touches a
+    * BOUNDED member set and one degenerate bucket can never go
+    * |batch|×|bucket| quadratic. `nb` is the new (band, bucket, doc_id)
+    * rows — MinHash bands or SRP codes alike.
+    *
+    * Weaker guarantee than the self-pair star-link, stated precisely: a
+    * batch row that is a near-dup ONLY of evicted (post-cap) members of a
+    * full bucket — and shares no other band with them — is admitted even
+    * though it is a duplicate, and unlike the in-batch star-link there is
+    * no transitive collapse to recover it. The loss is bounded to buckets
+    * that overflow with mutually NON-duplicate members: every stored row
+    * was itself checked against the index before admission, so bucket
+    * members are pairwise sub-threshold and an overflowing bucket is a
+    * band-collision pile-up, not a duplicate cluster (a true duplicate
+    * pile never reaches the cap — its members are dropped, not stored).
+    * The recall-preserving alternative — sub-bucket salting, re-banding an
+    * oversized bucket's members under a second hash — multiplies the
+    * batch-side probe fan-out by the salt count; the capped form is the
+    * right default at real dup rates.
+    *
+    * Existing bucket occupancy is counted only for the buckets this batch
+    * touches: the stored table is partition-pruned via
+    * [[pruneBandsToCells]], then semi-joined to the (broadcast, tiny)
+    * batch bucket-key set before the count, so the aggregate shuffles
+    * matched rows, not the whole index. `touchedGrid`, when provided, is a
+    * pre-collected cell set covering `nb`'s band rows (a superset is fine
+    * — the semi-join on exact (band, bucket) keys makes over-pruning
+    * impossible): the sink passes the cells its dedup step already
+    * collected, so one driver fetch serves both steps.
     */
   private[graft] def capBandRows(nb: DataFrame, storedBands: Option[DataFrame],
       touchedGrid: Option[Seq[Long]] = None): DataFrame = {
@@ -1966,197 +2033,12 @@ object LlmPipeline {
       .select("band", "bucket", "doc_id")
   }
 
-  /** INCREMENTAL dedup of one extract round against an already-loaded sink,
-    * represented by its stored [[DedupIndexTables]] — the production
-    * composition of the extractor's at-least-once delivery with the dedup
-    * families. Each batch drops (1) exact re-deliveries and copies
-    * (anti-join on sha2(text) vs the stored hash table), (2) near-dup
-    * variants of loaded docs (LSH banding of the batch signatures joined
-    * against the stored band index, then signature confirm against the
-    * stored sigs — candidates only), and (3) exact/near dups WITHIN the
-    * batch itself. Survivors come back enriched (`content_hash`, `sig`),
-    * ready to append to both the sink and the index.
-    *
-    * Scale shape: the batch side is one extract round (small by
-    * construction); the stored side contributes (a) a narrow hash column
-    * for one anti-join, (b) a pre-capped band table whose join fan-out is
-    * bounded at [[MaxAllPairsBucket]] per bucket, and (c) signatures
-    * fetched for candidate ids only. NOTHING is re-derived from the loaded
-    * documents — no re-banding, no re-hashing, no sink scan.
-    *
-    * The enriched batch (sha2 + MinHash per doc) feeds every downstream
-    * consumer — in-batch banding, two confirm joins, the final anti-joins,
-    * and the caller's sink/index appends — so it is eagerly
-    * `localCheckpoint`ed: the most expensive per-doc kernel runs ONCE per
-    * batch, with none of the cross-batch cache-leak a persist would create
-    * over a long-running stream.
-    */
-  def incrementalDedupSurvivorsIndexed(spark: SparkSession, batch: DataFrame,
-      index: Option[DedupIndexTables], threshold: Double = 0.5): DataFrame =
-    incrementalDedupSurvivorsIndexedCells(spark, batch, index, threshold)._1
-
-  /** [[incrementalDedupSurvivorsIndexed]] that ALSO returns the touched
-    * (band, bpfx) grid-cell set its stored-band pruning collected (None
-    * when the index is absent or its band table unpartitioned — no collect
-    * happens at all). The cells cover the ENRICHED batch's band rows — a
-    * superset of the survivors' — so a sink can feed them straight into
-    * [[newBandRows]] and pay ONE driver-side cell fetch per micro-batch
-    * instead of two near-identical jobs (candidate pruning + append-cap
-    * occupancy pruning).
-    */
-  def incrementalDedupSurvivorsIndexedCells(spark: SparkSession, batch: DataFrame,
-      index: Option[DedupIndexTables], threshold: Double = 0.5)
-      : (DataFrame, Option[Seq[Long]]) = {
-    val enriched = batch
-      .withColumn("content_hash", sha2(col("text"), 256))
-      .withColumn("sig",
-        graft.functions.MinHashSignature.minhash(spark, col("text"), NumHashes, ShingleLen))
-      .localCheckpoint(true)
-    // (3a) within-batch exact: keep the min doc_id per content hash.
-    val wExact = Window.partitionBy("content_hash").orderBy("doc_id")
-    val batchExact = enriched
-      .withColumn("__rn", row_number().over(wExact))
-      .filter(col("__rn") === 1).drop("__rn")
-    // (1) exact vs stored hashes.
-    val afterExact = index.fold(batchExact)(i =>
-      batchExact.join(i.hashes, Seq("content_hash"), "left_anti"))
-    // (3b) within-batch near-dup: LSH + signature confirm; the higher doc_id
-    // of each confirmed pair loses (transitively collapses via star-links).
-    val bSigs = afterExact.select(col("doc_id"), col("sig"))
-    val selfLosers = lshCandidatePairs(bSigs)
-      .join(bSigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
-      .join(bSigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
-      .filter(estJaccard(col("sig_a"), col("sig_b")) >= threshold)
-      .select(col("doc_b").as("doc_id")).distinct()
-    val afterSelf = afterExact.join(selfLosers, Seq("doc_id"), "left_anti")
-    // (2) near-dup vs the stored band index: candidates from the pre-capped
-    // band table — partition-pruned to the grid cells the batch touches
-    // when the stored table is partitioned (the enriched batch is
-    // checkpointed, so the touched-cell fetch is a cheap bounded scan) —
-    // with signatures re-attached for candidate ids only.
-    index match {
-      case Some(i) =>
-        val cells =
-          if (i.bands.columns.contains("bpfx"))
-            Some(touchedCells(bandedSig(enriched.select("doc_id", "sig"))))
-          else None
-        val newBands = bandedSig(afterSelf.select("doc_id", "sig"))
-          .withColumnRenamed("doc_id", "new_id")
-        val storedBands = cells.fold(i.bands)(cs => pruneBandsToCells(i.bands, cs))
-        val cands = newBands
-          .join(storedBands.withColumnRenamed("doc_id", "old_id"), Seq("band", "bucket"))
-          .select("new_id", "old_id").distinct()
-        val sinkLosers = cands
-          .join(afterSelf.select(col("doc_id").as("new_id"), col("sig").as("sig_n")), "new_id")
-          .join(i.sigs.select(col("doc_id").as("old_id"), col("sig").as("sig_o")), "old_id")
-          .filter(estJaccard(col("sig_n"), col("sig_o")) >= threshold)
-          .select(col("new_id").as("doc_id")).distinct()
-        (afterSelf.join(sinkLosers, Seq("doc_id"), "left_anti"), cells)
-      case None => (afterSelf, None)
-    }
-  }
-
-  /** [[incrementalDedupSurvivorsIndexed]] against a raw enriched sink
-    * DataFrame: derives the index tables in-plan via [[indexFromSink]].
-    * This is the bootstrap/ad-hoc form — a standing sink must store the
-    * index and pass it directly (see
-    * [[graft.streaming.StreamingExtract.incrementalDedupSink]]).
-    */
-  def incrementalDedupSurvivors(spark: SparkSession, batch: DataFrame,
-      sink: Option[DataFrame], threshold: Double = 0.5): DataFrame =
-    incrementalDedupSurvivorsIndexed(spark, batch, sink.map(indexFromSink), threshold)
-
-  /** The incremental-dedup composition as a driver-runnable BATCH query:
-    * the even-doc_id half of the corpus plays an already-loaded enriched
-    * sink, the odd half plays one at-least-once extract round, and the
-    * output is the round's surviving doc_ids — each odd doc admitted only
-    * if it is no exact/near dup of a stored doc nor of a lower-id batch
-    * doc. One query exercises both halves of the production shape:
-    * [[indexFromSink]] (bootstrap derivation) feeding
-    * [[incrementalDedupSurvivorsIndexed]] (the steady-state kernel the
-    * indexed streaming sink runs per micro-batch).
-    */
-  def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    // Deliberately NOT repartitioned (r16, measured and rejected): spreading
-    // the sha2+MinHash kernel 32-way inflated summed task CPU 1.6 → 18.5 s
-    // (concurrent interpreted evaluations thrash far below linear scaling on
-    // KB-sized partitions) with no wall gain, and at scale it would pay a
-    // full-corpus text exchange — the checkpoint below already runs the
-    // kernel once.
-    val docs = t(spark, dir, "documents")
-    // The prior half's signatures feed the band index AND the confirm join
-    // — two plan occurrences, each recomputing the MinHash pass without
-    // this checkpoint (the same run-once rationale as the kernel's own
-    // enriched-batch checkpoint).
-    val prior = docs.filter(col("doc_id") % 2 === 0)
-      .select(col("doc_id"), col("text"))
-      .withColumn("content_hash", sha2(col("text"), 256))
-      .withColumn("sig",
-        graft.functions.MinHashSignature.minhash(spark, col("text"), NumHashes, ShingleLen))
-      .localCheckpoint(true)
-    val batch = docs.filter(col("doc_id") % 2 === 1).select(col("doc_id"), col("text"))
-    incrementalDedupSurvivors(spark, batch, Some(prior))
-      .select("doc_id").orderBy("doc_id")
-  }
-
-  /** Incremental dedup for the EMBEDDING modality — the text sink's shape
-    * with banded SRP codes in place of MinHash signatures: each batch of
-    * (vec_id, embedding) drops vectors whose cosine to an already-loaded
-    * vector (or a lower-id batch vector) reaches `threshold`; exact
-    * re-deliveries and copies are the cosine-1.0 special case, so one
-    * mechanism covers both. Candidates come from banded SRP collisions
-    * ([[srpBandCodes]] — the sink stores each admitted vector's `codes` and
-    * `norm`, so loaded vectors are never re-projected against the
-    * hyperplanes), confirmed by exact cosine with precomputed norms.
-    * Survivors come back enriched (`norm`, `codes`), ready to append.
-    *
-    * Scale shape: candidate generation is (band, bucket)-keyed equi-joins;
-    * the in-batch side rides the capped [[bucketedPairs]] kernel. The
-    * cross-table side reads stored codes in-row; at 100 TB those codes
-    * graduate to a capped sidecar band index exactly like the text path's
-    * [[DedupIndexTables]] — same keys, same appends.
-    */
-  /** Stored index tables for an EMBEDDING incremental-dedup sink — the
-    * [[DedupIndexTables]] layout for the vector modality:
-    *
-    *   - `vecs`  (vec_id, embedding, norm): the exact-cosine CONFIRM side,
-    *     joined only for candidate ids (never scanned whole for candidate
-    *     generation);
-    *   - `bands` (band, bucket, doc_id): the banded-SRP candidate index,
-    *     per-bucket membership CAPPED at [[MaxAllPairsBucket]] exactly like
-    *     the MinHash band table ([[newEmbBandRows]]).
-    *
-    * Both append-only; the sink parquet (which also carries the wide
-    * `codes` column) is never consulted after a vector is admitted.
-    */
-  final case class EmbIndexTables(vecs: DataFrame, bands: DataFrame)
-
-  /** Derive [[EmbIndexTables]] from a raw enriched embedding sink (columns
-    * `vec_id`, `embedding`, `norm`, `codes`) — the one-time BOOTSTRAP when
-    * an indexed sink adopts a pre-existing unindexed sink. Steady-state
-    * batches must read the stored tables instead.
-    */
-  def embIndexFromSink(sink: DataFrame): EmbIndexTables = EmbIndexTables(
-    vecs = sink.select("vec_id", "embedding", "norm"),
-    bands = newEmbBandRows(sink.select("vec_id", "codes"), None))
-
   /** (band, bucket, doc_id) band rows of a (vec_id, codes) table — the SRP
     * counterpart of [[bandedSig]].
     */
   private[graft] def embBands(codes: DataFrame): DataFrame =
     codes.select(col("vec_id").as("doc_id"), explode(col("codes")).as("bc"))
       .select(col("doc_id"), col("bc.band").as("band"), col("bc.bucket").as("bucket"))
-
-  /** Band rows to ADD to a stored SRP band table for newly admitted
-    * vectors, enforcing the same per-bucket cap (and the same
-    * weaker-guarantee analysis) as the MinHash [[newBandRows]]: an
-    * overflowing SRP bucket is a pile of pairwise-NON-duplicate vectors
-    * (true duplicates are dropped before they are stored), so capping it
-    * bounds the probe fan-out without losing duplicate recall in practice.
-    */
-  def newEmbBandRows(newCodes: DataFrame, storedBands: Option[DataFrame],
-      touched: Option[Seq[Long]] = None): DataFrame =
-    capBandRows(embBands(newCodes), storedBands, touched)
 
   /** Exact-cosine duplicate confirm with the ZERO-NORM case made explicit:
     * `dot/(norm_a*norm_b)` is NaN for a zero vector (0/0), which would
@@ -2166,117 +2048,122 @@ object LlmPipeline {
     */
   private def cosineDup(spark: SparkSession, threshold: Double): Column =
     when(col("norm_a") === 0.0 || col("norm_b") === 0.0,
-      col("emb_a") === col("emb_b"))
-      .otherwise(
-        dot(spark, col("emb_a"), col("emb_b")) / (col("norm_a") * col("norm_b")) >= threshold)
+      col("embedding_a") === col("embedding_b"))
+      .otherwise(dot(spark, col("embedding_a"), col("embedding_b")) /
+        (col("norm_a") * col("norm_b")) >= threshold)
 
-  /** Incremental dedup for the EMBEDDING modality against its stored
-    * [[EmbIndexTables]] — the text path's
-    * [[incrementalDedupSurvivorsIndexed]] with banded SRP codes in place of
-    * MinHash signatures: each batch of (vec_id, embedding) drops vectors
-    * whose cosine to an already-loaded vector (or a lower-id batch vector)
-    * reaches `threshold`; exact re-deliveries and copies are the cosine-1.0
-    * special case (zero vectors via [[cosineDup]]'s equality branch), so
-    * one mechanism covers both. Survivors come back enriched
-    * (`norm`, `codes`), ready to append to the sink and the index.
+  /** INCREMENTAL dedup of one extract round against an already-loaded
+    * sink, represented by its stored [[DedupIndex]] — the production
+    * composition of the extractor's at-least-once delivery with the dedup
+    * families, one kernel for every [[Modality]]. Per batch:
     *
-    * Scale shape: candidate generation is (band, bucket)-keyed equi-joins —
-    * the in-batch side rides the capped [[bucketedPairs]] kernel, the
-    * cross-table side joins the PRE-CAPPED stored band table
-    * (partition-pruned to touched grid cells when partitioned) — and the
-    * stored embeddings are fetched for candidate ids only. Nothing is
-    * re-derived from loaded vectors: no re-projection, no sink scan.
+    *   1. enrich each row once (`localCheckpoint`ed when the modality
+    *      asks): the most expensive per-row kernel (sha2 + MinHash, SRP
+    *      projection) feeds every downstream consumer — in-batch banding,
+    *      two confirm joins, the final anti-joins and the caller's sink and
+    *      index appends — with none of the cross-batch cache leak a persist
+    *      would create over a long-running stream;
+    *   2. exact: keep the min id per exact key within the batch, then
+    *      anti-join the stored hashes (re-deliveries and copies);
+    *   3. near, within the batch: [[bucketedPairs]] over the post-exact
+    *      band rows, confirmed by the modality's predicate — the higher
+    *      id of each confirmed pair loses (transitively collapsing via the
+    *      star-links);
+    *   4. the touched (band, bpfx) grid cells of the ENRICHED batch's band
+    *      rows, collected once when the stored band table is partitioned
+    *      (a superset of the survivors' cells, so the caller's
+    *      [[indexRows]] append cap reuses them — one driver fetch per
+    *      batch, not two);
+    *   5. near, against the store: candidates from the cell-pruned,
+    *      pre-capped stored band table, confirmed against the stored
+    *      confirm table (fetched for candidate ids only), losers anti-joined.
+    *
+    * Returns the survivors, still enriched (ready to append to the sink and
+    * the index), and the step-4 cells (None when no collect happened).
+    *
+    * Scale shape: the batch side is one extract round (small by
+    * construction); the stored side contributes a narrow hash column for
+    * one anti-join, a band table whose join fan-out is bounded at
+    * [[MaxAllPairsBucket]] per bucket, and confirm columns for candidate
+    * ids only. NOTHING is re-derived from the loaded rows — no re-banding,
+    * no re-hashing, no re-projection, no sink scan: one stored index,
+    * reused across successive batches whatever the similarity measure (the
+    * shape of "Incremental Based Framework for Efficient Top-K Similarity
+    * Search in Interactive Data Analysis Sessions", EDBT 2020).
     */
-  def incrementalDedupEmbeddingsIndexed(spark: SparkSession, batch: DataFrame,
-      index: Option[EmbIndexTables], threshold: Double = 0.99): DataFrame =
-    incrementalDedupEmbeddingsIndexedCells(spark, batch, index, threshold)._1
-
-  /** [[incrementalDedupEmbeddingsIndexed]] that also returns the touched
-    * grid-cell set of the enriched batch's SRP band rows — the embedding
-    * sibling of [[incrementalDedupSurvivorsIndexedCells]], feeding
-    * [[newEmbBandRows]] so each micro-batch pays one cell fetch, not two.
-    */
-  def incrementalDedupEmbeddingsIndexedCells(spark: SparkSession, batch: DataFrame,
-      index: Option[EmbIndexTables], threshold: Double = 0.99)
-      : (DataFrame, Option[Seq[Long]]) = {
-    val enriched = batch
-      .withColumn("norm", l2(spark, col("embedding")))
-      .withColumn("codes", srpBandCodes(spark, col("embedding")))
-      .localCheckpoint(true)
-    val isDup = cosineDup(spark, threshold)
-    // Within-batch: banded self-pairs, exact-cosine confirm, higher id loses.
-    val banded = embBands(enriched.select(col("vec_id"), col("codes")))
-    val ea = enriched.select(col("vec_id").as("doc_a"), col("embedding").as("emb_a"),
-      col("norm").as("norm_a"))
-    val eb = enriched.select(col("vec_id").as("doc_b"), col("embedding").as("emb_b"),
-      col("norm").as("norm_b"))
-    val selfLosers = bucketedPairs(banded).join(ea, "doc_a").join(eb, "doc_b")
-      .filter(isDup)
-      .select(col("doc_b").as("vec_id")).distinct()
-    val afterSelf = enriched.join(selfLosers, Seq("vec_id"), "left_anti")
-    index match {
-      case Some(i) =>
-        val cells =
-          if (i.bands.columns.contains("bpfx")) Some(touchedCells(banded))
-          else None
-        val newB = embBands(afterSelf.select(col("vec_id"), col("codes")))
-          .withColumnRenamed("doc_id", "new_id")
-        val storedB = cells.fold(i.bands)(cs => pruneBandsToCells(i.bands, cs))
-        val cands = newB.join(storedB.withColumnRenamed("doc_id", "old_id"),
-          Seq("band", "bucket")).select("new_id", "old_id").distinct()
-        val losers = cands
-          .join(afterSelf.select(col("vec_id").as("new_id"),
-            col("embedding").as("emb_a"), col("norm").as("norm_a")), "new_id")
-          .join(i.vecs.select(col("vec_id").as("old_id"),
-            col("embedding").as("emb_b"), col("norm").as("norm_b")), "old_id")
+  def incrementalDedup(spark: SparkSession, batch: DataFrame, m: Modality,
+      index: Option[DedupIndex]): (DataFrame, Option[Seq[Long]]) = {
+    val id = m.idCol
+    val enriched0 = m.enrich(spark, batch)
+    val enriched = if (m.checkpoint) enriched0.localCheckpoint(true) else enriched0
+    val afterExact = m.exactKey.fold(enriched) { k =>
+      val batchExact = enriched
+        .withColumn("__rn", row_number().over(Window.partitionBy(k).orderBy(id)))
+        .filter(col("__rn") === 1).drop("__rn")
+      index.flatMap(_.hashes).fold(batchExact)(h =>
+        batchExact.join(h.select(k), Seq(k), "left_anti"))
+    }
+    m.near match {
+      case None => (afterExact, None)
+      case Some(n) =>
+        def side(df: DataFrame, as: String, sfx: String): DataFrame =
+          df.select(col(id).as(as) +: n.confirmCols.map(c => col(c).as(s"${c}_$sfx")): _*)
+        val isDup = n.isDup(spark)
+        val selfLosers = bucketedPairs(n.bands(afterExact))
+          .join(side(afterExact, "doc_a", "a"), "doc_a")
+          .join(side(afterExact, "doc_b", "b"), "doc_b")
           .filter(isDup)
-          .select(col("new_id").as("vec_id")).distinct()
-        (afterSelf.join(losers, Seq("vec_id"), "left_anti"), cells)
-      case None => (afterSelf, None)
+          .select(col("doc_b").as(id)).distinct()
+        val afterSelf = afterExact.join(selfLosers, Seq(id), "left_anti")
+        index.flatMap(i => i.bands.zip(i.confirm)) match {
+          case Some((bands, confirm)) =>
+            val cells =
+              if (bands.columns.contains("bpfx")) Some(touchedCells(n.bands(enriched)))
+              else None
+            val cands = n.bands(afterSelf).withColumnRenamed("doc_id", "new_id")
+              .join(cells.fold(bands)(pruneBandsToCells(bands, _))
+                .withColumnRenamed("doc_id", "old_id"), Seq("band", "bucket"))
+              .select("new_id", "old_id").distinct()
+            val storeLosers = cands
+              .join(side(afterSelf, "new_id", "a"), "new_id")
+              .join(side(confirm, "old_id", "b"), "old_id")
+              .filter(isDup)
+              .select(col("new_id").as(id)).distinct()
+            (afterSelf.join(storeLosers, Seq(id), "left_anti"), cells)
+          case None => (afterSelf, None)
+        }
     }
   }
 
-  /** [[incrementalDedupEmbeddingsIndexed]] against a raw enriched sink
-    * DataFrame: derives the index tables in-plan via [[embIndexFromSink]].
-    * Bootstrap/ad-hoc form — a standing sink must store the index and pass
-    * it directly (see
-    * [[graft.streaming.StreamingExtract.incrementalDedupEmbeddingSink]]).
+  /** The incremental-dedup composition as a driver-runnable BATCH query:
+    * the even-doc_id half of the corpus plays an already-loaded enriched
+    * sink, the odd half plays one at-least-once extract round, and the
+    * output is the round's surviving doc_ids — each odd doc admitted only
+    * if it is no exact/near dup of a stored doc nor of a lower-id batch
+    * doc. One query exercises both halves of the production shape:
+    * [[indexRows]] (bootstrap derivation) feeding [[incrementalDedup]]
+    * (the steady-state kernel the indexed streaming sink runs per
+    * micro-batch).
     */
-  def incrementalDedupEmbeddings(spark: SparkSession, batch: DataFrame,
-      sink: Option[DataFrame], threshold: Double = 0.99): DataFrame =
-    incrementalDedupEmbeddingsIndexed(spark, batch, sink.map(embIndexFromSink), threshold)
-
-  /** Incremental dedup for the MEDIA modality: exact payload-content dedup
-    * (the [[graft.ops.Multimodal]] `sha2(payload)` key) against a sink that
-    * stores each admitted asset's `payload_hash` — a re-delivered boundary
-    * asset, a byte-identical copy under a new id, and in-batch copies all
-    * drop on one 32-byte hash anti-join. The stored side contributes ONLY
-    * hashes; batch payloads shuffle once within the (small) extract round
-    * for the in-batch min-id pick, and never join against stored bytes.
-    * Near-dup media (re-encodes, crops) is the embedding path's job —
-    * decode features to vectors, then [[incrementalDedupEmbeddings]].
-    */
-  def incrementalDedupMedia(spark: SparkSession, batch: DataFrame,
-      sink: Option[DataFrame]): DataFrame =
-    incrementalDedupMediaIndexed(spark, batch, sink.map(_.select("payload_hash")))
-
-  /** [[incrementalDedupMedia]] against a stored HASH table instead of the
-    * sink itself: the stored side is the sidecar `<sink>.idx/hashes` the
-    * streaming sink maintains, so the asset sink — whose dominant column is
-    * the payload bytes — is never opened by a dedup plan at all (a
-    * column-pruned scan of the sink would still read its footers and
-    * row-group metadata per batch; the narrow sidecar doesn't grow files
-    * with the payloads).
-    */
-  def incrementalDedupMediaIndexed(spark: SparkSession, batch: DataFrame,
-      storedHashes: Option[DataFrame]): DataFrame = {
-    val enriched = batch.withColumn("payload_hash", sha2(col("payload"), 256))
-    val w = Window.partitionBy("payload_hash").orderBy("asset_id")
-    val batchExact = enriched
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    storedHashes.fold(batchExact)(h =>
-      batchExact.join(h.select("payload_hash"), Seq("payload_hash"), "left_anti"))
+  def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
+    // Deliberately NOT repartitioned (r16, measured and rejected): spreading
+    // the sha2+MinHash kernel 32-way inflated summed task CPU 1.6 → 18.5 s
+    // (concurrent interpreted evaluations thrash far below linear scaling on
+    // KB-sized partitions) with no wall gain, and at scale it would pay a
+    // full-corpus text exchange — the checkpoint below already runs the
+    // kernel once.
+    val docs = t(spark, dir, "documents")
+    val text = Modality.text()
+    // The prior half's signatures feed the band index AND the confirm join
+    // — two plan occurrences, each recomputing the MinHash pass without
+    // this checkpoint (the same run-once rationale as the kernel's own
+    // enriched-batch checkpoint).
+    val prior = text.enrich(spark, docs.filter(col("doc_id") % 2 === 0)
+      .select(col("doc_id"), col("text")))
+      .localCheckpoint(true)
+    val batch = docs.filter(col("doc_id") % 2 === 1).select(col("doc_id"), col("text"))
+    incrementalDedup(spark, batch, text, Some(indexRows(prior, text)))._1
+      .select("doc_id").orderBy("doc_id")
   }
 
   // ---------------------------------------------------------------- text analysis

@@ -5,6 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, Trigger, TTLConfig, ValueState}
 import org.apache.spark.sql.types.StructType
 
+import graft.ops.LlmPipeline
+import graft.ops.LlmPipeline.Modality
+
 /** The reference's incremental mode, as true Structured Streaming.
   *
   * The batch extractor (graft.extract.Extractor) re-implements the
@@ -90,9 +93,11 @@ object StreamingExtract {
     }
   }
 
-  /** Index sidecar layout for an indexed dedup sink at `sinkDir`. */
-  private[graft] def indexDirs(sinkDir: String): (String, String, String) =
-    (s"$sinkDir.idx/hashes", s"$sinkDir.idx/sigs", s"$sinkDir.idx/bands")
+  /** Where an indexed dedup sink at `sinkDir` keeps its `name` sidecar
+    * table (`hashes`, `sigs`, `vecs`, `bands`).
+    */
+  private[graft] def sidecarDir(sinkDir: String, name: String): String =
+    s"$sinkDir.idx/$name"
 
   private def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
       src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
@@ -231,14 +236,14 @@ object StreamingExtract {
     * (band, bpfx) grid — `bpfx = pmod(bucket, BandPartitions)` — so a
     * steady-state batch's candidate join and occupancy count prune the
     * stored scan to the grid cells the batch touches
-    * ([[graft.ops.LlmPipeline.pruneBandsToTouched]]) instead of reading
+    * ([[graft.ops.LlmPipeline.pruneBandsToCells]]) instead of reading
     * the whole table: the index grows with the corpus, the touched-cell
     * set stays bounded at NumBands×BandPartitions.
     */
   private def writeBands(bands: DataFrame, dir: String, overwrite: Boolean): Unit =
     bands
       .withColumn("bpfx",
-        pmod(col("bucket").cast("long"), lit(graft.ops.LlmPipeline.BandPartitions.toLong)))
+        pmod(col("bucket").cast("long"), lit(LlmPipeline.BandPartitions.toLong)))
       .write.mode(if (overwrite) "overwrite" else "append")
       .partitionBy("band", "bpfx")
       .parquet(dir)
@@ -276,63 +281,104 @@ object StreamingExtract {
     }
   }
 
-  /** Read an indexed sink's stored [[graft.ops.LlmPipeline.DedupIndexTables]],
-    * or None if the index has not been written yet. Brings a legacy flat
-    * band table forward to the partitioned layout first
+  /** Read an indexed sink's stored [[LlmPipeline.DedupIndex]] for modality
+    * `m`, or None if the index has not been written yet. Gates on the
+    * LAST sidecar of `m`'s append order — adoption and every batch commit
+    * it last, so its presence implies a complete index. Brings a legacy
+    * flat band table forward to the partitioned layout first
     * ([[ensurePartitionedBands]]) so a following append can never create a
     * mixed flat/partitioned directory.
     */
-  private[graft] def readIndex(spark: SparkSession, sinkDir: String)
-      : Option[graft.ops.LlmPipeline.DedupIndexTables] = {
-    val (hashesDir, sigsDir, bandsDir) = indexDirs(sinkDir)
-    if (hasData(spark, hashesDir)) {
-      ensurePartitionedBands(spark, bandsDir)
-      Some(graft.ops.LlmPipeline.DedupIndexTables(
-        hashes = spark.read.parquet(hashesDir),
-        sigs = spark.read.parquet(sigsDir),
-        bands = spark.read.parquet(bandsDir)))
+  private[graft] def readIndex(spark: SparkSession, sinkDir: String, m: Modality)
+      : Option[LlmPipeline.DedupIndex] = {
+    def read(name: String): DataFrame = spark.read.parquet(sidecarDir(sinkDir, name))
+    if (hasData(spark, sidecarDir(sinkDir, m.appendOrder.last))) {
+      if (m.near.nonEmpty) ensurePartitionedBands(spark, sidecarDir(sinkDir, "bands"))
+      Some(LlmPipeline.DedupIndex(
+        hashes = m.exactKey.map(_ => read("hashes")),
+        confirm = m.near.map(n => read(n.confirmTable)),
+        bands = m.near.map(_ => read("bands"))))
     } else None
   }
 
+  /** Write `idx`'s tables to the sidecars of the sink at `sinkDir`, one
+    * commit per table in `m`'s append order; band rows go through
+    * [[writeBands]]'s (band, bpfx) partitioning.
+    */
+  private def writeIndex(sinkDir: String, m: Modality, idx: LlmPipeline.DedupIndex,
+      overwrite: Boolean): Unit =
+    m.appendOrder.foreach { name =>
+      val dir = sidecarDir(sinkDir, name)
+      if (name == "bands") writeBands(m.sidecar(idx, name), dir, overwrite)
+      else m.sidecar(idx, name).write.mode(if (overwrite) "overwrite" else "append").parquet(dir)
+    }
+
   /** Incremental-dedup append sink: [[dedupAppendSink]]'s key anti-join
-    * upgraded to full content dedup — each micro-batch of documents drops
-    * exact re-deliveries/copies AND near-dup variants of already-loaded
-    * docs via [[graft.ops.LlmPipeline.incrementalDedupSurvivorsIndexed]],
-    * against a STORED index maintained in sidecar dirs next to the sink
-    * (`<sink>.idx/{hashes,sigs,bands}`). Steady state per batch: read the
-    * three narrow index tables, dedup, append survivors to the sink, append
-    * the survivors' hashes/sigs/band rows to the index. The loaded
-    * documents are NEVER re-read and never re-hashed — the r4 design
-    * re-read the sink and re-banded every stored signature per micro-batch,
-    * O(|sink|·bands) shuffled per batch, which defeats incrementality at
-    * 100 TB. The sink parquet itself is now write-only from this job;
-    * readers own it.
+    * upgraded to full content dedup for one [[Modality]] — documents
+    * (exact re-deliveries and copies, near-dup variants by MinHash LSH),
+    * embeddings (cosine near-dups by banded SRP codes) or media assets
+    * (byte-identical payloads) — against a STORED index maintained in
+    * sidecar dirs next to the sink (`<sink>.idx/<table>`), one
+    * [[dedupLoadBatch]] per micro-batch. The loaded rows are NEVER re-read,
+    * re-hashed or re-projected — the r4 design re-read the sink and
+    * re-banded every stored signature per micro-batch, O(|sink|·bands)
+    * shuffled per batch, which defeats incrementality at 100 TB. The sink
+    * parquet itself is write-only from this job; readers own it.
+    */
+  def incrementalDedupSink(
+      stream: DataFrame,
+      sinkDir: String,
+      checkpointDir: String,
+      modality: Modality = Modality.text(),
+      compactAfterFiles: Int = 64): StreamingQuery =
+    stream.writeStream
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+        dedupLoadBatch(batch.sparkSession, batch.toDF(), sinkDir, modality, compactAfterFiles)
+      }
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+
+  /** One curated-load round against the indexed sink at `sinkDir`: heal,
+    * adopt-if-unindexed, dedup the batch ([[LlmPipeline.incrementalDedup]]),
+    * append survivors + index rows, compact — the foreachBatch body of
+    * [[incrementalDedupSink]], exposed directly so BATCH pipelines (a
+    * [[graft.extract.Pipeline]] loader driving scheduled extract rounds)
+    * and standing streams share ONE load path with identical dedup,
+    * crash-ordering, and compaction semantics.
     *
-    * Bootstrap: adopting a pre-existing UNINDEXED sink (with `content_hash`
-    * + `sig` columns) derives and stores the index once; thereafter the
-    * sink is not consulted. A brand-new sink starts with an empty index.
+    * Bootstrap: adopting a pre-existing UNINDEXED sink (one that carries
+    * the modality's enriched columns) derives and stores the index once
+    * ([[LlmPipeline.indexRows]] — the ONLY time the sink is read here), in
+    * the same append order with the gate table LAST, so a crash
+    * mid-adoption leaves the gate closed and the next batch simply re-runs
+    * the (overwrite-mode) adoption — gate-present always implies a
+    * complete index. The reverse order could wedge the sink: gate present,
+    * other tables missing, every subsequent batch failing on the absent
+    * dirs. A brand-new sink starts with an empty index.
     *
     * Survivors and the new band rows are eagerly localCheckpoint'ed before
-    * any write: the dedup kernel runs once per batch even though four
+    * any write: the dedup kernel runs once per batch even though several
     * directories are appended, and no append's write plan reads a
     * directory the same job appends to.
     *
-    * Failure atomicity, stated honestly: plain parquet cannot commit four
-    * directories atomically. Appends run sink → sigs → bands → HASHES
-    * LAST. Hashes-first would be the one corrupting order: a replayed row
-    * already in the hash table is dropped by the exact anti-join BEFORE the
-    * sig/band appends re-run, so those docs' sigs and band rows would stay
-    * permanently missing and future near-dups of them silently admitted.
-    * With hashes last, every crash window is benign: (a) crash before the
-    * sig/band appends — the replayed row has no hash and no band rows, so
-    * it is re-admitted whole (duplicate sink/index rows, healed by any
+    * Failure atomicity, stated honestly: plain parquet cannot commit
+    * several directories atomically. Appends run sink first, then the
+    * sidecars in the modality's append order — text: sigs → bands →
+    * hashes; embedding: bands → vecs; media: hashes — and every crash
+    * window is benign (spec-pinned per cut point). Text: (a) crash before
+    * the sig/band appends — the replayed row has no hash and no band rows,
+    * so it is re-admitted whole (duplicate sink/index rows, healed by any
     * downstream exact-dedup pass; duplicate index rows only add redundant
     * candidates); (b) crash after bands but before hashes — the replayed
     * row IS dropped, by the band+sig confirm (identical signatures give
     * estJaccard 1.0), so nothing duplicates, and although its hash row is
     * never written, any future exact copy still dies on that same band+sig
-    * path. Nothing is ever silently admitted; a fully replayed batch (all
-    * appends committed) is a no-op. At 100 TB the four appends become one
+    * path. Embedding and media: any crash window before the last append
+    * re-admits the replayed rows (duplicate leakage, healed downstream) —
+    * never a silent future miss, since a fully indexed row confirms every
+    * later copy. Nothing is ever silently admitted; a fully replayed batch
+    * (all appends committed) is a no-op. At 100 TB the appends become one
     * transaction in a table format (Delta/Iceberg/Hudi MERGE), same batch
     * logic.
     *
@@ -344,79 +390,34 @@ object StreamingExtract {
     * listing-dominated small-file swamp. Pass `compactAfterFiles = 0` to
     * disable.
     */
-  def incrementalDedupSink(
-      stream: DataFrame,
-      sinkDir: String,
-      checkpointDir: String,
-      threshold: Double = 0.5,
-      compactAfterFiles: Int = 64): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        dedupLoadBatch(batch.sparkSession, batch.toDF(), sinkDir, threshold, compactAfterFiles)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** One curated-load round against the indexed sink at `sinkDir`: heal,
-    * adopt-if-unindexed, dedup the batch, append survivors + index rows,
-    * compact — the foreachBatch body of [[incrementalDedupSink]], exposed
-    * directly so BATCH pipelines (a [[graft.extract.Pipeline]] loader
-    * driving scheduled extract rounds) and standing streams share ONE load
-    * path with identical dedup, crash-ordering, and compaction semantics.
-    */
   def dedupLoadBatch(
       spark: SparkSession,
       batch: DataFrame,
       sinkDir: String,
-      threshold: Double = 0.5,
+      modality: Modality = Modality.text(),
       compactAfterFiles: Int = 64): Unit = {
-    val (hashesDir, sigsDir, bandsDir) = indexDirs(sinkDir)
+    val m = modality
     // Heal any compaction swap that crashed mid-rename BEFORE the
     // adoption gate or any read touches the dirs (the bands dir heals
     // inside readIndex).
-    healStagedSwap(spark, hashesDir)
-    healStagedSwap(spark, sigsDir)
-    if (hasData(spark, sinkDir) && !hasData(spark, hashesDir)) {
-      // One-time adoption of an unindexed sink: derive the stored index
-      // from the sink's enriched columns (the ONLY time the sink is read
-      // here) and persist it.
-      // Adoption commits sigs and bands FIRST and hashes LAST: readIndex
-      // gates on hashesDir, so a crash mid-adoption leaves the gate
-      // closed and the next batch simply re-runs the (overwrite-mode)
-      // adoption — hashes-present always implies a complete index. The
-      // reverse order could wedge the sink: hashes present, sigs/bands
-      // missing, every subsequent batch failing on the absent dirs.
-      val idx = graft.ops.LlmPipeline.indexFromSink(spark.read.parquet(sinkDir))
-      idx.sigs.write.mode("overwrite").parquet(sigsDir)
-      writeBands(idx.bands, bandsDir, overwrite = true)
-      idx.hashes.write.mode("overwrite").parquet(hashesDir)
-    }
-    val index = readIndex(spark, sinkDir)
+    m.appendOrder.filter(_ != "bands").foreach(n => healStagedSwap(spark, sidecarDir(sinkDir, n)))
+    if (hasData(spark, sinkDir) && !hasData(spark, sidecarDir(sinkDir, m.appendOrder.last)))
+      writeIndex(sinkDir, m, LlmPipeline.indexRows(spark.read.parquet(sinkDir), m),
+        overwrite = true)
+    val index = readIndex(spark, sinkDir, m)
     // The dedup kernel's touched-cell fetch is reused for the append
     // cap's occupancy pruning: one bounded driver job per batch.
-    val (survivors0, cells) = graft.ops.LlmPipeline
-      .incrementalDedupSurvivorsIndexedCells(spark, batch, index, threshold)
+    val (survivors0, cells) = LlmPipeline.incrementalDedup(spark, batch, m, index)
     val survivors = survivors0.localCheckpoint(true)
-    val bandRows = graft.ops.LlmPipeline
-      .newBandRows(survivors.select("doc_id", "sig"), index.map(_.bands), cells)
-      .localCheckpoint(true)
-    // Append order sink → sigs → bands → hashes (hashes LAST): see the
-    // failure-atomicity scaladoc above.
+    val added = LlmPipeline.indexRows(survivors, m, index, cells)
+    val rows = added.copy(bands = added.bands.map(_.localCheckpoint(true)))
     survivors.write.mode("append").parquet(sinkDir)
-    survivors.select("doc_id", "sig").write.mode("append").parquet(sigsDir)
-    writeBands(bandRows, bandsDir, overwrite = false)
-    survivors.select("content_hash").write.mode("append").parquet(hashesDir)
-    // Bound sidecar small-file growth: each append leaves a commit's
-    // worth of files per dir; once a dir exceeds the threshold it is
-    // rewritten in place (crash-safe staged swap, content unchanged —
-    // replay semantics unaffected). Runs AFTER the hashes append, so a
+    writeIndex(sinkDir, m, rows, overwrite = false)
+    // Bound sidecar small-file growth. Runs AFTER the last append, so a
     // crash during compaction leaves a fully committed batch.
-    if (compactAfterFiles > 0) {
-      compactSidecar(spark, hashesDir, compactAfterFiles, partitioned = false)
-      compactSidecar(spark, sigsDir, compactAfterFiles, partitioned = false)
-      compactSidecar(spark, bandsDir, compactAfterFiles, partitioned = true)
-    }
+    if (compactAfterFiles > 0)
+      m.appendOrder.foreach(n => compactSidecar(spark, sidecarDir(sinkDir, n),
+        compactAfterFiles, partitioned = n == "bands"))
   }
 
   /** A [[graft.extract.Pipeline]] loader that routes every extracted batch
@@ -434,131 +435,8 @@ object StreamingExtract {
     (r, table, outPath) =>
       r.df.foreach { df =>
         dedupLoadBatch(df.sparkSession, df,
-          s"$outPath/${table.effectiveTargetName}", threshold, compactAfterFiles)
+          s"$outPath/${table.effectiveTargetName}", Modality.text(threshold), compactAfterFiles)
       }
-
-  /** Index sidecar layout for an indexed EMBEDDING dedup sink. */
-  private[graft] def embIndexDirs(sinkDir: String): (String, String) =
-    (s"$sinkDir.idx/vecs", s"$sinkDir.idx/bands")
-
-  /** Read an embedding sink's stored
-    * [[graft.ops.LlmPipeline.EmbIndexTables]], or None if the index has not
-    * been written yet. Gates on the vecs dir — the table adoption and the
-    * per-batch appends both commit LAST, so its presence implies a complete
-    * index.
-    */
-  private[graft] def readEmbIndex(spark: SparkSession, sinkDir: String)
-      : Option[graft.ops.LlmPipeline.EmbIndexTables] = {
-    val (vecsDir, bandsDir) = embIndexDirs(sinkDir)
-    if (hasData(spark, vecsDir)) {
-      // Same legacy-layout guard as the text index: an emb bands table
-      // written flat by older code must come forward before any append.
-      ensurePartitionedBands(spark, bandsDir)
-      Some(graft.ops.LlmPipeline.EmbIndexTables(
-        vecs = spark.read.parquet(vecsDir),
-        bands = spark.read.parquet(bandsDir)))
-    } else None
-  }
-
-  /** [[incrementalDedupSink]]'s EMBEDDING-modality sibling, on the SAME
-    * capped sidecar-index layout: each micro-batch of (vec_id, embedding)
-    * drops vectors at cosine ≥ `threshold` to an already-loaded or lower-id
-    * batch vector, via
-    * [[graft.ops.LlmPipeline.incrementalDedupEmbeddingsIndexed]] against
-    * `<sink>.idx/{vecs,bands}` — a narrow (vec_id, embedding, norm) confirm
-    * table joined for candidate ids only, and a per-bucket-CAPPED,
-    * (band, bpfx)-partitioned SRP band table for candidate generation. The
-    * sink parquet itself is write-only from this job: loaded vectors are
-    * never re-read, never re-projected, and a degenerate stored bucket can
-    * never join unboundedly (the cap is enforced at append time by
-    * [[graft.ops.LlmPipeline.newEmbBandRows]]).
-    *
-    * Bootstrap adopts a pre-existing unindexed sink (columns `vec_id`,
-    * `embedding`, `norm`, `codes`) by deriving and storing the index once —
-    * bands first, vecs (the [[readEmbIndex]] gate) last, so a crash
-    * mid-adoption just re-runs it. Per-batch appends run sink → bands →
-    * vecs: any crash window re-admits the replayed rows (duplicate leakage,
-    * healed downstream) — never a silent future miss, since a fully
-    * indexed vector confirms every later copy at cosine 1.0.
-    */
-  def incrementalDedupEmbeddingSink(
-      stream: DataFrame,
-      sinkDir: String,
-      checkpointDir: String,
-      threshold: Double = 0.99,
-      compactAfterFiles: Int = 64): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val (vecsDir, bandsDir) = embIndexDirs(sinkDir)
-        healStagedSwap(spark, vecsDir) // before the adoption gate reads it
-        if (hasData(spark, sinkDir) && !hasData(spark, vecsDir)) {
-          val idx = graft.ops.LlmPipeline.embIndexFromSink(spark.read.parquet(sinkDir))
-          writeBands(idx.bands, bandsDir, overwrite = true)
-          idx.vecs.write.mode("overwrite").parquet(vecsDir)
-        }
-        val index = readEmbIndex(spark, sinkDir)
-        val (survivors0, cells) = graft.ops.LlmPipeline
-          .incrementalDedupEmbeddingsIndexedCells(spark, batch.toDF(), index, threshold)
-        val survivors = survivors0.localCheckpoint(true)
-        val bandRows = graft.ops.LlmPipeline
-          .newEmbBandRows(survivors.select("vec_id", "codes"), index.map(_.bands), cells)
-          .localCheckpoint(true)
-        survivors.write.mode("append").parquet(sinkDir)
-        writeBands(bandRows, bandsDir, overwrite = false)
-        survivors.select("vec_id", "embedding", "norm").write.mode("append").parquet(vecsDir)
-        if (compactAfterFiles > 0) {
-          compactSidecar(spark, vecsDir, compactAfterFiles, partitioned = false)
-          compactSidecar(spark, bandsDir, compactAfterFiles, partitioned = true)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Index sidecar layout for an indexed MEDIA dedup sink. */
-  private[graft] def mediaIndexDir(sinkDir: String): String = s"$sinkDir.idx/hashes"
-
-  /** [[incrementalDedupSink]]'s MEDIA-modality sibling: exact payload
-    * dedup via [[graft.ops.LlmPipeline.incrementalDedupMediaIndexed]]
-    * against a `<sink>.idx/hashes` sidecar — the asset sink (whose files
-    * are dominated by the payload bytes) is never opened by a dedup plan,
-    * not even column-pruned: each batch anti-joins the narrow stored hash
-    * table and appends its survivors' hashes back. Bootstrap adopts a
-    * pre-existing unindexed sink (with a `payload_hash` column) by copying
-    * the hash column out once. Appends run sink first, hashes last: a
-    * crash between them re-admits the replayed assets (byte-identical
-    * duplicates, healed downstream) rather than indexing hashes for assets
-    * the sink never received.
-    */
-  def incrementalDedupMediaSink(
-      stream: DataFrame,
-      sinkDir: String,
-      checkpointDir: String,
-      compactAfterFiles: Int = 64): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val hashesDir = mediaIndexDir(sinkDir)
-        healStagedSwap(spark, hashesDir) // before the adoption gate reads it
-        if (hasData(spark, sinkDir) && !hasData(spark, hashesDir))
-          spark.read.parquet(sinkDir).select("payload_hash")
-            .write.mode("overwrite").parquet(hashesDir)
-        val stored =
-          if (hasData(spark, hashesDir)) Some(spark.read.parquet(hashesDir)) else None
-        val survivors = graft.ops.LlmPipeline
-          .incrementalDedupMediaIndexed(spark, batch.toDF(), stored)
-          .localCheckpoint(true)
-        survivors.write.mode("append").parquet(sinkDir)
-        survivors.select("payload_hash").write.mode("append").parquet(hashesDir)
-        if (compactAfterFiles > 0)
-          compactSidecar(spark, hashesDir, compactAfterFiles, partitioned = false)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
 
   /** First-seer sidecar layout for a novelty-scoring sink. */
   private[graft] def noveltyIndexDir(sinkDir: String): String = s"$sinkDir.idx/shingles"
@@ -617,7 +495,7 @@ object StreamingExtract {
     val shinglesDir = noveltyIndexDir(sinkDir)
     healStagedSwap(spark, shinglesDir)
     if (hasData(spark, sinkDir) && !hasData(spark, shinglesDir))
-      graft.ops.LlmPipeline
+      LlmPipeline
         .shingleTerms64(spark.read.parquet(sinkDir).select("doc_id", "text"))
         .groupBy("term64")
         .agg(org.apache.spark.sql.functions.min(
@@ -635,7 +513,7 @@ object StreamingExtract {
       if (hasData(spark, sinkDir))
         once.join(spark.read.parquet(sinkDir).select("doc_id"), Seq("doc_id"), "left_anti")
       else once
-    val (scored0, newSeers0) = graft.ops.LlmPipeline.noveltyScoreBatch(fresh, stored)
+    val (scored0, newSeers0) = LlmPipeline.noveltyScoreBatch(fresh, stored)
     val scored = scored0.localCheckpoint(true)
     val newSeers = newSeers0.localCheckpoint(true)
     newSeers.write.mode("append").parquet(shinglesDir)
@@ -657,6 +535,42 @@ object StreamingExtract {
         noveltyLoadBatch(df.sparkSession, df,
           s"$outPath/${table.effectiveTargetName}", compactAfterFiles)
       }
+
+  /** Stage-then-double-rename replacement of `sinkDir` with the frame
+    * `merged` produces (which may READ the live sink — the staging write
+    * completes before any rename starts). Crash recovery: a job-committed
+    * staging dir for this batchId with no live sink data means a previous
+    * attempt died between the two swap renames; the staged copy IS the
+    * batch's complete merged result, so the swap is finished instead of
+    * recomputed — recomputing would see an empty sink and rebuild from
+    * batch rows alone, losing all pre-batch history. Shared by
+    * [[upsertSink]] and [[sketchDistinctSink]].
+    */
+  private def stagedReplace(spark: SparkSession, sinkDir: String, batchId: Long)
+      (merged: => DataFrame): Unit = {
+    val sinkPath = new org.apache.hadoop.fs.Path(sinkDir)
+    val fs = sinkPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = new org.apache.hadoop.fs.Path(s"$sinkDir.staging-$batchId")
+    val old = new org.apache.hadoop.fs.Path(s"$sinkDir.old-$batchId")
+    val stagedCommitted =
+      fs.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"))
+    if (stagedCommitted && !hasData(spark, sinkDir)) {
+      fs.delete(sinkPath, true) // marker-only remnant would break the rename
+      renameOrThrow(fs, staging, sinkPath)
+      fs.delete(old, true)
+    } else {
+      // Stage first: the staging write reads the live sink, so the swap
+      // starts only after the merged copy is fully durable. Then swap
+      // RENAME-FIRST — never delete the only live copy.
+      merged.write.mode("overwrite").parquet(staging.toString)
+      if (fs.exists(sinkPath)) {
+        fs.delete(old, true) // leftover from an earlier crash of this batch
+        renameOrThrow(fs, sinkPath, old)
+      }
+      renameOrThrow(fs, staging, sinkPath)
+      fs.delete(old, true)
+    }
+  }
 
   /** MERGE-style upsert sink via foreachBatch: each micro-batch UPDATES rows
     * whose key already exists in the sink and INSERTS the rest — the loader
@@ -695,46 +609,6 @@ object StreamingExtract {
     * so only partitions containing matched keys rewrite. The batch-side
     * logic — latest-per-key then key-matched replacement — is unchanged.
     */
-  /** Stage-then-double-rename replacement of `sinkDir` with the frame
-    * `merged` produces (which may READ the live sink — the staging write
-    * completes before any rename starts). Crash recovery: a job-committed
-    * staging dir for this batchId with no live sink data means a previous
-    * attempt died between the two swap renames; the staged copy IS the
-    * batch's complete merged result, so the swap is finished instead of
-    * recomputed — recomputing would see an empty sink and rebuild from
-    * batch rows alone, losing all pre-batch history. Shared by
-    * [[upsertSink]] and [[sketchDistinctSink]].
-    */
-  private def stagedReplace(spark: SparkSession, sinkDir: String, batchId: Long)
-      (merged: => DataFrame): Unit = {
-    val sinkPath = new org.apache.hadoop.fs.Path(sinkDir)
-    val fs = sinkPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(s"$sinkDir.staging-$batchId")
-    val old = new org.apache.hadoop.fs.Path(s"$sinkDir.old-$batchId")
-    def renameOrThrow(src: org.apache.hadoop.fs.Path,
-        dst: org.apache.hadoop.fs.Path): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"rename $src -> $dst failed")
-    val stagedCommitted =
-      fs.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"))
-    if (stagedCommitted && !hasData(spark, sinkDir)) {
-      fs.delete(sinkPath, true) // marker-only remnant would break the rename
-      renameOrThrow(staging, sinkPath)
-      fs.delete(old, true)
-    } else {
-      // Stage first: the staging write reads the live sink, so the swap
-      // starts only after the merged copy is fully durable. Then swap
-      // RENAME-FIRST — never delete the only live copy.
-      merged.write.mode("overwrite").parquet(staging.toString)
-      if (fs.exists(sinkPath)) {
-        fs.delete(old, true) // leftover from an earlier crash of this batch
-        renameOrThrow(sinkPath, old)
-      }
-      renameOrThrow(staging, sinkPath)
-      fs.delete(old, true)
-    }
-  }
-
   def upsertSink(
       stream: DataFrame,
       keyCol: String,

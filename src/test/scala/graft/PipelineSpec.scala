@@ -170,7 +170,7 @@ class PipelineSpec extends SparkSpec {
       assert(ids == Seq(0L, 1L, 2L, 3L, 4L, 5L),
         s"boundary re-read + copy + near-dup must die at the sink: $ids")
       // The stored index tracks exactly the admitted docs.
-      val (hashesDir, _, _) = graft.streaming.StreamingExtract.indexDirs(sink)
+      val hashesDir = graft.streaming.StreamingExtract.sidecarDir(sink, "hashes")
       assert(spark.read.parquet(hashesDir).count() == 6)
 
       // Round 3 with NOTHING new at the source: the batch is exactly the

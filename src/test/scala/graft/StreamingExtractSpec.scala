@@ -158,7 +158,8 @@ class StreamingExtractSpec extends SparkSpec {
 
     // The stored index tracks exactly the survivors: one hash and one sig
     // per admitted doc, 16 band rows each (nothing near the bucket cap).
-    val (hashesDir, sigsDir, bandsDir) = StreamingExtract.indexDirs(sink)
+    val Seq(hashesDir, sigsDir, bandsDir) =
+      Seq("hashes", "sigs", "bands").map(StreamingExtract.sidecarDir(sink, _))
     assert(spark.read.parquet(hashesDir).count() == 3)
     assert(spark.read.parquet(sigsDir).select("doc_id").collect()
       .map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 4L))
@@ -185,12 +186,12 @@ class StreamingExtractSpec extends SparkSpec {
     // THE index contract: a steady-state batch's dedup plan reads ONLY the
     // stored index tables — the sink parquet itself is never scanned (the
     // r4 design re-read and re-banded the whole sink per micro-batch).
-    val idx = StreamingExtract.readIndex(spark, sink)
+    val text = graft.ops.LlmPipeline.Modality.text(0.5)
+    val idx = StreamingExtract.readIndex(spark, sink, text)
     assert(idx.nonEmpty, "index must exist after a batch")
     val probe = Seq((10L, textD), (11L, toks("e").mkString(" ")))
       .toDF("doc_id", "text")
-    val surv = graft.ops.LlmPipeline
-      .incrementalDedupSurvivorsIndexed(spark, probe, idx, 0.5)
+    val (surv, _) = graft.ops.LlmPipeline.incrementalDedup(spark, probe, text, idx)
     val scanned = surv.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         l.relation match {
@@ -254,7 +255,7 @@ class StreamingExtractSpec extends SparkSpec {
     // migration, the next batch would append band=X/bpfx=Y subdirs next to
     // these flat part-files and the following read would fail partition
     // discovery, wedging the sink permanently.
-    val (_, _, bandsDir) = StreamingExtract.indexDirs(sink)
+    val bandsDir = StreamingExtract.sidecarDir(sink, "bands")
     val flatRows = spark.read.parquet(bandsDir)
       .select("band", "bucket", "doc_id").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq
@@ -345,7 +346,8 @@ class StreamingExtractSpec extends SparkSpec {
 
     writeBatch(Seq((0L, toks("w0_").mkString(" "))))
     val schema = spark.read.parquet(src).schema
-    val (hashesDir, sigsDir, bandsDir) = StreamingExtract.indexDirs(sink)
+    val Seq(hashesDir, sigsDir, bandsDir) =
+      Seq("hashes", "sigs", "bands").map(StreamingExtract.sidecarDir(sink, _))
     val nBatches = 10
     (0 until nBatches).foreach { i =>
       if (i > 0) writeBatch(Seq((i.toLong, toks(s"w${i}_").mkString(" "))))
@@ -447,8 +449,9 @@ class StreamingExtractSpec extends SparkSpec {
     // Round 1: two orthogonal vectors — both admitted.
     writeBatch(Seq(0L -> e(0), 1L -> e(1)))
     val schema = spark.read.parquet(src).schema
-    StreamingExtract.incrementalDedupEmbeddingSink(
-      spark.readStream.schema(schema).parquet(src), sink, ckpt).awaitTermination()
+    StreamingExtract.incrementalDedupSink(
+      spark.readStream.schema(schema).parquet(src), sink, ckpt,
+      graft.ops.LlmPipeline.Modality.embedding()).awaitTermination()
     val r1 = spark.read.parquet(sink)
     assert(r1.count() == 2)
     assert(r1.columns.toSet == Set("vec_id", "embedding", "norm", "codes"),
@@ -464,8 +467,9 @@ class StreamingExtractSpec extends SparkSpec {
       4L -> e(2, scale = 2.0f),          // in-batch scaled copy  → dropped
       5L -> e(3)                         // new direction         → survives
     ))
-    StreamingExtract.incrementalDedupEmbeddingSink(
-      spark.readStream.schema(schema).parquet(src), sink, ckpt).awaitTermination()
+    StreamingExtract.incrementalDedupSink(
+      spark.readStream.schema(schema).parquet(src), sink, ckpt,
+      graft.ops.LlmPipeline.Modality.embedding()).awaitTermination()
     val ids = spark.read.parquet(sink).select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(ids == Seq(0L, 1L, 3L, 5L), s"survivors: $ids")
   }
@@ -481,8 +485,9 @@ class StreamingExtractSpec extends SparkSpec {
 
     writeBatch(Seq(0L -> payload("A"), 1L -> payload("B")))
     val schema = spark.read.parquet(src).schema
-    StreamingExtract.incrementalDedupMediaSink(
-      spark.readStream.schema(schema).parquet(src), sink, ckpt).awaitTermination()
+    StreamingExtract.incrementalDedupSink(
+      spark.readStream.schema(schema).parquet(src), sink, ckpt,
+      graft.ops.LlmPipeline.Modality.media).awaitTermination()
     assert(spark.read.parquet(sink).count() == 2)
 
     writeBatch(Seq(
@@ -491,12 +496,106 @@ class StreamingExtractSpec extends SparkSpec {
       3L -> payload("C"), // new                          → survives
       4L -> payload("C")  // in-batch copy                → dropped
     ))
-    StreamingExtract.incrementalDedupMediaSink(
-      spark.readStream.schema(schema).parquet(src), sink, ckpt).awaitTermination()
+    StreamingExtract.incrementalDedupSink(
+      spark.readStream.schema(schema).parquet(src), sink, ckpt,
+      graft.ops.LlmPipeline.Modality.media).awaitTermination()
     val out = spark.read.parquet(sink)
     assert(out.columns.contains("payload_hash"), "sink must store the payload hash")
     val ids = out.select("asset_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(ids == Seq(0L, 1L, 3L), s"survivors: $ids")
+  }
+
+  /** One modality of the indexed dedup sink with row builders: content key
+    * `k` maps to pairwise non-duplicate content (disjoint 40-token texts,
+    * orthogonal one-hot vectors, distinct payloads), so rows sharing a key
+    * are exact copies and rows with different keys all survive. With its
+    * second argument true, `rows` builds near-dup variants instead (two
+    * tokens replaced, a 1e-4 off-axis component) where the modality has a
+    * near step.
+    */
+  private final class DedupFixture(val modality: graft.ops.LlmPipeline.Modality,
+      val rows: (Seq[(Long, Int)], Boolean) => org.apache.spark.sql.DataFrame)
+
+  private val dedupFixtures = {
+    import graft.ops.LlmPipeline.Modality
+    def text(k: Int, near: Boolean): String =
+      ((0 until 40).map(i => s"k${k}_t$i").dropRight(if (near) 2 else 0) ++
+        (if (near) Seq("xx", "yy") else Nil)).mkString(" ")
+    def vec(k: Int, near: Boolean): Seq[Float] = Seq.tabulate(64)(i =>
+      if (i == k) 1.0f else if (near && i == k + 32) 1e-4f else 0.0f)
+    Seq(
+      "text" -> new DedupFixture(Modality.text(), (r, near) =>
+        r.map { case (id, k) => (id, text(k, near)) }.toDF("doc_id", "text")),
+      "embedding" -> new DedupFixture(Modality.embedding(), (r, near) =>
+        r.map { case (id, k) => (id, vec(k, near)) }.toDF("vec_id", "embedding")),
+      "media" -> new DedupFixture(Modality.media, (r, _) =>
+        r.map { case (id, k) => (id, s"payload-$k".getBytes("UTF-8")) }.toDF("asset_id", "payload")))
+  }
+
+  /** Every file and directory under `dir`, recursively (empty if absent). */
+  private def treePaths(dir: String): Set[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(q: org.apache.hadoop.fs.Path): Seq[String] =
+      fs.listStatus(q).toSeq.flatMap(s =>
+        s.getPath.toString +: (if (s.isDirectory) walk(s.getPath) else Nil))
+    if (fs.exists(p)) walk(p).toSet else Set.empty
+  }
+
+  for ((name, f) <- dedupFixtures)
+    test(s"$name sink: a crash after any append of a batch replays without loss, leak or wedge") {
+      val m = f.modality
+      val idCol = m.idCol
+      val order = m.appendOrder.size + 1 // the sink itself, then its sidecars
+      for (cut <- 1 to order) {
+        val sink = java.nio.file.Files.createTempDirectory(s"graft-cut$cut").toString + "/out"
+        val dirs = sink +: m.appendOrder.map(StreamingExtract.sidecarDir(sink, _))
+        def load(batch: org.apache.spark.sql.DataFrame, compact: Int): Unit =
+          StreamingExtract.dedupLoadBatch(spark, batch, sink, m, compact)
+        load(f.rows(Seq(0L -> 0, 1L -> 1), false), 0)
+        val before = dirs.map(d => d -> treePaths(d)).toMap
+        // Round 2: two new rows and a copy of a stored one. Then the crash:
+        // every part file the appends after the cut added disappears, as if
+        // those commits never happened; the round is re-delivered.
+        val round2 = f.rows(Seq(2L -> 2, 3L -> 3, 4L -> 0), false)
+        load(round2, 0)
+        val fs = new org.apache.hadoop.fs.Path(sink)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        dirs.drop(cut).foreach(d => (treePaths(d) -- before(d)).toSeq.sortBy(-_.length)
+          .foreach(q => fs.delete(new org.apache.hadoop.fs.Path(q), true)))
+        load(round2, 0)
+        // Round 3 holds an exact copy of each round-2 survivor under a new
+        // id, a near-dup variant of each where the modality has a near step,
+        // and one new row; it compacts every sidecar holding > 1 file.
+        val copies = f.rows(Seq(10L -> 2, 11L -> 3, 12L -> 4), false)
+        load(if (m.near.isEmpty) copies
+          else copies.unionByName(f.rows(Seq(13L -> 2, 14L -> 3), true)), 1)
+        val got = spark.read.parquet(sink).select(idCol).as[Long].collect().toSet
+        assert(Set(2L, 3L).subsetOf(got), s"cut $cut: a round-2 survivor was lost: $got")
+        assert(Set(10L, 11L, 13L, 14L).intersect(got).isEmpty,
+          s"cut $cut: a round-3 copy was admitted: $got")
+        assert(got == Set(0L, 1L, 2L, 3L, 12L), s"cut $cut: sink ids $got")
+        dirs.foreach(d => spark.read.parquet(d).count()) // every table still reads
+      }
+    }
+
+  test("jobs: a steady-state dedupLoadBatch round per modality and dedup_incremental stay at their counts") {
+    // Spark jobs measured on the three per-modality sinks this kernel
+    // replaced (same fixtures, same session settings); the one kernel must
+    // launch no more.
+    val ceiling = Map("text" -> 28, "embedding" -> 25, "media" -> 6)
+    for ((name, f) <- dedupFixtures) {
+      val sink = java.nio.file.Files.createTempDirectory(s"graft-jobs-$name").toString + "/out"
+      StreamingExtract.dedupLoadBatch(spark, f.rows(Seq(0L -> 0, 1L -> 1), false), sink, f.modality)
+      val batch = f.rows(Seq(2L -> 2, 3L -> 3, 4L -> 0), false)
+      val (_, jobs) = org.apache.spark.JobCount(spark.sparkContext)(
+        StreamingExtract.dedupLoadBatch(spark, batch, sink, f.modality))
+      assert(jobs <= ceiling(name), s"$name: $jobs jobs per steady-state round")
+    }
+    graft.ops.LlmPipeline.dedupIncremental(spark, sf).collect() // warm the documents read
+    val (_, jobs) = org.apache.spark.JobCount(spark.sparkContext)(
+      graft.ops.LlmPipeline.dedupIncremental(spark, sf).collect())
+    assert(jobs <= 23, s"dedup_incremental: $jobs jobs")
   }
 
   test("upsertSink MERGEs re-delivered keys: changed payloads replace, new keys insert") {
