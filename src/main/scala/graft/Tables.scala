@@ -10,8 +10,9 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
-import java.util.concurrent.{ConcurrentHashMap, ExecutionException, FutureTask}
-import scala.util.Try
+import java.util.concurrent.{Callable, ConcurrentHashMap, ExecutionException, Executors, FutureTask, ThreadFactory, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.util.{Failure, Try}
 
 /** Fixture-table access. Schemas come from Parquet footers — the reference
   * never declares schemas either (mkpipe_extractor_clickhouse/__init__.py:43,
@@ -185,22 +186,46 @@ object Tables {
     * at once inside one application — actions are only sequential because
     * the driver calls them sequentially). Used where ONE query's
     * construction contains two or more mutually independent eager chains
-    * (checkpoint rounds, probe collects): each thunk submits its jobs from
-    * its own thread and the scheduler back-fills idle cores with the other
-    * chain's tasks. The pool is sized to the thunk count and torn down
-    * before returning — no threads outlive the call. Thunks must not
-    * depend on each other; [[memo]] stays safe because a concurrent builder
-    * blocks the other thunks on the same key.
+    * (checkpoint rounds, probe collects), and by
+    * [[graft.extract.Pipeline.run]] for its independent table runs: each
+    * thunk submits its jobs from its own thread and the scheduler
+    * back-fills idle cores with the other chains' tasks.
+    *
+    * At most `spark.sparkContext.defaultParallelism` thunks (the session's
+    * task slots) run at once; the rest queue in argument order. More chains
+    * than slots would only queue tasks, so a 300-table pipeline never
+    * starts 300 threads. A single thunk runs inline in the caller's thread.
+    * The pool is created per call and torn down before returning — no
+    * thread outlives the call — and its threads are created by the caller,
+    * so they inherit its Spark local properties (job group, scheduler
+    * pool). Every thunk ends before the call returns; the first failure in
+    * argument order is then rethrown unwrapped. Thunks must not depend on
+    * each other; [[memo]] stays safe because a concurrent builder blocks
+    * the other thunks on the same key.
     */
-  private[graft] def inParallel[T](thunks: (() => T)*): Seq[T] =
+  private[graft] def inParallel[T](spark: SparkSession)(thunks: (() => T)*): Seq[T] =
     if (thunks.sizeIs <= 1) thunks.map(_()).toSeq
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
+      val width = math.min(thunks.size, spark.sparkContext.defaultParallelism)
+      // Named so a leaked pool thread is visible; daemon so one never
+      // holds the JVM open.
+      val pool = Executors.newFixedThreadPool(width, new ThreadFactory {
+        private val n = new AtomicInteger
+        def newThread(r: Runnable): Thread = {
+          val th = new Thread(r, s"graft-parallel-${n.incrementAndGet()}")
+          th.setDaemon(true)
+          th
+        }
+      })
       try {
-        val futs = thunks.map(th =>
-          pool.submit(new java.util.concurrent.Callable[T] { def call(): T = th() }))
-        try futs.map(_.get()).toSeq
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      } finally pool.shutdown()
+        val futs = thunks.map(th => pool.submit(new Callable[T] { def call(): T = th() }))
+        futs.map(f => Try(f.get())).map {
+          case Failure(e: ExecutionException) => throw e.getCause
+          case done => done.get
+        }.toSeq
+      } finally {
+        pool.shutdownNow()
+        pool.awaitTermination(1, TimeUnit.MINUTES)
+      }
     }
 }

@@ -1,7 +1,7 @@
 package graft.extract
 
 import scala.collection.mutable
-import scala.util.{Failure, Success, Try}
+import scala.util.{Failure, Try}
 
 import org.apache.spark.sql.SparkSession
 
@@ -17,11 +17,13 @@ trait WatermarkStore {
   def put(table: String, value: String): Unit
 }
 
-/** In-memory store (tests / single-run pipelines). */
+/** In-memory store (tests / single-run pipelines). Thread-safe: the
+  * tables of one [[Pipeline.run]] put their watermarks concurrently.
+  */
 final class InMemoryWatermarkStore extends WatermarkStore {
-  private val m = mutable.Map.empty[String, String]
-  def get(table: String): Option[String] = m.get(table)
-  def put(table: String, value: String): Unit = m(table) = value
+  private val m = new java.util.concurrent.ConcurrentHashMap[String, String]
+  def get(table: String): Option[String] = Option(m.get(table))
+  def put(table: String, value: String): Unit = m.put(table, value)
 }
 
 /** File-backed store: one `table=watermark` line per table — survives runs,
@@ -106,32 +108,83 @@ object ExtractorRegistry {
   * at-least-once extraction with content dedup in one run phase. The
   * watermark still persists only after a successful load, so a failed
   * curated load re-extracts the same rows next run (at-least-once preserved).
+  *
+  * Concurrency: the tables of one [[run]] share nothing but the session,
+  * so their runs are submitted concurrently through
+  * [[graft.Tables.inParallel]] and one table's job latency hides behind
+  * another table's tasks (guide §2.6). Each table run is still extract →
+  * load → watermark `put`, and the plans and job counts are unchanged.
+  *   - Tables with the same `effectiveTargetName` form one group that runs
+  *     one after another in config order, inside one thunk: two writes into
+  *     one parquet dir must never race on its `_temporary`. Distinct
+  *     targets run at the same time.
+  *   - At most `defaultParallelism` groups (the session's task slots) run
+  *     at once; the rest queue in config order. A run with one group (one
+  *     table, or one shared target) stays in the caller's thread.
+  *   - Measured on `perfbench` replicate (5 tables, 4-core box,
+  *     `local[3]`): width 3 took the cycle median from 1385 to 971 ms over
+  *     10 alternating pairs (10/10 won), with the same 9 jobs, 9 stages and
+  *     17 tasks per traced cycle. Width 5 (every table at once) read
+  *     839 against 860 ms in medians over 4 pairs (3 of 4 to width 5), a
+  *     gap inside the parent's own quartile spread (97 ms); the cap keeps
+  *     a many-table pipeline from starting a thread per table.
+  *   - Both the loader and the [[WatermarkStore]] are called from several
+  *     threads at once; the two stores here are thread-safe. A
+  *     `custom_query` should read only its own table's temp view: a view
+  *     that another table's run creates is not ordered before it.
+  *
+  * Failures: a table without `passOnError` that fails stops the rest of
+  * its own group; tables in other groups still load and persist their
+  * watermarks. Once every group has ended, the first such failure in
+  * config order is rethrown. Each table's watermark is written only after
+  * its own load, so every table keeps its at-least-once guarantee.
   */
 final class Pipeline(
     extractor: Extractor,
     watermarks: WatermarkStore = new InMemoryWatermarkStore,
     loader: Option[(ExtractResult, TableConfig, String) => Unit] = None) {
 
-  /** Run all tables; returns per-table results (Failure only recorded — not
-    * thrown — when passOnError is set).
+  /** Run all tables; returns per-table results in config order (Failure
+    * only recorded — not thrown — when passOnError is set).
     */
   def run(
       spark: SparkSession,
       tables: Seq[TableConfig],
-      outPath: String): Seq[(String, Try[ExtractResult])] =
-    tables.map { table =>
-      val attempt = Try {
-        val r = extractor.extract(spark, table, watermarks.get(table.name))
-        loader match {
-          case Some(f) => f(r, table, outPath)
-          case None    => extractor.load(r, table, outPath)
-        }
-        r.lastPoint.foreach(watermarks.put(table.name, _))
-        r
+      outPath: String): Seq[(String, Try[ExtractResult])] = {
+    val groups = tables.zipWithIndex.groupBy(_._1.effectiveTargetName).values.toSeq.sortBy(_.head._2)
+    val done = graft.Tables.inParallel(spark)(groups.map(g => () => runGroup(spark, g, outPath)): _*)
+      .flatten.sortBy(_._1)
+    done.foreach {
+      case (_, table, Failure(e)) if !table.passOnError => throw e
+      case _ =>
+    }
+    done.map { case (_, table, attempt) => table.name -> attempt }
+  }
+
+  /** One target's tables in config order, stopping after the first failure
+    * that is not passed on.
+    */
+  private def runGroup(
+      spark: SparkSession,
+      group: Seq[(TableConfig, Int)],
+      outPath: String): Seq[(Int, TableConfig, Try[ExtractResult])] = {
+    val done = mutable.ArrayBuffer.empty[(Int, TableConfig, Try[ExtractResult])]
+    val it = group.iterator
+    while (it.hasNext && done.lastOption.forall { case (_, t, r) => r.isSuccess || t.passOnError }) {
+      val (table, i) = it.next()
+      done += ((i, table, runTable(spark, table, outPath)))
+    }
+    done.toSeq
+  }
+
+  private def runTable(spark: SparkSession, table: TableConfig, outPath: String): Try[ExtractResult] =
+    Try {
+      val r = extractor.extract(spark, table, watermarks.get(table.name))
+      loader match {
+        case Some(f) => f(r, table, outPath)
+        case None    => extractor.load(r, table, outPath)
       }
-      attempt match {
-        case Failure(e) if !table.passOnError => throw e
-        case _ => table.name -> attempt
-      }
+      r.lastPoint.foreach(watermarks.put(table.name, _))
+      r
     }
 }

@@ -689,7 +689,7 @@ object Graph {
     // The shared node memo is resolved BEFORE the two threads start so the
     // memo build never races inside the chains.
     val nodes = Some(domesticNodes(spark, dir))
-    val chains = graft.Tables.inParallel(
+    val chains = graft.Tables.inParallel(spark)(
       () => componentLabelsOf(e, ComponentRounds, nodes = nodes),
       () => labelPropLabelsOf(e, LabelPropRounds, nodes = nodes))
     score("components", chains(0))

@@ -1484,7 +1484,7 @@ object LlmPipeline {
     // the same key — and each probe's result set is position-matched back
     // to its nProbe, so the emitted curve is unchanged.
     val probeNs = Seq(1, 2, 4, 10)
-    val results = graft.Tables.inParallel(
+    val results = graft.Tables.inParallel(spark)(
       (() => simTopkCosine(spark, dir)
           .select("vec_id").collect().map(_.getLong(0)).toSet) +:
       probeNs.map(np => () => simTopkIvf(spark, dir, nProbe = np)

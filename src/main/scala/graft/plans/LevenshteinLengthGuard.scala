@@ -83,9 +83,5 @@ object LevenshteinLengthGuard extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** Idempotent per-session install (mirrors [[PushdownNanosTimestamp.install]]). */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(this))
-      spark.experimental.extraOptimizations = cur :+ this
-  }
+  def install(spark: SparkSession): Unit = SessionRules.addOptimization(spark, this)
 }

@@ -95,9 +95,5 @@ object PushdownNanosTimestamp extends Rule[LogicalPlan] {
   }
 
   /** Idempotently install into the session's experimental optimizations. */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(this))
-      spark.experimental.extraOptimizations = cur :+ this
-  }
+  def install(spark: SparkSession): Unit = SessionRules.addOptimization(spark, this)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-import graft.plans.{AsOfJoin, AsOfJoinStrategy}
+import graft.plans.{AsOfJoin, AsOfJoinStrategy, IntervalJoinStrategy, SessionRules}
 
 /** Public entry for the native as-of join ([[graft.plans.AsOfJoin]]).
   *
@@ -18,20 +18,6 @@ import graft.plans.{AsOfJoin, AsOfJoinStrategy}
   * [[graft.GraftExtensions]] (which also injects it properly).
   */
 object AsOf {
-
-  private def ensureStrategy(spark: SparkSession): Unit = {
-    // Respect a session that already carries the strategy — via
-    // GraftExtensions' injectPlannerStrategy or an earlier call here —
-    // so the extensions wiring stays observable (extraStrategies stays
-    // empty in an extensions-built session; ExtensionsSpec pins this).
-    val planned = spark.asInstanceOf[ClassicSparkSession]
-      .sessionState.planner.strategies
-    if (!planned.contains(AsOfJoinStrategy)) {
-      val cur = spark.experimental.extraStrategies
-      if (!cur.contains(AsOfJoinStrategy))
-        spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
-    }
-  }
 
   /** Left as-of join: for each `left` row, the last `right` row with equal
     * keys and `rightTimeCol` ≤ `leftTimeCol` (`strict = true` tightens to
@@ -49,7 +35,7 @@ object AsOf {
     require(leftKeys.nonEmpty && leftKeys.length == rightKeys.length,
       "as-of join needs matching non-empty key lists")
     val spark = left.sparkSession
-    ensureStrategy(spark)
+    SessionRules.addStrategy(spark, AsOfJoinStrategy)
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     // An unaliased self join would duplicate exprIds across the node's
@@ -105,11 +91,11 @@ object AsOf {
     * marker guard.
     */
   def sql(spark: SparkSession, asofSql: String): DataFrame = {
-    ensureStrategy(spark)
+    SessionRules.addStrategy(spark, AsOfJoinStrategy)
     // The same entry also serves the interval marker
     // (`graft_interval_match` in a plain INNER JOIN condition), so its
     // strategy registers alongside (one shared idempotent registrar).
-    Interval.ensureStrategy(spark)
+    SessionRules.addStrategy(spark, IntervalJoinStrategy)
     val cs = spark.asInstanceOf[ClassicSparkSession]
     cs.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_asof_match",

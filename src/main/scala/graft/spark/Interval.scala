@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-import graft.plans.{IntervalJoin, IntervalJoinStrategy}
+import graft.plans.{IntervalJoin, IntervalJoinStrategy, SessionRules}
 
 /** Public entry for the native keyed interval join
   * ([[graft.plans.IntervalJoin]]). Same `org.apache.spark.sql` placement
@@ -14,16 +14,6 @@ import graft.plans.{IntervalJoin, IntervalJoinStrategy}
   * already; `extraStrategies` stays empty there).
   */
 object Interval {
-
-  private[graft] def ensureStrategy(spark: SparkSession): Unit = {
-    val planned = spark.asInstanceOf[ClassicSparkSession]
-      .sessionState.planner.strategies
-    if (!planned.contains(IntervalJoinStrategy)) {
-      val cur = spark.experimental.extraStrategies
-      if (!cur.contains(IntervalJoinStrategy))
-        spark.experimental.extraStrategies = cur :+ IntervalJoinStrategy
-    }
-  }
 
   /** Keyed interval join: every (left, right) pair with equal keys
     * and `rightTimeCol` in `[leftTimeCol + loUs, leftTimeCol + hiUs]`
@@ -42,7 +32,7 @@ object Interval {
       "interval join needs matching non-empty key lists")
     require(loUs <= hiUs, s"interval window is empty: [$loUs, $hiUs]")
     val spark = left.sparkSession
-    ensureStrategy(spark)
+    SessionRules.addStrategy(spark, IntervalJoinStrategy)
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     require(lPlan.outputSet.intersect(rPlan.outputSet).isEmpty,

@@ -1,19 +1,29 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success}
 
-import graft.extract.{Extractor, ExtractorRegistry, FileWatermarkStore, JdbcSource, Pipeline}
+import graft.extract.{Extractor, ExtractorRegistry, FileWatermarkStore, InMemoryWatermarkStore, JdbcSource, Pipeline}
 import graft.model._
 
 /** Orchestration layer (reference A17 registry + A19 pass_on_error + the §3
   * framework lifecycle): variants resolve, watermarks persist across runs,
-  * failures skip-or-propagate per table config.
+  * failures skip-or-propagate per table config, and one run's tables run
+  * concurrently except where they share a sink target.
   */
 class PipelineSpec extends SparkSpec {
 
   private val incrId = TableConfig("events",
     replicationMethod = ReplicationMethod.Incremental,
     iterateColumn = Some("event_id"), iterateColumnType = IterateType.IntCol)
+
+  /** A fresh directory holding copies of the named fixture tables. */
+  private def landingCopy(tables: String*): String = {
+    val landing = java.nio.file.Files.createTempDirectory("graft-landing")
+    for (t <- tables)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/$t.parquet"), landing.resolve(s"$t.parquet"))
+    landing.toString
+  }
 
   test("registry resolves the parquet variant and rejects unknown ones") {
     assert(ExtractorRegistry("parquet")(sf).isInstanceOf[Extractor])
@@ -24,10 +34,7 @@ class PipelineSpec extends SparkSpec {
 
   test("pipeline run persists watermarks and second run appends only the boundary row") {
     // A fresh landing dir, so the table reads below are cold.
-    val landing = java.nio.file.Files.createTempDirectory("graft-landing")
-    for (t <- Seq("events", "nation"))
-      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/$t.parquet"), landing.resolve(s"$t.parquet"))
-    val dir = landing.toString
+    val dir = landingCopy("events", "nation")
     val wmPath = java.nio.file.Files.createTempFile("graft-wm", ".properties")
     val store = new FileWatermarkStore(wmPath)
     val out = java.nio.file.Files.createTempDirectory("graft-pipe").toString
@@ -230,6 +237,131 @@ class PipelineSpec extends SparkSpec {
       assert(spark.read.parquet(sink).count() == 4,
         "the re-delivered boundary row must not re-append")
     } finally jconn.close()
+  }
+
+  private def parallelThreads(): Set[String] =
+    Thread.getAllStackTraces.keySet.asScala
+      .map(_.getName).filter(_.startsWith("graft-parallel")).toSet
+
+  test("concurrent table runs: replicate-shaped pipeline equals each table run alone, loads overlap") {
+    val dir = landingCopy("region", "nation", "supplier", "lineitem", "events")
+    val eventsQuery =
+      """SELECT event_id, ts, user_id, event_type, value, props, toYYYYMM(ts) AS ym
+        |FROM events PREWHERE value > 1 {query_filter}""".stripMargin
+    val tables = Seq("region", "nation", "supplier").map(TableConfig(_)) ++ Seq(
+      TableConfig("lineitem", replicationMethod = ReplicationMethod.Incremental,
+        iterateColumn = Some("l_orderkey"), iterateColumnType = IterateType.IntCol,
+        partitionsCount = 4),
+      TableConfig("events", replicationMethod = ReplicationMethod.Incremental,
+        iterateColumn = Some("ts"), iterateColumnType = IterateType.DatetimeCol,
+        customQuery = Some(eventsQuery)))
+
+    // Reference: each table run alone, one pipeline call per table.
+    val refOut = java.nio.file.Files.createTempDirectory("graft-ref").toString
+    val refStore = new InMemoryWatermarkStore
+    for (t <- tables) assert(new Pipeline(new Extractor(dir), refStore).run(spark, Seq(t), refOut).head._2.isSuccess)
+
+    // The loader records each load's [start, end]. The first two loads
+    // wait (bounded) for each other after recording their start, so two
+    // loads in flight at once is the only way both finish inside the wait.
+    val out = java.nio.file.Files.createTempDirectory("graft-par").toString
+    val store = new InMemoryWatermarkStore
+    val met = new java.util.concurrent.CountDownLatch(2)
+    val loads = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]
+    val ex = new Extractor(dir)
+    val pipe = new Pipeline(ex, store, Some { (r: ExtractResult, t: TableConfig, o: String) =>
+      val t0 = System.nanoTime()
+      met.countDown()
+      met.await(20, java.util.concurrent.TimeUnit.SECONDS)
+      ex.load(r, t, o)
+      loads.add((t.name, t0, System.nanoTime()))
+      ()
+    })
+    val results = pipe.run(spark, tables, out)
+    assert(results.map(_._1) == tables.map(_.name), "results must come back in config order")
+    assert(results.forall(_._2.isSuccess), results.filter(_._2.isFailure))
+    for (t <- tables.map(_.name)) {
+      assert(spark.read.parquet(s"$out/$t").count() == spark.read.parquet(s"$refOut/$t").count(), t)
+      assert(store.get(t) == refStore.get(t), t)
+    }
+    assert(store.get("lineitem").isDefined && store.get("events").isDefined)
+    val spans = loads.asScala.toSeq
+    assert(spans.size == tables.size)
+    val overlapping = for (a <- spans; b <- spans if a._1 < b._1 && a._2 < b._3 && b._2 < a._3) yield (a._1, b._1)
+    assert(overlapping.nonEmpty, s"no two loads overlapped: $spans")
+    assert(parallelThreads().isEmpty, s"pool threads outlived the run: ${parallelThreads()}")
+  }
+
+  test("concurrent table runs: a failing table without passOnError is rethrown after the other tables load") {
+    val out = java.nio.file.Files.createTempDirectory("graft-par-fail").toString
+    val store = new InMemoryWatermarkStore
+    val pipe = new Pipeline(new Extractor(sf), store)
+    val alone = intercept[Exception] {
+      pipe.run(spark, Seq(TableConfig("no_such_table")), out)
+    }
+    val e = intercept[Exception] {
+      pipe.run(spark, Seq(TableConfig("no_such_table"), TableConfig("nation")), out)
+    }
+    assert(e.getClass == alone.getClass && e.getMessage == alone.getMessage)
+    assert(spark.read.parquet(s"$out/nation").count() == 25, "the independent table must still load")
+    assert(parallelThreads().isEmpty, s"pool threads outlived the run: ${parallelThreads()}")
+  }
+
+  test("concurrent table runs: tables sharing a target append one after another in config order") {
+    val dir = landingCopy("events", "nation")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
+      java.nio.file.Paths.get(s"$dir/events_b.parquet"))
+    def incr(name: String) = TableConfig(name, targetName = Some("merged"),
+      replicationMethod = ReplicationMethod.Incremental,
+      iterateColumn = Some("event_id"), iterateColumnType = IterateType.IntCol)
+    val store = new InMemoryWatermarkStore
+    // Existing watermarks put both tables in append mode.
+    store.put("events", "990")
+    store.put("events_b", "995")
+    val out = java.nio.file.Files.createTempDirectory("graft-par-target").toString
+    val loads = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]
+    val ex = new Extractor(dir)
+    val pipe = new Pipeline(ex, store, Some { (r: ExtractResult, t: TableConfig, o: String) =>
+      val t0 = System.nanoTime()
+      ex.load(r, t, o)
+      loads.add((t.name, t0, System.nanoTime()))
+      ()
+    })
+    val tables = Seq(incr("events"), TableConfig("nation"), incr("events_b"))
+    val results = pipe.run(spark, tables, out)
+    assert(results.map(_._1) == Seq("events", "nation", "events_b"))
+    results.foreach { case (n, r) => assert(r.isSuccess, n) }
+    assert(results.collect { case (n, Success(r)) if n != "nation" => r.writeMode }
+      .forall(_ == org.apache.spark.sql.SaveMode.Append))
+    val merged = loads.asScala.toSeq.filter(_._1 != "nation")
+    assert(merged.map(_._1) == Seq("events", "events_b"), s"shared-target loads out of order: $merged")
+    assert(merged(0)._3 <= merged(1)._2, s"shared-target loads overlapped: $merged")
+    val ids = spark.read.parquet(s"$out/merged").select("event_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids == ((990L to 999L) ++ (995L to 999L)).sorted, ids)
+    assert(store.get("events").contains("999") && store.get("events_b").contains("999"))
+  }
+
+  test("in-memory watermark store: 8 threads putting 100 tables each keep all 800") {
+    // Repeated on fresh stores: a lost update is a race, not a certainty.
+    for (rep <- 0 until 20) {
+      val store = new InMemoryWatermarkStore
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      try {
+        val futs = (0 until 8).map { w =>
+          pool.submit(new Runnable {
+            def run(): Unit = {
+              start.await()
+              (0 until 100).foreach(i => store.put(s"t${w}_$i", s"$w.$i"))
+            }
+          })
+        }
+        start.countDown()
+        futs.foreach(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally pool.shutdown()
+      for (w <- 0 until 8; i <- 0 until 100)
+        assert(store.get(s"t${w}_$i").contains(s"$w.$i"), s"rep $rep lost t${w}_$i")
+    }
   }
 
   test("passOnError=true records the failure and continues; false propagates") {

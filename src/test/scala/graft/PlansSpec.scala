@@ -150,6 +150,39 @@ class PlansSpec extends SparkSpec {
     assert(!nd.contains("abs((length("), s"guard duplicated a rand-derived arg:\n$nd")
   }
 
+  test("session registrars: 8 concurrent threads install each rule and strategy exactly once") {
+    import graft.plans.{AsOfJoinStrategy, IntervalJoinStrategy, LevenshteinLengthGuard, PushdownNanosTimestamp, SessionRules}
+    // The four registrars: the two rule installs, and the strategy
+    // registrations the as-of and interval entries make.
+    val installs: Seq[org.apache.spark.sql.SparkSession => Unit] = Seq(
+      PushdownNanosTimestamp.install, LevenshteinLengthGuard.install,
+      SessionRules.addStrategy(_, AsOfJoinStrategy), SessionRules.addStrategy(_, IntervalJoinStrategy))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      for (rep <- 0 until 20) {
+        val s = spark.newSession()
+        val start = new java.util.concurrent.CountDownLatch(1)
+        // Thread w starts at registrar w % 4, so different registrars race.
+        val futs = (0 until 8).map { w =>
+          pool.submit(new Runnable {
+            def run(): Unit = {
+              start.await()
+              installs.indices.foreach(k => installs((w + k) % installs.size)(s))
+            }
+          })
+        }
+        start.countDown()
+        futs.foreach(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+        val opts = s.experimental.extraOptimizations
+        val planned = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.planner.strategies
+        assert(opts.count(_ eq PushdownNanosTimestamp) == 1, s"rep $rep: $opts")
+        assert(opts.count(_ eq LevenshteinLengthGuard) == 1, s"rep $rep: $opts")
+        assert(planned.count(_ eq AsOfJoinStrategy) == 1, s"rep $rep: ${s.experimental.extraStrategies}")
+        assert(planned.count(_ eq IntervalJoinStrategy) == 1, s"rep $rep: ${s.experimental.extraStrategies}")
+      }
+    } finally pool.shutdown()
+  }
+
   test("native as-of join: constructed boundary/tie/unmatched/null-time semantics") {
     import spark.implicits._
     val p = Seq((1L, 10L, 100L), (2L, 10L, 50L), (3L, 10L, 10L),
