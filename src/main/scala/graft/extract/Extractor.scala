@@ -190,11 +190,27 @@ final class Extractor(
 
   /** Loader-side write, completing the reference's ExtractResult contract:
     * sink-mode selection (A14) + write-partition coalesce (A16, README.md:114).
+    *
+    * Overwrite (full refresh, first incremental load, empty-batch
+    * truncation) goes through [[StagedReplace.replace]]: the batch is
+    * committed beside the sink and swapped in by two renames, so a crash
+    * mid-write leaves the previous sink whole, and a concurrent reader sees
+    * the old rows, the new rows or, between the renames, a vacant name that
+    * fails loudly — never an empty or partial sink (Spark's own overwrite
+    * deletes the sink before it writes). Append stays a plain append,
+    * at-least-once as in the reference, after a [[StagedReplace.heal]]: an
+    * append into a sink whose last replace died between its renames would
+    * otherwise create a fresh live dir and orphan the committed copy.
     */
   def load(result: ExtractResult, table: TableConfig, outPath: String): Unit =
     result.df.foreach { df =>
-      val out = table.writePartitions.fold(df)(n => df.coalesce(n))
-      out.write.mode(result.writeMode).parquet(s"$outPath/${table.effectiveTargetName}")
+      val out = table.writePartitions.fold(df)(n => df.coalesce(n)).write.mode(result.writeMode)
+      val (spark, dir) = (df.sparkSession, s"$outPath/${table.effectiveTargetName}")
+      if (result.writeMode == SaveMode.Overwrite) StagedReplace.replace(spark, dir)(out.parquet)
+      else {
+        StagedReplace.heal(spark, dir)
+        out.parquet(dir)
+      }
     }
 }
 

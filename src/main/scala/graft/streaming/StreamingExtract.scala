@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, Trigger, TTLConfig, ValueState}
 import org.apache.spark.sql.types.StructType
 
+import graft.extract.StagedReplace
+import graft.extract.StagedReplace.hasData
 import graft.ops.LlmPipeline
 import graft.ops.LlmPipeline.Modality
 
@@ -78,88 +80,11 @@ object StreamingExtract {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** True when `dir` exists and holds at least one non-hidden entry.
-    * Existence is checked through the Hadoop FileSystem resolved from the
-    * path (java.io.File is always false on hdfs://, s3a://, …); any read
-    * failure other than absence must FAIL the batch rather than silently
-    * disable dedup.
-    */
-  private def hasData(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { s =>
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
-
   /** Where an indexed dedup sink at `sinkDir` keeps its `name` sidecar
     * table (`hashes`, `sigs`, `vecs`, `bands`).
     */
   private[graft] def sidecarDir(sinkDir: String, name: String): String =
     s"$sinkDir.idx/$name"
-
-  private def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"rename $src -> $dst failed")
-
-  /** Staging/backup sibling paths for an in-place sidecar rewrite (layout
-    * migration, compaction) of `dir`.
-    */
-  private def swapPaths(dir: String)
-      : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) =
-    (new org.apache.hadoop.fs.Path(s"$dir.staged"),
-      new org.apache.hadoop.fs.Path(s"$dir.swap-old"))
-
-  /** Complete or clean up an in-place rewrite of `dir` that crashed.
-    *
-    * The rewrite protocol (shared by [[ensurePartitionedBands]] and
-    * [[compactSidecar]]) is: job-commit a full replacement to `dir.staged`,
-    * then swap RENAME-FIRST (`dir → dir.swap-old`, `dir.staged → dir`,
-    * delete the old copy) — a complete copy of the table exists on disk at
-    * every instant. The crash windows and their healing:
-    *
-    *   - died during staging (staged uncommitted, live intact): delete the
-    *     partial staged dir; the rewrite simply re-runs when next triggered;
-    *   - died between the two renames (staged committed, live gone): the
-    *     staged copy IS the table — finish the swap;
-    *   - died before the final deletes (live intact, stray staged/old):
-    *     delete the remnants.
-    *
-    * Every reader/writer of a swappable sidecar dir must heal before
-    * touching it, or a mid-swap crash would leave the next batch reading a
-    * missing directory — failing forever, the exact wedge the swap protocol
-    * exists to prevent.
-    */
-  private def healStagedSwap(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (staged, old) = swapPaths(dir)
-    val stagedCommitted =
-      fs.exists(new org.apache.hadoop.fs.Path(staged, "_SUCCESS"))
-    if (stagedCommitted && !hasData(spark, dir)) {
-      fs.delete(p, true) // marker-only remnant would break the rename
-      renameOrThrow(fs, staged, p)
-      fs.delete(old, true)
-    } else {
-      fs.delete(staged, true)
-      fs.delete(old, true)
-    }
-  }
-
-  /** Swap a job-committed staged rewrite in as the live `dir` — the
-    * rename-first half of the protocol [[healStagedSwap]] heals.
-    */
-  private def swapInStaged(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (staged, old) = swapPaths(dir)
-    fs.delete(old, true) // leftover from an earlier crashed attempt
-    renameOrThrow(fs, p, old)
-    renameOrThrow(fs, staged, p)
-    fs.delete(old, true)
-  }
 
   /** Data files of a (possibly partitioned) parquet dir, recursively,
     * excluding commit markers and hidden files.
@@ -189,10 +114,10 @@ object StreamingExtract {
     * same (band, bpfx) partitioning the appends use (keyed repartition →
     * one file per populated grid cell), flat tables coalesce to
     * ~128 MB-target files; content is untouched, so the append-only replay
-    * reasoning (anti-joins against stored rows) is unaffected. Runs inside
-    * the same staged + rename-first swap as the layout migration — crash
-    * windows heal via [[healStagedSwap]], and a complete copy of the index
-    * exists on disk at every instant.
+    * reasoning (anti-joins against stored rows) is unaffected. Runs as a
+    * [[StagedReplace.replace]], like the layout migration: crash windows
+    * heal, and a complete copy of the index exists on disk at every
+    * instant.
     *
     * Reader contract (spec-pinned): consumers RE-OPEN the index per batch —
     * exactly what the indexed sinks do — and a re-opened reader sees
@@ -213,21 +138,21 @@ object StreamingExtract {
     */
   private[graft] def compactSidecar(spark: SparkSession, dir: String,
       maxFiles: Int, partitioned: Boolean): Boolean = {
-    healStagedSwap(spark, dir)
+    StagedReplace.heal(spark, dir)
     val files = dataFiles(spark, dir)
     if (files.size <= maxFiles) false
     else {
-      val (staged, _) = swapPaths(dir)
-      val df = spark.read.parquet(dir)
-      if (partitioned)
-        df.repartition(col("band"), col("bpfx"))
-          .write.mode("overwrite").partitionBy("band", "bpfx").parquet(staged.toString)
-      else {
-        val targetFiles = math.max(1,
-          math.ceil(files.map(_.getLen).sum.toDouble / (128L << 20).toDouble).toInt)
-        df.repartition(targetFiles).write.mode("overwrite").parquet(staged.toString)
+      StagedReplace.replace(spark, dir) { staged =>
+        val df = spark.read.parquet(dir)
+        if (partitioned)
+          df.repartition(col("band"), col("bpfx"))
+            .write.mode("overwrite").partitionBy("band", "bpfx").parquet(staged)
+        else {
+          val targetFiles = math.max(1,
+            math.ceil(files.map(_.getLen).sum.toDouble / (128L << 20).toDouble).toInt)
+          df.repartition(targetFiles).write.mode("overwrite").parquet(staged)
+        }
       }
-      swapInStaged(spark, dir)
       true
     }
   }
@@ -261,24 +186,19 @@ object StreamingExtract {
     * reader that might be followed by an append must first bring the layout
     * forward.
     *
-    * Mechanism: heal any crashed rewrite ([[healStagedSwap]]), then detect
-    * flat layout from the parquet schema (a partitioned table surfaces
-    * `bpfx` as a partition column; names never collide — the band tables
-    * carry exactly (band, bucket, doc_id)). If flat, stage a partitioned
-    * rewrite to `<dir>.staged` and swap rename-first ([[swapInStaged]]) —
-    * a complete band table exists on disk at every instant, and every
-    * crash window replays safely. Band rows are append-only content, so
-    * the rewrite changes layout, never data.
+    * Mechanism: heal any crashed rewrite, then detect flat layout from the
+    * parquet schema (a partitioned table surfaces `bpfx` as a partition
+    * column; names never collide — the band tables carry exactly (band,
+    * bucket, doc_id)). If flat, rewrite it partitioned through
+    * [[StagedReplace.replace]] — a complete band table exists on disk at
+    * every instant, and every crash window replays safely. Band rows are
+    * append-only content, so the rewrite changes layout, never data.
     */
   private[graft] def ensurePartitionedBands(spark: SparkSession, dir: String): Unit = {
-    healStagedSwap(spark, dir)
-    if (hasData(spark, dir) && !spark.read.parquet(dir).columns.contains("bpfx")) {
-      val (staged, _) = swapPaths(dir)
-      writeBands(
-        spark.read.parquet(dir).select("band", "bucket", "doc_id"),
-        staged.toString, overwrite = true)
-      swapInStaged(spark, dir)
-    }
+    StagedReplace.heal(spark, dir)
+    if (hasData(spark, dir) && !spark.read.parquet(dir).columns.contains("bpfx"))
+      StagedReplace.replace(spark, dir)(staged => writeBands(
+        spark.read.parquet(dir).select("band", "bucket", "doc_id"), staged, overwrite = true))
   }
 
   /** Read an indexed sink's stored [[LlmPipeline.DedupIndex]] for modality
@@ -400,7 +320,7 @@ object StreamingExtract {
     // Heal any compaction swap that crashed mid-rename BEFORE the
     // adoption gate or any read touches the dirs (the bands dir heals
     // inside readIndex).
-    m.appendOrder.filter(_ != "bands").foreach(n => healStagedSwap(spark, sidecarDir(sinkDir, n)))
+    m.appendOrder.filter(_ != "bands").foreach(n => StagedReplace.heal(spark, sidecarDir(sinkDir, n)))
     if (hasData(spark, sinkDir) && !hasData(spark, sidecarDir(sinkDir, m.appendOrder.last)))
       writeIndex(sinkDir, m, LlmPipeline.indexRows(spark.read.parquet(sinkDir), m),
         overwrite = true)
@@ -485,7 +405,9 @@ object StreamingExtract {
     * [[noveltyScoringSink]], exposed for batch pipelines exactly like
     * [[dedupLoadBatch]]. Adoption: a pre-existing sink with no sidecar
     * rebuilds the first-seer table from stored text once (the only time
-    * stored text is read), committed before any append.
+    * stored text is read), committed before any append through
+    * [[StagedReplace.replace]], so a crash mid-rebuild leaves no partial
+    * table for the gate to accept: the next round rebuilds it whole.
     */
   def noveltyLoadBatch(
       spark: SparkSession,
@@ -493,14 +415,13 @@ object StreamingExtract {
       sinkDir: String,
       compactAfterFiles: Int = 64): Unit = {
     val shinglesDir = noveltyIndexDir(sinkDir)
-    healStagedSwap(spark, shinglesDir)
+    StagedReplace.heal(spark, shinglesDir)
     if (hasData(spark, sinkDir) && !hasData(spark, shinglesDir))
-      LlmPipeline
+      StagedReplace.replace(spark, shinglesDir)(LlmPipeline
         .shingleTerms64(spark.read.parquet(sinkDir).select("doc_id", "text"))
         .groupBy("term64")
-        .agg(org.apache.spark.sql.functions.min(
-          org.apache.spark.sql.functions.col("doc_id")).as("first_doc"))
-        .write.mode("overwrite").parquet(shinglesDir)
+        .agg(min(col("doc_id")).as("first_doc"))
+        .write.mode("overwrite").parquet)
     val stored =
       if (hasData(spark, shinglesDir)) Some(spark.read.parquet(shinglesDir)) else None
     // Replay gate BEFORE scoring: a re-delivered doc must not re-append —
@@ -536,42 +457,6 @@ object StreamingExtract {
           s"$outPath/${table.effectiveTargetName}", compactAfterFiles)
       }
 
-  /** Stage-then-double-rename replacement of `sinkDir` with the frame
-    * `merged` produces (which may READ the live sink — the staging write
-    * completes before any rename starts). Crash recovery: a job-committed
-    * staging dir for this batchId with no live sink data means a previous
-    * attempt died between the two swap renames; the staged copy IS the
-    * batch's complete merged result, so the swap is finished instead of
-    * recomputed — recomputing would see an empty sink and rebuild from
-    * batch rows alone, losing all pre-batch history. Shared by
-    * [[upsertSink]] and [[sketchDistinctSink]].
-    */
-  private def stagedReplace(spark: SparkSession, sinkDir: String, batchId: Long)
-      (merged: => DataFrame): Unit = {
-    val sinkPath = new org.apache.hadoop.fs.Path(sinkDir)
-    val fs = sinkPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(s"$sinkDir.staging-$batchId")
-    val old = new org.apache.hadoop.fs.Path(s"$sinkDir.old-$batchId")
-    val stagedCommitted =
-      fs.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"))
-    if (stagedCommitted && !hasData(spark, sinkDir)) {
-      fs.delete(sinkPath, true) // marker-only remnant would break the rename
-      renameOrThrow(fs, staging, sinkPath)
-      fs.delete(old, true)
-    } else {
-      // Stage first: the staging write reads the live sink, so the swap
-      // starts only after the merged copy is fully durable. Then swap
-      // RENAME-FIRST — never delete the only live copy.
-      merged.write.mode("overwrite").parquet(staging.toString)
-      if (fs.exists(sinkPath)) {
-        fs.delete(old, true) // leftover from an earlier crash of this batch
-        renameOrThrow(fs, sinkPath, old)
-      }
-      renameOrThrow(fs, staging, sinkPath)
-      fs.delete(old, true)
-    }
-  }
-
   /** MERGE-style upsert sink via foreachBatch: each micro-batch UPDATES rows
     * whose key already exists in the sink and INSERTS the rest — the loader
     * contract one step past [[dedupAppendSink]]'s insert-only dedup, for
@@ -582,25 +467,22 @@ object StreamingExtract {
     *
     * Merge semantics: within a batch the newest row per key wins (greatest
     * `versionCol`, deterministic); against the sink, matched keys are
-    * replaced, unmatched sink rows survive. The rewritten sink is staged to
-    * a per-batch sibling directory and swapped in with RENAME-FIRST
-    * filesystem moves — `sink → sink.old-<id>`, `staging-<id> → sink`,
-    * delete `.old-<id>` — so a complete copy of the data exists on disk at
-    * every instant: renames are atomic per path, and the live-sink name is
-    * vacant only between the two renames, while both the staged merged copy
-    * and the old copy still exist whole. (The naive delete-then-rename swap
-    * has a real loss window: a crash between the delete and the rename
-    * leaves no live sink, and the REPLAYED batch — seeing an empty sink —
-    * would recompute from batch rows alone and overwrite the staged merged
-    * copy, silently dropping all pre-batch history.)
+    * replaced, unmatched sink rows survive. The rewritten sink replaces the
+    * old one through [[StagedReplace.replace]] (staged to `sink.staged`,
+    * swapped in rename-first), so a complete copy of the data exists on
+    * disk at every instant. (The naive delete-then-rename swap has a real
+    * loss window: a crash between the delete and the rename leaves no live
+    * sink, and the REPLAYED batch — seeing an empty sink — would recompute
+    * from batch rows alone, silently dropping all pre-batch history.)
     *
-    * Replay recovery: at batch start, a job-committed `staging-<batchId>`
-    * (its _SUCCESS marker present) alongside a missing/empty sink means the
-    * previous attempt crashed mid-swap; the batch completes the rename and
-    * skips recompute — the staged copy already merged this batchId. In
-    * every other state the batch recomputes from the live sink and
-    * overwrites its staging dir, so replay converges to the identical
-    * result — upsert is idempotent by construction.
+    * Replay recovery: a replayed batch first heals — a committed
+    * `sink.staged` beside a missing sink means the previous attempt crashed
+    * between the renames, and the swap is finished — and then recomputes
+    * from the live sink. When that live sink already holds this batch's
+    * merge, recomputing converges to the identical result, because the
+    * merge is idempotent: latest-per-key replacement of a key by its own
+    * newest row changes nothing. (The same holds for
+    * [[sketchDistinctSink]]'s theta union.)
     *
     * Scale note: this plain-parquet form rewrites the whole sink per batch —
     * correct, but O(sink) writes. At 100 TB the same foreachBatch shape
@@ -616,21 +498,22 @@ object StreamingExtract {
       sinkDir: String,
       checkpointDir: String): StreamingQuery =
     stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
-        stagedReplace(spark, sinkDir, batchId) {
+        StagedReplace.replace(spark, sinkDir) { staged =>
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(keyCol).orderBy(col(versionCol).desc)
           val latest = batch.toDF()
             .withColumn("__rn", row_number().over(w))
             .filter(col("__rn") === 1).drop("__rn")
-          if (hasData(spark, sinkDir))
-            spark.read.parquet(sinkDir)
-              .join(latest.select(keyCol), Seq(keyCol), "left_anti")
-              .unionByName(latest)
-          else latest
+          val merged =
+            if (hasData(spark, sinkDir))
+              spark.read.parquet(sinkDir)
+                .join(latest.select(keyCol), Seq(keyCol), "left_anti")
+                .unionByName(latest)
+            else latest
+          merged.write.mode("overwrite").parquet(staged)
         }
-        ()
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -641,9 +524,10 @@ object StreamingExtract {
     * lists. Each micro-batch folds to per-segment partial sketches
     * (map-side combinable aggregate), merges them with the stored sketches
     * via theta_union_agg, and replaces the sketch table through
-    * [[stagedReplace]]'s crash-safe swap. Serving a distinct estimate —
-    * or any segment-pair union/intersection/difference — reads kilobytes,
-    * never the history.
+    * [[StagedReplace.replace]]'s crash-safe swap (a replayed batch heals,
+    * then re-merges: [[upsertSink]]'s recovery paragraph). Serving a
+    * distinct estimate — or any segment-pair union/intersection/difference
+    * — reads kilobytes, never the history.
     *
     * At-least-once is FREE here: theta union is idempotent (set
     * semantics), so a re-delivered batch merges to the identical sketch —
@@ -656,28 +540,32 @@ object StreamingExtract {
       sinkDir: String,
       checkpointDir: String): StreamingQuery =
     stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
-        stagedReplace(spark, sinkDir, batchId) {
+        StagedReplace.replace(spark, sinkDir) { staged =>
           val partial = batch.toDF()
             .groupBy("segment")
             .agg(expr("theta_sketch_agg(member)").as("sk"))
-          if (hasData(spark, sinkDir))
-            spark.read.parquet(sinkDir).unionByName(partial)
-              .groupBy("segment")
-              .agg(expr("theta_union_agg(sk)").as("sk"))
-          else partial
+          val merged =
+            if (hasData(spark, sinkDir))
+              spark.read.parquet(sinkDir).unionByName(partial)
+                .groupBy("segment")
+                .agg(expr("theta_union_agg(sk)").as("sk"))
+            else partial
+          merged.write.mode("overwrite").parquet(staged)
         }
-        ()
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
 
   /** Estimates served from the stored sketch table — kilobytes read,
-    * regardless of how much history built it. */
+    * regardless of how much history built it. Opens the table through
+    * [[StagedReplace.readable]], so after a crash between the swap's two
+    * renames it serves the committed copy instead of failing; it does not
+    * heal (that deletes), so it is safe beside a running sink. */
   def sketchEstimates(spark: SparkSession, sinkDir: String): DataFrame =
-    spark.read.parquet(sinkDir)
+    spark.read.parquet(StagedReplace.readable(spark, sinkDir))
       .select(col("segment"),
         expr("CAST(theta_sketch_estimate(sk) AS BIGINT)").as("n_distinct"))
       .orderBy("segment")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-import graft.extract.{Extractor, Predicates, QueryTemplate}
+import graft.extract.{Extractor, InMemoryWatermarkStore, Pipeline, Predicates, QueryTemplate, StagedReplace}
 import graft.model._
 
 /** The reference's extract decision tree (mkpipe_extractor_clickhouse/
@@ -181,6 +181,107 @@ class ExtractorSpec extends SparkSpec {
     assert(written.count() == 25)
     assert(new java.io.File(s"$out/nation").listFiles()
       .count(_.getName.endsWith(".parquet")) == 1)
+  }
+
+  /** A table run into a sink: the sink's content before it (`old`,
+    * written straight to the sink dir) and the watermarks it starts from. */
+  private case class SinkRun(name: String, landing: String, table: TableConfig,
+      old: String => Unit, watermarks: Map[String, String] = Map.empty)
+
+  private def tempDir(prefix: String): String = java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** One run of `o`'s table into `out`; returns the watermark it persists. */
+  private def runOnce(o: SinkRun, out: String): Option[String] = {
+    val store = new InMemoryWatermarkStore
+    o.watermarks.foreach { case (t, v) => store.put(t, v) }
+    val res = new Pipeline(new Extractor(o.landing), store).run(spark, Seq(o.table), out)
+    assert(res.forall(_._2.isSuccess), res)
+    store.get(o.table.name)
+  }
+
+  /** `o`'s overwrite cut at each crash cut, built on disk: the sink reads
+    * whole old or whole new rows, and a replayed run reaches the uncut
+    * run's rows and watermark with no swap remnant left. */
+  private def checkCuts(o: SinkRun): Unit = {
+    val target = o.table.effectiveTargetName
+    val ref = tempDir("graft-cut-ref")
+    o.old(s"$ref/$target")
+    val oldRows = SwapCuts.rows(spark, s"$ref/$target")
+    val refWm = runOnce(o, ref)
+    val newRows = SwapCuts.rows(spark, s"$ref/$target")
+    assert(newRows.isDefined && newRows != oldRows, s"${o.name}: the run must change the sink")
+    for (cut <- SwapCuts.All) {
+      val out = tempDir("graft-cut")
+      o.old(s"$out/$target")
+      SwapCuts(spark, s"$out/$target", s"$ref/$target", cut)
+      val seen = SwapCuts.rows(spark, s"$out/$target")
+      assert(seen == oldRows || seen == newRows, s"${o.name}, $cut: the sink reads ${seen.map(_.size)} rows")
+      assert(runOnce(o, out) == refWm, s"${o.name}, $cut: watermark")
+      assert(SwapCuts.rows(spark, s"$out/$target") == newRows, s"${o.name}, $cut: replay differs from the uncut run")
+      assert(SwapCuts.clean(spark, s"$out/$target"), s"${o.name}, $cut: swap remnants left")
+    }
+  }
+
+  test("crash cuts: a loader overwrite reads whole old or new rows, and its replay equals the uncut run") {
+    val nation = Tables.t(spark, sf, "nation")
+    val events = Tables.t(spark, sf, "events")
+    val shrunk = tempDir("graft-cut-landing")
+    nation.filter(col("n_regionkey") < 2).write.parquet(s"$shrunk/nation.parquet")
+    val scenarios = Seq(
+      SinkRun("full refresh", shrunk, TableConfig("nation"), d => nation.write.parquet(d)),
+      SinkRun("first incremental load", sf, incrId, d => events.filter(col("event_id") < 100).write.parquet(d)),
+      SinkRun("empty-batch truncation", sf, incrTs.copy(customQuery =
+        Some("SELECT * FROM (SELECT * FROM events WHERE event_id < 0) AS t {query_filter}")),
+        d => events.write.parquet(d)))
+    scenarios.foreach(checkCuts)
+  }
+
+  test("crash cuts: an append after a cut between the renames lands on the committed copy") {
+    // The state: a replace cut between its renames left its committed copy
+    // (the first load, 1000 rows) in `events.staged`, and the store holds
+    // watermark 999, so the next run appends the boundary row. Without
+    // healing first, the append would create a live dir of one row and the
+    // next heal would drop the committed copy.
+    val first = tempDir("graft-cut-first")
+    runOnce(SinkRun("first load", sf, incrId, _ => ()), first)
+    val append = SinkRun("append", sf, incrId,
+      d => Tables.t(spark, sf, "events").filter(col("event_id") < 100).write.parquet(d), Map("events" -> "999"))
+    val expected = SwapCuts.sorted(spark.read.parquet(s"$first/events")
+      .unionByName(Tables.t(spark, sf, "events").filter(col("event_id") === 999)))
+    // (A cut during staging commits nothing, so no watermark persists.)
+    for (cut <- Seq("between the renames", "before cleanup")) {
+      val out = tempDir("graft-cut-append")
+      append.old(s"$out/events")
+      SwapCuts(spark, s"$out/events", s"$first/events", cut)
+      assert(runOnce(append, out).contains("999"))
+      assert(SwapCuts.rows(spark, s"$out/events").contains(expected), s"$cut: append lost the committed copy")
+      assert(SwapCuts.clean(spark, s"$out/events"))
+    }
+  }
+
+  test("a full refresh whose write dies mid-job leaves the previous sink whole") {
+    val out = tempDir("graft-cut-fail")
+    runOnce(SinkRun("first", sf, TableConfig("nation"), _ => ()), out)
+    val before = SwapCuts.rows(spark, s"$out/nation")
+    // The source fails at one row, after other tasks have written files.
+    val dying = new Extractor(sf, source = Some((s, n) => Tables.t(s, sf, n).withColumn("n_name",
+      when(col("n_nationkey") === 24, raise_error(lit("source died"))).otherwise(col("n_name")))))
+    intercept[Exception](new Pipeline(dying).run(spark, Seq(TableConfig("nation")), out))
+    assert(SwapCuts.rows(spark, s"$out/nation") == before, "the failed refresh touched the live sink")
+    runOnce(SinkRun("retry", sf, TableConfig("nation"), _ => ()), out)
+    assert(SwapCuts.rows(spark, s"$out/nation") == before && SwapCuts.clean(spark, s"$out/nation"))
+  }
+
+  test("heal refuses a sink left mid-swap by the per-batch protocol, naming the manual rename") {
+    import spark.implicits._
+    val base = tempDir("graft-legacy")
+    Seq(1L, 2L).toDF("k").write.parquet(s"$base/out.staging-3")
+    Seq(1L).toDF("k").write.parquet(s"$base/out.old-3")
+    val err = intercept[IllegalStateException](StagedReplace.heal(spark, s"$base/out"))
+    assert(err.getMessage.contains(s"mv $base/out.staging-3 $base/out"), err.getMessage)
+    // Nothing was touched: the committed copy is still there to restore.
+    assert(spark.read.parquet(s"$base/out.staging-3").count() == 2)
+    intercept[IllegalStateException](StagedReplace.replace(spark, s"$base/out")(_ => fail("must not write")))
   }
 
   test("readPartitioned produces partitionsCount slices with all rows (A15)") {

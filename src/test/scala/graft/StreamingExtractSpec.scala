@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -683,6 +684,68 @@ class StreamingExtractSpec extends SparkSpec {
       s"replay must be a no-op on sketch state: ${estimates()}")
   }
 
+  test("crash cuts: upsertSink and sketchDistinctSink read whole old or new tables, and a re-run equals the uncut run") {
+    // Per sink: batch 1 lands uncut; batch 2's replace is cut at each point
+    // on a copy of the sink and its checkpoint, then the stream re-runs on
+    // that checkpoint and must reach what batch 2 uncut reaches.
+    final case class Case(name: String, batch1: DataFrame, batch2: DataFrame,
+        start: (DataFrame, String, String) => org.apache.spark.sql.streaming.StreamingQuery,
+        read: String => Option[Seq[String]])
+    val cases = Seq(
+      Case("upsert",
+        (0L until 10L).map(i => (i, s"v1-$i", 1L)).toDF("event_id", "payload", "version"),
+        (Seq((9L, "v2-9", 2L)) ++ (10L until 15L).map(i => (i, s"v1-$i", 1L))).toDF("event_id", "payload", "version"),
+        (s, sink, ckpt) => StreamingExtract.upsertSink(s, "event_id", "version", sink, ckpt),
+        sink => SwapCuts.rows(spark, sink)),
+      Case("sketch",
+        Seq(("a", 1L), ("a", 2L), ("b", 1L)).toDF("segment", "member"),
+        Seq(("a", 2L), ("a", 3L), ("c", 7L)).toDF("segment", "member"),
+        (s, sink, ckpt) => StreamingExtract.sketchDistinctSink(s, sink, ckpt),
+        sink => Some(SwapCuts.sorted(StreamingExtract.sketchEstimates(spark, sink)))))
+    for (c <- cases) {
+      val src = java.nio.file.Files.createTempDirectory(s"graft-cut-${c.name}-src").toString
+      val base = java.nio.file.Files.createTempDirectory(s"graft-cut-${c.name}").toString
+      c.batch1.write.mode("append").parquet(src)
+      val schema = spark.read.parquet(src).schema
+      def drain(at: String): Unit =
+        c.start(spark.readStream.schema(schema).parquet(src), s"$at/out", s"$at/ckpt").awaitTermination()
+      def fork(to: String): String = {
+        Seq("out", "ckpt").foreach(d => SwapCuts.copy(spark, s"$base/pre/$d", s"$to/$d"))
+        to
+      }
+      drain(s"$base/pre")
+      c.batch2.write.mode("append").parquet(src)
+      val before = c.read(s"$base/pre/out")
+      val ref = fork(s"$base/ref")
+      drain(ref)
+      val after = c.read(s"$ref/out")
+      assert(after != before, s"${c.name}: batch 2 must change the sink")
+      for ((cut, i) <- SwapCuts.All.zipWithIndex) {
+        val at = fork(s"$base/cut$i")
+        SwapCuts(spark, s"$at/out", s"$ref/out", cut)
+        val seen = c.read(s"$at/out")
+        assert(seen == before || seen == after, s"${c.name}, $cut: the sink reads $seen")
+        drain(at)
+        assert(c.read(s"$at/out") == after, s"${c.name}, $cut: re-run differs from the uncut run")
+        assert(SwapCuts.clean(spark, s"$at/out"), s"${c.name}, $cut: swap remnants left")
+      }
+    }
+  }
+
+  test("sketchEstimates serves the committed copy after a cut between the swap's renames") {
+    val base = java.nio.file.Files.createTempDirectory("graft-skcut").toString
+    val (src, sink) = (s"$base/src", s"$base/out")
+    Seq(("a", 1L), ("a", 2L), ("b", 1L)).toDF("segment", "member").write.parquet(src)
+    StreamingExtract.sketchDistinctSink(
+      spark.readStream.schema(spark.read.parquet(src).schema).parquet(src), sink, s"$base/ckpt")
+      .awaitTermination()
+    val preCut = SwapCuts.sorted(StreamingExtract.sketchEstimates(spark, sink))
+    SwapCuts(spark, sink, SwapCuts.copy(spark, sink, s"$base/copy"), "between the renames")
+    // The live name is vacant: a plain read fails loudly.
+    intercept[org.apache.spark.sql.AnalysisException](spark.read.parquet(sink))
+    assert(SwapCuts.sorted(StreamingExtract.sketchEstimates(spark, sink)) == preCut)
+  }
+
   test("update-mode streaming aggregation re-emits a group's row as late data revises it") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, Long)]
@@ -800,6 +863,34 @@ class StreamingExtractSpec extends SparkSpec {
     assert(after3(6L) == ((3L, 0L, 0L)), s"post-adoption copy must score 0: $after3")
     assert(spark.read.parquet(shinglesDir).count() == 8,
       "adoption must rebuild exactly the corpus shingle set")
+  }
+
+  test("crash cuts: the novelty bootstrap leaves no partial first-seer table, and a replay equals the uncut run") {
+    val base = java.nio.file.Files.createTempDirectory("graft-nvcut").toString
+    def docs(rows: (Long, String)*): DataFrame = rows.toDF("doc_id", "text")
+    def shingles(sink: String): String = StreamingExtract.noveltyIndexDir(sink)
+    // A sink with no sidecar: the next round adopts it (the bootstrap).
+    StreamingExtract.noveltyLoadBatch(spark, docs((1L, "a b c d e"), (2L, "f g h i j")), s"$base/seed")
+    val pre = SwapCuts.copy(spark, s"$base/seed", s"$base/pre/out")
+    // What the bootstrap commits: a round of no docs adopts and adds nothing.
+    val boot = SwapCuts.copy(spark, pre, s"$base/boot/out")
+    StreamingExtract.noveltyLoadBatch(spark, docs(), boot)
+    val batch = docs((3L, "c d e k l"))
+    val ref = SwapCuts.copy(spark, pre, s"$base/ref/out")
+    StreamingExtract.noveltyLoadBatch(spark, batch, ref)
+    val bootRows = SwapCuts.rows(spark, shingles(boot))
+    assert(bootRows.exists(_.size == 6), s"bootstrap: $bootRows")
+    for ((cut, i) <- SwapCuts.All.zipWithIndex) {
+      val at = SwapCuts.copy(spark, pre, s"$base/cut$i/out")
+      SwapCuts(spark, shingles(at), shingles(boot), cut)
+      val seen = SwapCuts.rows(spark, shingles(at))
+      assert(seen.isEmpty || seen == bootRows, s"$cut: the first-seer table reads $seen")
+      assert(SwapCuts.rows(spark, at) == SwapCuts.rows(spark, pre), s"$cut: the sink changed")
+      StreamingExtract.noveltyLoadBatch(spark, batch, at)
+      assert(SwapCuts.rows(spark, at) == SwapCuts.rows(spark, ref), s"$cut: replayed scores differ")
+      assert(SwapCuts.rows(spark, shingles(at)) == SwapCuts.rows(spark, shingles(ref)), s"$cut: first seers differ")
+      assert(SwapCuts.clean(spark, shingles(at)), s"$cut: swap remnants left")
+    }
   }
 
   test("noveltyLoadBatch: duplicate doc_ids WITHIN one batch append once, like cross-batch replay") {
