@@ -16,6 +16,9 @@ import graft.plans.PushdownNanosTimestamp
   * perform so they work on vanilla sessions:
   *   - optimizer rule: [[graft.plans.PushdownNanosTimestamp]] (parquet
   *     pushdown through the ns→µs normalization)
+  *   - planner strategy: [[graft.plans.ParamScanFilters]] (a scan filter's
+  *     constants stay out of the generated code, so a new watermark reuses
+  *     the compiled class)
   *   - SQL functions: graft_minhash, graft_shingle_hashes, graft_token_count,
   *     graft_dot, graft_simhash, graft_rolling_fp, graft_deflate_len,
   *     graft_dhash, and the graft_char_ngrams GENERATOR — all native
@@ -38,6 +41,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.LevenshteinLengthGuard)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.IntervalJoinStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.ParamScanFilters)
     // SQL surface for the as-of operator: parser rewrite (ASOF JOIN …
     // MATCH_CONDITION → marked LEFT JOIN), marker functions, and the
     // resolution rule converting the marked Join into the AsOfJoin node.

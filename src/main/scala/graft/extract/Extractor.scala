@@ -43,6 +43,10 @@ import org.apache.spark.sql.functions._
   * row per partition moves, over only the columns it reads); `extract` does
   * not apply `partitionsCount` on Parquet — only [[readPartitioned]] (a
   * `repartitionByRange`) and JDBC stride reads use it (README.md:85-93).
+  * The watermark reaches the generated code as a parameter
+  * ([[graft.plans.ParamScanFilters]]), so a cycle's plans generate the
+  * same source as the last cycle's: each executor JVM compiles a class
+  * once and reuses it for every later cycle.
   */
 final class Extractor(
     sfDir: String,

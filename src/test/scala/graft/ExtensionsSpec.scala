@@ -97,6 +97,12 @@ class ExtensionsSpec extends AnyFunSuite {
         .queryExecution.executedPlan.toString
       assert(pushed.contains("PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts,2024-01-15T00:00)]"),
         s"ts predicate not pushed to the scan:\n$pushed")
+      // The injected scan-filter strategy parameterizes the residual
+      // filter's constant; the pushed filter above keeps the plain literal.
+      val residual = Tables.t(s, sf, "events")
+        .filter(col("ts") >= org.apache.spark.sql.functions.lit("2024-01-15 00:00:00").cast("timestamp"))
+        .queryExecution.executedPlan.collect { case f: org.apache.spark.sql.execution.FilterExec => f.condition }
+      assert(residual.exists(_.exists(_.isInstanceOf[graft.plans.ParamLiteral])), residual)
 
       // The injected PLANNER STRATEGY plans the native as-of join while the
       // session's experimental list stays EMPTY — proving the extensions

@@ -151,18 +151,19 @@ class PlansSpec extends SparkSpec {
   }
 
   test("session registrars: 8 concurrent threads install each rule and strategy exactly once") {
-    import graft.plans.{AsOfJoinStrategy, IntervalJoinStrategy, LevenshteinLengthGuard, PushdownNanosTimestamp, SessionRules}
-    // The four registrars: the two rule installs, and the strategy
-    // registrations the as-of and interval entries make.
+    import graft.plans.{AsOfJoinStrategy, IntervalJoinStrategy, LevenshteinLengthGuard, ParamScanFilters, PushdownNanosTimestamp, SessionRules}
+    // The five registrars: the two rule installs, and the strategy
+    // registrations the as-of and interval entries and Tables.t make.
     val installs: Seq[org.apache.spark.sql.SparkSession => Unit] = Seq(
       PushdownNanosTimestamp.install, LevenshteinLengthGuard.install,
-      SessionRules.addStrategy(_, AsOfJoinStrategy), SessionRules.addStrategy(_, IntervalJoinStrategy))
+      SessionRules.addStrategy(_, AsOfJoinStrategy), SessionRules.addStrategy(_, IntervalJoinStrategy),
+      SessionRules.addStrategy(_, ParamScanFilters))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
       for (rep <- 0 until 20) {
         val s = spark.newSession()
         val start = new java.util.concurrent.CountDownLatch(1)
-        // Thread w starts at registrar w % 4, so different registrars race.
+        // Thread w starts at registrar w % 5, so different registrars race.
         val futs = (0 until 8).map { w =>
           pool.submit(new Runnable {
             def run(): Unit = {
@@ -179,6 +180,7 @@ class PlansSpec extends SparkSpec {
         assert(opts.count(_ eq LevenshteinLengthGuard) == 1, s"rep $rep: $opts")
         assert(planned.count(_ eq AsOfJoinStrategy) == 1, s"rep $rep: ${s.experimental.extraStrategies}")
         assert(planned.count(_ eq IntervalJoinStrategy) == 1, s"rep $rep: ${s.experimental.extraStrategies}")
+        assert(planned.count(_ eq ParamScanFilters) == 1, s"rep $rep: ${s.experimental.extraStrategies}")
       }
     } finally pool.shutdown()
   }
