@@ -18,11 +18,11 @@ import graft.ops.{Graph, LlmPipeline, Relational, Skew}
   *      half the fact table;
   *   2. PageRank superstep: broadcast-rank vs co-partitioned rank-shuffle
   *      at 1× and 8× graph scale — the crossover the Graph scaladocs
-  *      document; (2b) the components min-propagation round on the same
+  *      document; (2b) the components round's edge stage on the same
   *      inflated edges, broadcast-label vs co-partitioned — the crossover
-  *      `graph_components_bucketed` exists for (the per-round stage of
-  *      `graph_label_prop_bucketed` and `graph_bfs_bucketed` is the same
-  *      src-keyed join + dst aggregate, so these rows govern all three);
+  *      `graph_components_bucketed` exists for (the per-round edge stage
+  *      of `graph_label_prop_bucketed` and `graph_bfs_bucketed` is the
+  *      same src-keyed `Edges.meet` join, so these rows govern all three);
   *      (2c) the k-core recurrence-SHAPE adjudication — the full 6-round
   *      rewrite trajectory vs the static-edge alive-vector trajectory of
   *      `graph_kcore_bucketed` on the same inflated co-occurrence graph;
@@ -164,17 +164,19 @@ object ScaleBench {
       val nEdges = e.count()
       val ranks = e.select(col("src").as("node")).distinct()
         .select(col("node"), lit(Graph.Scale).as("pr")).localCheckpoint()
+      val broadcastEdges = Graph.Edges.of(e)
       results(s"pagerank_superstep_broadcast_x$scale") = timeMin(2) {
-        assert(Graph.superstep(e, broadcast(ranks)).groupBy().count().head().getLong(0) > 0)
+        assert(Graph.superstep(broadcastEdges, ranks).groupBy().count().head().getLong(0) > 0)
       }
       // co-partitioned regime: edges pre-partitioned on src ONCE (the
       // bucketed-table stand-in: an in-memory partitioned cache keeps its
       // outputPartitioning, so only the rank vector shuffles per superstep)
       val ecp = e.repartition(cpus.toInt, col("src")).persist(StorageLevel.MEMORY_AND_DISK)
       ecp.count()
+      val copartitioned = Graph.Edges.of(ecp).copy(bucketed = true)
       results(s"pagerank_superstep_copartitioned_x$scale") = timeMin(2) {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try assert(Graph.superstep(ecp, ranks).groupBy().count().head().getLong(0) > 0)
+        try assert(Graph.superstep(copartitioned, ranks).groupBy().count().head().getLong(0) > 0)
         finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       }
       results(s"pagerank_edges_x$scale") = nEdges.toDouble
@@ -183,18 +185,18 @@ object ScaleBench {
       // co-partitioned crossover governs graph_components vs
       // graph_components_bucketed — measured here on the identical
       // persisted edge tables so the pagerank and components rows are
-      // directly comparable.
+      // directly comparable. The timed stage is the production round's
+      // edge stage (`componentsIncoming`: the labels-meet-edges join),
+      // whose per-node min rides the round's one union aggregate.
       val labels0 = e.select(col("src").as("node")).distinct()
         .select(col("node"), col("node").as("lbl")).localCheckpoint()
       results(s"components_round_broadcast_x$scale") = timeMin(2) {
-        assert(e.join(broadcast(labels0), e("src") === labels0("node"))
-          .groupBy(col("dst")).agg(min(col("lbl")).as("in_lbl"))
+        assert(Graph.componentsIncoming(broadcastEdges, labels0)
           .groupBy().count().head().getLong(0) > 0)
       }
       results(s"components_round_copartitioned_x$scale") = timeMin(2) {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try assert(ecp.join(labels0, ecp("src") === labels0("node"))
-          .groupBy(col("dst")).agg(min(col("lbl")).as("in_lbl"))
+        try assert(Graph.componentsIncoming(copartitioned, labels0)
           .groupBy().count().head().getLong(0) > 0)
         finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       }
@@ -228,7 +230,7 @@ object ScaleBench {
       }
       results(s"kcore_static_x$scale") = timeMin(2) {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try trajSum(Graph.kcoreTrajectoryStatic(pex, 2, broadcastAlive = false))
+        try trajSum(Graph.kcoreTrajectoryStatic(Graph.Edges.of(pex).copy(bucketed = true), 2))
         finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       }
       pex.unpersist()

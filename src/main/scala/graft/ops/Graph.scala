@@ -4,10 +4,14 @@ import graft.Tables.t
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Iterative graph analytics on DataFrames — the Pregel-shaped workload
-  * (PageRank here; connected components live in
-  * [[graft.ops.LlmPipeline.dedupClusters]] as min-label propagation with
-  * pointer doubling).
+/** Iterative graph analytics on DataFrames — the Pregel-shaped workload.
+  * PageRank, connected components, label propagation, BFS and both k-core
+  * shapes are fixed rounds of one driver ([[supersteps]]) over one edge
+  * value ([[Edges]]), each query in a broadcast and a bucketed regime; the
+  * one-pass structure queries (degrees, triangles, modularity,
+  * assortativity, neighbor Jaccard) read the same memoized graph loads.
+  * The run-until-converged components loop behind
+  * [[graft.ops.LlmPipeline.dedupClusters]] lives with its caller.
   *
   * Determinism is the interesting part: textbook PageRank sums doubles, and
   * a distributed sum of doubles is order-dependent — un-oracle-able and not
@@ -26,23 +30,58 @@ object Graph {
     */
   val Scale = 1000000000L
 
-  /** PageRank over the undirected customer↔supplier trade graph (an edge
-    * per distinct trading pair via lineitem→orders; supplier node ids are
-    * offset by 1e6 to share one key space). 8 synchronous iterations of
-    * r' = 0.15·Scale + 0.85 · Σ r/deg, the non-normalized uniform-base
-    * formulation; undirected edges mean no dangling mass. Top-30 by rank.
-    *
-    * Scale shape: the edge table (with degree attached) is built once and
-    * localCheckpoint'ed — 8 iterations reuse the materialized table
-    * instead of recomputing the join lineage, and the checkpoint every 4th
-    * round caps plan depth exactly as the cluster-label loop does. Each
-    * iteration is one join (ranks, ~N rows, hashed on node = the join
-    * key) + one groupBy(dst) — the irreducible per-superstep shuffle of
-    * Pregel itself; edges never move after the initial partition. At
-    * 100 TB: pre-partition the edge table by src ONCE (bucketed table),
-    * and each superstep shuffles only the O(N) rank vector, never the
-    * O(E) edges — the GraphX/Pregel cost model on plain DataFrames.
+  /** An edge table (`src`, `dst`; undirected graphs materialize both
+    * directions) with its node set and its join regime — what every
+    * superstep loop here runs over. Built by one accessor per graph
+    * ([[trade]], [[domestic]], [[parts]]) from the memoized edge and node
+    * tables, or by [[Edges.of]] over an ad-hoc table.
     */
+  private[graft] final case class Edges(table: DataFrame, nodes: DataFrame, bucketed: Boolean) {
+    /** How an O(N) state vector (ranks, labels, distances, the alive set)
+      * meets the O(E) edges on `src`; every round stage joins through it.
+      * Broadcast regime: `broadcast(state)` — the state is ≪ the edges, so
+      * the edge table NEVER re-shuffles (measured 6× on PageRank: a
+      * shuffle join re-sorts all E rows every round, because a checkpoint
+      * erases partitioning info), and a checkpointed state has no stats
+      * for the planner to broadcast it unasked. Bucketed regime, for
+      * billion-node graphs where the state has outgrown broadcast: `table`
+      * is the src-bucketed MERGE-hinted copy, so `state` stays plain and
+      * shuffles to the edge bucketing — each round's sort-merge join reads
+      * edge bucket i directly and no exchange re-shuffles the edges
+      * (plan-pinned in `PlanShapeSpec`: zero `hashpartitioning(src …)`).
+      * The MERGE hint keeps the fixture-sized state off the broadcast path
+      * so the plan under test IS the at-scale plan. A round body's algebra
+      * is the same in both regimes, which is what makes each bucketed query
+      * bit-identical to its broadcast twin (pinned in `OpsSpec`) and the
+      * flip a pure cost decision; the measured crossover rides in
+      * `SCALEBENCH.json`.
+      */
+    def meet(state: DataFrame): DataFrame = if (bucketed) state else broadcast(state)
+  }
+
+  private[graft] object Edges {
+    /** An ad-hoc edge table in the broadcast regime (tests, the scale
+      * bench); its node set is a lazy distinct over `src`. */
+    def of(table: DataFrame): Edges =
+      Edges(table, table.select(col("src").as("node")).distinct(), bucketed = false)
+  }
+
+  /** The superstep driver behind every fixed-round loop here: `n`
+    * synchronous rounds from `init`, round `i` computed from round `i-1`'s
+    * state, each output localCheckpoint'ed. Checkpointing every round is
+    * deliberate: the O(N) state is tiny, it caps plan depth, and an
+    * un-checkpointed round would re-execute every round since the last
+    * checkpoint through the next round's broadcast child. Returns `init`
+    * followed by the `n` round states. The init is the caller's: a lazy
+    * projection over the memoized node set where it is one (round 1's
+    * references re-project it in place and no action builds it), an eager
+    * checkpoint where it is computed (BFS seeding, k-core round-0 degrees).
+    * Plan-once rounds (ROADMAP item 3) would change this one function.
+    */
+  private[graft] def supersteps(init: DataFrame, n: Int)(
+      round: (DataFrame, Int) => DataFrame): IndexedSeq[DataFrame] =
+    (1 to n).scanLeft(init)((state, i) => round(state, i).localCheckpoint())
+
   // The degree-annotated edge table is the graph LOAD, not the query —
   // memoized per (session, dir) like the IVF index and cluster-label
   // tables ([[graft.Tables.memo]]), so repeated analytics over the same
@@ -61,106 +100,53 @@ object Graph {
       edges.join(deg, "src").localCheckpoint()
     }
 
-  /** One synchronous superstep: contributions r/deg flow along edges
-    * (map-side, partial-aggregated), then r' = 0.15·Scale + 0.85·Σ. The
-    * CALLER decides how the rank vector meets the edges — `broadcast(ranks)`
-    * for the N ≪ broadcast-limit regime, a MERGE-hinted co-partitioned join
-    * for the billion-node regime — the superstep algebra is identical, which
-    * is what makes the two variants bit-identical.
+  /** PageRank over the undirected customer↔supplier trade graph (an edge
+    * per distinct trading pair via lineitem→orders; supplier node ids are
+    * offset by 1e6 to share one key space). 8 synchronous iterations of
+    * r' = 0.15·Scale + 0.85 · Σ r/deg, the non-normalized uniform-base
+    * formulation; undirected edges mean no dangling mass. Top-30 by rank.
+    *
+    * Scale shape: the edge table (with degree attached) is built once and
+    * localCheckpoint'ed, and the 8 iterations run as 4 checkpoint actions
+    * of 2 fused supersteps each. Each superstep is one join of the O(N)
+    * rank vector to the edges ([[Edges.meet]]: broadcast here, shuffled to
+    * the src-bucketed edges in [[graphPagerankBucketed]]) + one
+    * groupBy(dst) — the irreducible per-superstep shuffle of Pregel
+    * itself; the O(E) edges never move after the initial partition, the
+    * GraphX/Pregel cost model on plain DataFrames.
     */
-  private[graft] def superstep(e: DataFrame, ranks: DataFrame): DataFrame =
-    e.join(ranks, e("src") === ranks("node"))
+  def graphPagerank(spark: SparkSession, dir: String): DataFrame =
+    pagerank(trade(spark, dir, bucketed = false))
+
+  /** [[graphPagerank]] in the bucketed regime ([[Edges.meet]]). */
+  def graphPagerankBucketed(spark: SparkSession, dir: String): DataFrame =
+    pagerank(trade(spark, dir, bucketed = true))
+
+  /** One synchronous superstep: contributions r/deg flow along edges
+    * (map-side, partial-aggregated), then r' = 0.15·Scale + 0.85·Σ.
+    */
+  private[graft] def superstep(g: Edges, ranks: DataFrame): DataFrame =
+    g.table.join(g.meet(ranks), g.table("src") === ranks("node"))
       .select(col("dst").as("node"), expr("pr div outdeg").as("c"))
       .groupBy("node")
       .agg((lit(150000000L) + expr("(85 * sum(c)) div 100")).as("pr"))
 
-  def graphPagerank(spark: SparkSession, dir: String): DataFrame = {
-    val e = tradeGraph(spark, dir)
-    // The rank vector is O(N) ≪ O(E) and broadcasts each superstep, so the
-    // edge table NEVER re-shuffles (measured 6×: a shuffle join here re-sorts
-    // all E rows every iteration because the checkpoint erases partitioning
-    // info). Contributions are map-side; the only per-superstep shuffle is
-    // the partial-aggregated rank vector. Checkpointing ranks EVERY round is
-    // deliberate: it is tiny, and an un-checkpointed round re-executes every
-    // round since the last checkpoint through the broadcast child. For
-    // billion-node graphs where the rank vector outgrows broadcast,
-    // [[graphPagerankBucketed]] is the flip: co-partitioned bucketed edges +
-    // a shuffle of ranks on src — the GraphX/Pregel cost model.
-    // The seed vector is a lazy projection over the memoized [[tradeNodes]]
-    // set (r16): it is consumed exactly once, by the first fused action's
-    // broadcast build, and the distinct itself is shared with the bucketed
-    // variant instead of rebuilt per query.
-    var ranks = tradeNodes(spark, dir).select(col("node"), lit(Scale).as("pr"))
+  private def pagerank(g: Edges): DataFrame = {
+    // The seed vector is a lazy projection over the memoized node set
+    // (r16): it is consumed exactly once, by the first fused action's
+    // first join, and the distinct is shared by both regimes instead of
+    // rebuilt per query.
+    val seed = g.nodes.select(col("node"), lit(Scale).as("pr"))
     // Two supersteps per checkpoint ACTION (r16): the rank vector is
     // referenced exactly ONCE per round (unlike the min-propagation loops,
     // whose doubling self-join references the state 3×), so fusing rounds
     // into one action recomputes NOTHING — same 8 rounds of algebra, half
     // the driver round-trips and checkpoint jobs. The inner round's
-    // aggregate materializes as the outer broadcast's build, exactly where
-    // the separate checkpoint job used to run.
-    for (_ <- 1 to 4) {
-      ranks = superstep(e, broadcast(superstep(e, broadcast(ranks)))).localCheckpoint()
-    }
-    ranks.orderBy(col("pr").desc, col("node")).limit(30)
-  }
-
-  // The bucketed edge table is written ONCE per (session, dir): 8 buckets
-  // hashed on src (repartition(8, src) first so each write task holds
-  // exactly one bucket → one file per bucket, the layout bucketed reads
-  // like). External table in an exit-cleaned temp dir + per-JVM tag, same
-  // decay discipline as FileFormats.bucketedTables.
-  /** The shared bucketed-edge write recipe: persist an edge table ONCE,
-    * bucketed AND sorted by `src` into 8 buckets at an exit-cleaned
-    * external path, named uniquely per (dir, JVM) so concurrent suites
-    * never collide. Every `*Bucketed` graph variant reads the table this
-    * produces; the layout discipline lives HERE, once.
-    */
-  private def writeBucketedEdges(edges: DataFrame, prefix: String,
-      dir: String): String = {
-    val tag = java.lang.Integer.toHexString(dir.hashCode) + "_" +
-      java.lang.Long.toHexString(
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime)
-    val name = s"graft_${prefix}_$tag"
-    edges
-      .repartition(8, col("src"))
-      .write.mode("overwrite").format("parquet")
-      .option("path", graft.sources.FileFormats.exitCleanedTempDir(s"graft-$prefix-bkt"))
-      .bucketBy(8, "src").sortBy("src")
-      .saveAsTable(name)
-    name
-  }
-
-  private[graft] def bucketedTradeGraph(spark: SparkSession, dir: String): String =
-    graft.Tables.memo(spark, dir, "trade-graph-bkt") {
-      writeBucketedEdges(tradeGraph(spark, dir), "edges", dir)
-    }
-
-  /** PageRank for the regime where the rank vector has outgrown broadcast
-    * (billion-node graphs): the O(E) edge table is persisted ONCE bucketed
-    * by `src`, so every superstep's sort-merge join reads edge bucket i
-    * directly — NO exchange ever re-shuffles the edges (plan-pinned in
-    * `PlanShapeSpec`: zero `hashpartitioning(src …)` anywhere). The only
-    * per-superstep movement is the O(N) rank vector, shuffled to the edge
-    * table's fixed bucketing, plus the partial-aggregated rank output — the
-    * GraphX/Pregel cost model on plain DataFrames. The MERGE hint keeps the
-    * fixture-sized rank vector off the broadcast path so the plan under
-    * test IS the at-scale plan. Bit-identical to [[graphPagerank]] (same
-    * integer superstep algebra, pinned in `OpsSpec`), so the flip between
-    * regimes is a pure cost decision, never a semantic one.
-    */
-  def graphPagerankBucketed(spark: SparkSession, dir: String): DataFrame = {
-    val eb = spark.table(bucketedTradeGraph(spark, dir)).hint("MERGE")
-    // Lazy seed vector over the shared [[tradeNodes]] memo — the bucketed
-    // table is a bucketed rewrite of the same rows, so the node sets are
-    // identical (the [[graphPagerank]] rationale).
-    var ranks = tradeNodes(spark, dir).select(col("node"), lit(Scale).as("pr"))
-    // Two supersteps per checkpoint action — the [[graphPagerank]] fusion
-    // (ranks referenced once per round ⇒ zero recompute); each fused action
-    // chains two rank shuffles onto the fixed edge bucketing.
-    for (_ <- 1 to 4) {
-      ranks = superstep(eb, superstep(eb, ranks)).localCheckpoint()
-    }
-    ranks.orderBy(col("pr").desc, col("node")).limit(30)
+    // aggregate materializes as the outer join's build (broadcast) or
+    // shuffle (bucketed), exactly where the separate checkpoint job used
+    // to run.
+    supersteps(seed, 4)((ranks, _) => superstep(g, superstep(g, ranks))).last
+      .orderBy(col("pr").desc, col("node")).limit(30)
   }
 
   /** Degree distribution of the trade graph in exact log2 buckets: per side
@@ -322,59 +308,77 @@ object Graph {
       tradeGraph(spark, dir).select(col("src").as("node")).distinct().localCheckpoint()
     }
 
+  /** The trade graph ([[tradeGraph]], [[tradeNodes]]) as an [[Edges]]. */
+  private[graft] def trade(spark: SparkSession, dir: String, bucketed: Boolean): Edges =
+    edges(spark, dir, "edges", tradeGraph(spark, dir), tradeNodes(spark, dir), bucketed)
+
+  /** The domestic trade graph ([[domesticEdges]], [[domesticNodes]]) as an
+    * [[Edges]]. */
+  private[graft] def domestic(spark: SparkSession, dir: String, bucketed: Boolean): Edges =
+    edges(spark, dir, "dedges", domesticEdges(spark, dir), domesticNodes(spark, dir), bucketed)
+
+  /** The part co-occurrence graph ([[partsCoGraph]], [[partsNodes]]) as an
+    * [[Edges]]. */
+  private[graft] def parts(spark: SparkSession, dir: String, bucketed: Boolean): Edges =
+    edges(spark, dir, "pedges", partsCoGraph(spark, dir), partsNodes(spark, dir), bucketed)
+
+  /** One graph's [[Edges]]: the memoized edge table, or for `bucketed` its
+    * copy written ONCE per (session, dir) bucketed AND sorted by `src`
+    * into 8 buckets (repartition(8, src) first so each write task holds
+    * exactly one bucket → one file per bucket, the layout bucketed reads
+    * like), MERGE-hinted. External table in an exit-cleaned temp dir,
+    * named per (dir, JVM) so concurrent suites never collide — the decay
+    * discipline of FileFormats.bucketedTables. `nodes` is taken by name so
+    * the bucketed write runs before the node set builds.
+    */
+  private def edges(spark: SparkSession, dir: String, prefix: String, table: DataFrame,
+      nodes: => DataFrame, bucketed: Boolean): Edges =
+    if (!bucketed) Edges(table, nodes, bucketed)
+    else {
+      val name = graft.Tables.memo(spark, dir, s"$prefix-bkt") {
+        val tag = java.lang.Integer.toHexString(dir.hashCode) + "_" +
+          java.lang.Long.toHexString(
+            java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime)
+        val name = s"graft_${prefix}_$tag"
+        table
+          .repartition(8, col("src"))
+          .write.mode("overwrite").format("parquet")
+          .option("path", graft.sources.FileFormats.exitCleanedTempDir(s"graft-$prefix-bkt"))
+          .bucketBy(8, "src").sortBy("src")
+          .saveAsTable(name)
+        name
+      }
+      Edges(spark.table(name).hint("MERGE"), nodes, bucketed)
+    }
+
   /** Connected components of the DOMESTIC trade graph — an edge per
     * distinct customer↔supplier pair that trades within one nation
     * (c_nationkey = s_nationkey) — by [[ComponentRounds]] rounds of
-    * synchronous min-label propagation, rolled up per component (size,
-    * side counts, id range). The nation restriction is what makes the
-    * query a real components problem at every sf: the full trade graph is
-    * one giant ball, while domestic trade fragments into nation-islands
-    * (10 @ sf0.001 → 25 @ sf0.01/0.1, measured). Label eccentricity from
-    * each component's min node is ≤ 6 at sf0.1, so 8 rounds converge with
-    * slack (the spec pins a 9th round as a fixed point); on a truly
-    * high-diameter graph flip to the pointer-doubling O(log d) loop of
-    * [[graft.ops.LlmPipeline.dedupClusters]] and give up the SQL oracle.
+    * synchronous min-label propagation with pointer doubling, rolled up
+    * per component (size, side counts, id range). The nation restriction
+    * is what makes the query a real components problem at every sf: the
+    * full trade graph is one giant ball, while domestic trade fragments
+    * into nation-islands (10 @ sf0.001 → 25 @ sf0.01/0.1, measured).
     *
     * Scale: the edge build is three dim joins (nation keys BROADCAST from
-    * the tiny dims) + one distinct; per round ONE join (labels meet edges
-    * on src under broadcast ranks ≪ edges, exactly the [[graphPagerank]]
-    * regime) + one min-aggregate on dst + a left join back to labels;
-    * labels are O(N) and localCheckpoint'ed every round to cap lineage.
-    * The final rollup is a component-keyed map-side-combined aggregate.
-    * Past broadcastable N, [[graphComponentsBucketed]] is the implemented
-    * flip: src-bucketed edges, labels shuffled to them, bit-identical.
+    * the tiny dims) + one distinct; per round ONE labels-meet-edges join
+    * ([[componentsIncoming]]), the label-of-label self-join from round 2
+    * on, and one min-aggregate over their union with the labels; labels
+    * are O(N) and localCheckpoint'ed every round. The final rollup is a
+    * component-keyed map-side-combined aggregate.
     */
-  /** The label table after `rounds` synchronous min-propagation rounds —
-    * split out so the spec can pin convergence (rounds+1 is a fixed point). */
-  private[graft] def componentLabels(spark: SparkSession, dir: String,
-      rounds: Int): DataFrame =
-    componentLabelsOf(domesticEdges(spark, dir), rounds,
-      nodes = Some(domesticNodes(spark, dir)))
+  def graphComponents(spark: SparkSession, dir: String): DataFrame =
+    rollup(componentLabels(domestic(spark, dir, bucketed = false), ComponentRounds), "lbl", "component")
 
-  /** [[componentLabels]] over an ALREADY-materialized edge table — so a
-    * caller holding a checkpointed copy ([[graphModularity]] scores two
-    * partitions of the same edges) never rebuilds the 4-table edge join.
-    * The CALLER decides how the label vector meets the edges, exactly the
-    * [[superstep]] contract: `broadcastLabels = true` for the
-    * N ≪ broadcast-limit regime, `false` when the edge side arrives
-    * pre-bucketed on `src` and the labels should shuffle to it
-    * ([[graphComponentsBucketed]]). The min-propagation algebra is
-    * identical either way, which is what makes the two variants
-    * bit-identical.
-    */
-  private[graft] def componentLabelsOf(e: DataFrame, rounds: Int,
-      broadcastLabels: Boolean = true,
-      nodes: Option[DataFrame] = None): DataFrame = {
-    // With a memoized node set ([[domesticNodes]]) the init is a LAZY
-    // projection over the shared checkpoint — round 1's two references
-    // re-project in place, no dedicated init action. Without one (tests,
-    // ad-hoc edge tables) the distinct builds and checkpoints here as
-    // before.
-    var labels = nodes.map(_.select(col("node"), col("node").as("lbl")))
-      .getOrElse(e.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("lbl")).localCheckpoint())
-    for (round <- 1 to rounds) {
-      val lbls = if (broadcastLabels) broadcast(labels) else labels
+  /** [[graphComponents]] in the bucketed regime ([[Edges.meet]]). */
+  def graphComponentsBucketed(spark: SparkSession, dir: String): DataFrame =
+    rollup(componentLabels(domestic(spark, dir, bucketed = true), ComponentRounds), "lbl", "component")
+
+  /** The label table after `rounds` synchronous min-propagation rounds —
+    * split out so the spec can pin convergence (rounds+1 is a fixed point)
+    * and [[graphModularity]] can score it. */
+  private[graft] def componentLabels(g: Edges, rounds: Int): DataFrame =
+    supersteps(g.nodes.select(col("node"), col("node").as("lbl")), rounds) { (labels, round) =>
       // One aggregate per round, no fold-back join (r15): the new label is
       // min over the closed neighborhood, so the self-label rides the SAME
       // min as the incoming contributions via a union — algebraically
@@ -383,8 +387,7 @@ object Graph {
       // zero broadcast builds per round instead of an aggregate exchange
       // PLUS a broadcast of the incoming table PLUS a join stage. Every
       // node appears in `labels`, so the union preserves the node set.
-      val incoming = e.join(lbls, e("src") === labels("node"))
-        .select(col("dst").as("node"), col("lbl"))
+      val incoming = componentsIncoming(g, labels)
       // Pointer doubling (r15): label(label(node)) joins the label table
       // to itself — total, since every label value is itself a node (the
       // initial labels are identity and each round takes mins over
@@ -398,69 +401,35 @@ object Graph {
           labels.select(col("node"), col("lbl").as("mid"))
             .join(labels.select(col("node").as("mid"), col("lbl").as("dlbl")), "mid")
             .select(col("node"), col("dlbl").as("lbl")))
-      labels = contrib.unionAll(labels)
-        .groupBy("node").agg(min(col("lbl")).as("lbl"))
-        .localCheckpoint()
-    }
-    labels
-  }
+      contrib.unionAll(labels).groupBy("node").agg(min(col("lbl")).as("lbl"))
+    }.last
 
-  def graphComponents(spark: SparkSession, dir: String): DataFrame =
-    componentsRollup(componentLabels(spark, dir, ComponentRounds))
-
-  /** The shared per-label-group rollup (component / community — the caller
-    * names the key column).
+  /** The edge-touching stage of one min-propagation round: each label
+    * flows to the src node's out-neighbors. Split out (and used verbatim
+    * by the plan-shape spec and the scale bench) so the pinned plan IS the
+    * production stage, the [[labelPropIncoming]] convention.
     */
-  private def componentsRollup(labels: DataFrame, keyName: String = "component"): DataFrame =
-    labels
-      .groupBy(col("lbl").as(keyName))
+  private[graft] def componentsIncoming(g: Edges, labels: DataFrame): DataFrame =
+    g.table.join(g.meet(labels), g.table("src") === labels("node"))
+      .select(col("dst").as("node"), col("lbl"))
+
+  /** The shared per-group rollup of a loop's final state (component /
+    * community / distance ring): node count, customer/supplier split, id
+    * range, grouped on `key` renamed to `name` and ordered by it.
+    */
+  private def rollup(state: DataFrame, key: String, name: String): DataFrame =
+    state
+      .groupBy(col(key).as(name))
       .agg(count(lit(1)).as("n_nodes"),
         sum(when(col("node") < 1000000L, 1L).otherwise(0L)).as("n_customers"),
         sum(when(col("node") >= 1000000L, 1L).otherwise(0L)).as("n_suppliers"),
         min(col("node")).as("min_node"),
         max(col("node")).as("max_node"))
-      .orderBy(keyName)
+      .orderBy(name)
 
-  /** The domestic edge table persisted ONCE bucketed by `src` — the
-    * components sibling of [[bucketedTradeGraph]] (same 8-bucket layout,
-    * same exit-cleaned external-table discipline), for the regime where
-    * the label vector has outgrown broadcast.
-    */
-  private[graft] def bucketedDomesticEdges(spark: SparkSession, dir: String): String =
-    graft.Tables.memo(spark, dir, "domestic-bkt") {
-      writeBucketedEdges(domesticEdges(spark, dir), "dedges", dir)
-    }
-
-  /** Connected components for the beyond-broadcast regime (billion-node
-    * graphs): the O(E) domestic edge table is persisted ONCE bucketed by
-    * `src` ([[bucketedDomesticEdges]]), so every min-propagation round's
-    * sort-merge join reads edge bucket i directly — NO exchange ever
-    * re-shuffles the edges (plan-pinned in `PlanShapeSpec`: zero
-    * `hashpartitioning(src …)`). The only per-round movement is the O(N)
-    * label vector, shuffled to the edge table's fixed bucketing, plus the
-    * partial-aggregated incoming-min — the same GraphX/Pregel cost model
-    * flip [[graphPagerankBucketed]] made for ranks. The MERGE hint keeps
-    * the fixture-sized label vector off the broadcast path so the plan
-    * under test IS the at-scale plan. Bit-identical to
-    * [[graphComponents]] (same min-propagation algebra via
-    * [[componentLabelsOf]], same unrolled-CTE oracle), so the flip between
-    * regimes is a pure cost decision, never a semantic one — the measured
-    * broadcast↔bucketed crossover rides in `SCALEBENCH.json`.
-    */
-  def graphComponentsBucketed(spark: SparkSession, dir: String): DataFrame = {
-    val eb = spark.table(bucketedDomesticEdges(spark, dir)).hint("MERGE")
-    componentsRollup(componentLabelsOf(eb, ComponentRounds, broadcastLabels = false,
-      nodes = Some(domesticNodes(spark, dir))))
-  }
-
-  /** DuckDB oracle for [[graphComponents]]: the same K min-propagation
-    * rounds unrolled as chained CTEs (same reasoning as
-    * [[pagerankOracleSql]] — the recursive leg of WITH RECURSIVE cannot
-    * aggregate).
-    */
   /** The unrolled l1..lN pointer-doubled min-propagation rounds — shared
     * by [[componentsOracleSql]] and [[modularityOracleSql]]. Mirrors
-    * [[componentLabelsOf]] term for term: each round is one min over the
+    * [[componentLabels]] term for term: each round is one min over the
     * union of the previous labels (closed neighborhood's self part), the
     * edge-propagated labels, and — from round 2 on — the label-of-label
     * self-join (skipped in round 1 where labels are the identity map).
@@ -478,6 +447,11 @@ object Graph {
         s") u GROUP BY node)"
     }.mkString(", ")
 
+  /** DuckDB oracle for [[graphComponents]]: the same K min-propagation
+    * rounds unrolled as chained CTEs (same reasoning as
+    * [[pagerankOracleSql]] — the recursive leg of WITH RECURSIVE cannot
+    * aggregate).
+    */
   def componentsOracleSql: String = {
     "WITH base AS (SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp FROM lineitem " +
       "JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey " +
@@ -501,6 +475,21 @@ object Graph {
     */
   val LabelPropRounds = 4
 
+  /** Community detection on the domestic trade graph by [[LabelPropRounds]]
+    * synchronous label-propagation rounds, rolled up per community — the
+    * near-linear community pass that splits structure [[graphComponents]]
+    * cannot: min-propagation can only answer reachability, while plurality
+    * adoption lets densely-knit neighborhoods keep their own label against
+    * a smaller id leaking in from a thin bridge. Deterministic by
+    * construction (plurality, ties to the smallest label, fixed rounds).
+    */
+  def graphLabelProp(spark: SparkSession, dir: String): DataFrame =
+    rollup(labelPropLabels(domestic(spark, dir, bucketed = false), LabelPropRounds), "lbl", "community")
+
+  /** [[graphLabelProp]] in the bucketed regime ([[Edges.meet]]). */
+  def graphLabelPropBucketed(spark: SparkSession, dir: String): DataFrame =
+    rollup(labelPropLabels(domestic(spark, dir, bucketed = true), LabelPropRounds), "lbl", "community")
+
   /** The label table after `rounds` of synchronous label propagation
     * (Raghavan et al. 2007): each node adopts its neighbors' PLURALITY
     * label — ties broken by smallest label, isolated inputs keep their own
@@ -508,30 +497,15 @@ object Graph {
     * mode-beats-min round on a constructed fixture (the step where LPA
     * genuinely differs from [[componentLabels]]'s min-propagation).
     *
-    * Scale: per round ONE src-keyed join (broadcast labels, the
-    * [[graphPagerank]] O(N)-parameter regime), a (dst, lbl) count, a dst
-    * argmax via min(struct) — never a window over the edge set — and a
-    * left join back; localCheckpoint caps lineage exactly as components.
+    * Scale: per round ONE src-keyed join ([[labelPropIncoming]]), a
+    * (dst, lbl) count, a dst argmax via min(struct) — never a window over
+    * the edge set — and one packed min-aggregate folding the winner into
+    * the labels; localCheckpoint caps lineage exactly as components.
     */
-  private[graft] def labelPropLabels(spark: SparkSession, dir: String,
-      rounds: Int): DataFrame =
-    labelPropLabelsOf(domesticEdges(spark, dir), rounds,
-      nodes = Some(domesticNodes(spark, dir)))
-
-  /** [[labelPropLabels]] over an already-materialized edge table — the
-    * [[componentLabelsOf]] rationale, including its caller-chooses
-    * `broadcastLabels` contract. */
-  private[graft] def labelPropLabelsOf(e: DataFrame, rounds: Int,
-      broadcastLabels: Boolean = true,
-      nodes: Option[DataFrame] = None): DataFrame = {
-    // Lazy init over the memoized node set — the [[componentLabelsOf]]
-    // rationale.
-    var labels = nodes.map(_.select(col("node"), col("node").as("lbl")))
-      .getOrElse(e.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("lbl")).localCheckpoint())
-    for (_ <- 1 to rounds) {
+  private[graft] def labelPropLabels(g: Edges, rounds: Int): DataFrame =
+    supersteps(g.nodes.select(col("node"), col("node").as("lbl")), rounds) { (labels, _) =>
       // One aggregate per round, no fold-back join (r15, the
-      // [[componentLabelsOf]] union-min shape adapted to plurality):
+      // [[componentLabels]] union-min shape adapted to plurality):
       // `coalesce(new_lbl, lbl)` is a priority-min — the incoming winner
       // beats the self-label wherever one exists — so pack
       // priority·2³² | label into one int64 (labels are node ids < 2²¹ —
@@ -542,66 +516,28 @@ object Graph {
       // keeps the round in codegen'd HashAggregate with map-side combine.
       // Every label passes through the self-label side, so the bound is
       // CHECKED there, in the packing projection — no extra job.
-      val best = labelPropIncoming(e, labels, broadcastLabels)
+      val best = labelPropIncoming(g, labels)
         .select(col("inode").as("node"), col("new_lbl").as("pk"))
       val selfPk = when(col("lbl") >= 0 && col("lbl") < (1L << 32), col("lbl") + lit(1L << 32))
         .otherwise(raise_error(concat(
           lit("label-prop packs labels into 32 bits, saw "), col("lbl").cast("string"))))
-      labels = best
+      best
         .unionAll(labels.select(col("node"), selfPk.as("pk")))
         .groupBy("node").agg(min(col("pk")).as("pk"))
         .select(col("node"), col("pk").bitwiseAND(lit((1L << 32) - 1)).as("lbl"))
-        .localCheckpoint()
-    }
-    labels
-  }
+    }.last
 
   /** The edge-touching stage of one plurality round — split out (and used
-    * verbatim by the plan-shape spec) so the pinned broadcast-labels /
-    * no-edge-reshuffle plan IS the production stage, not a test-side copy.
-    * `broadcastLabels = false` is the bucketed-edge regime: the labels
-    * shuffle to the edges' fixed src-bucketing instead
-    * ([[graphLabelPropBucketed]]).
+    * verbatim by the plan-shape spec) so the pinned plan IS the production
+    * stage, not a test-side copy.
     */
-  private[graft] def labelPropIncoming(e: DataFrame, labels: DataFrame,
-      broadcastLabels: Boolean = true): DataFrame = {
-    val lbls = if (broadcastLabels) broadcast(labels) else labels
-    e.join(lbls, e("src") === labels("node"))
+  private[graft] def labelPropIncoming(g: Edges, labels: DataFrame): DataFrame =
+    g.table.join(g.meet(labels), g.table("src") === labels("node"))
       .groupBy(col("dst").as("inode"), col("lbl").as("nlbl"))
       .agg(count(lit(1)).as("c"))
       .groupBy("inode")
       .agg(min(struct((-col("c")).as("negc"), col("nlbl").as("l"))).as("m"))
       .select(col("inode"), col("m.l").as("new_lbl"))
-  }
-
-  /** Community detection on the domestic trade graph by [[LabelPropRounds]]
-    * synchronous label-propagation rounds, rolled up per community — the
-    * near-linear community pass that splits structure [[graphComponents]]
-    * cannot: min-propagation can only answer reachability, while plurality
-    * adoption lets densely-knit neighborhoods keep their own label against
-    * a smaller id leaking in from a thin bridge. Deterministic by
-    * construction (plurality, ties to the smallest label, fixed rounds).
-    */
-  def graphLabelProp(spark: SparkSession, dir: String): DataFrame =
-    componentsRollup(labelPropLabels(spark, dir, LabelPropRounds), "community")
-
-  /** Label propagation for the beyond-broadcast regime — the third
-    * bucketed-graph adoption after [[graphPagerankBucketed]] and
-    * [[graphComponentsBucketed]], on the same once-written
-    * [[bucketedDomesticEdges]] table: each plurality round's edge join is
-    * a MERGE-hinted sort-merge join reading edge bucket i directly (zero
-    * edge re-shuffle — the `labelPropIncoming` stage plan-pins exactly
-    * like the components round), only the O(N) label vector moves. Same
-    * plurality algebra via the `broadcastLabels` flag, so the flip is a
-    * pure cost decision — bit-identical to [[graphLabelProp]] on the same
-    * unrolled-CTE oracle.
-    */
-  def graphLabelPropBucketed(spark: SparkSession, dir: String): DataFrame = {
-    val eb = spark.table(bucketedDomesticEdges(spark, dir)).hint("MERGE")
-    componentsRollup(
-      labelPropLabelsOf(eb, LabelPropRounds, broadcastLabels = false,
-        nodes = Some(domesticNodes(spark, dir))), "community")
-  }
 
   /** DuckDB oracle for [[graphLabelProp]] — the plurality argmax per round
     * rendered as a windowed rank over the (dst, label) counts, unrolled
@@ -660,7 +596,11 @@ object Graph {
     * 10¹² at sf0.1 and ≈ 10¹⁸ at 100× — inside int64 either way.
     */
   def graphModularity(spark: SparkSession, dir: String): DataFrame = {
-    val e = domesticEdges(spark, dir)
+    // Both memos (edges and the shared node set) resolve HERE, before the
+    // two chain threads below start, so a memo build never races inside
+    // the chains.
+    val g = domestic(spark, dir, bucketed = false)
+    val e = g.table
     val totals = e.agg(count(lit(1)).as("two_m"))
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     def score(method: String, labels: DataFrame): DataFrame = {
@@ -680,18 +620,15 @@ object Graph {
           col("n_nodes"), col("e_c"), col("d_c"), col("two_m"),
           (col("e_c") * col("two_m") - col("d_c") * col("d_c")).as("contrib_num"))
     }
-    // The two label chains are INDEPENDENT serial job chains (8 + 4 eager
+    // The two label chains are INDEPENDENT serial job chains (4 + 4 eager
     // checkpoint rounds over the same frozen edge table) — build them from
     // two driver threads (guide §2.6: jobs are only sequential because the
     // driver submits them sequentially), so one chain's per-round job
     // latency hides behind the other's tasks. Same plans, same results;
     // measured r16: 53 jobs unchanged, warm wall 3.4 → 2.4 s at 32 cores.
-    // The shared node memo is resolved BEFORE the two threads start so the
-    // memo build never races inside the chains.
-    val nodes = Some(domesticNodes(spark, dir))
     val chains = graft.Tables.inParallel(spark)(
-      () => componentLabelsOf(e, ComponentRounds, nodes = nodes),
-      () => labelPropLabelsOf(e, LabelPropRounds, nodes = nodes))
+      () => componentLabels(g, ComponentRounds),
+      () => labelPropLabels(g, LabelPropRounds))
     score("components", chains(0))
       .unionAll(score("label_prop", chains(1)))
       .orderBy("method", "community")
@@ -744,104 +681,58 @@ object Graph {
     * The seed arrives as a 1-row broadcast subquery, not a collected
     * driver value.
     *
-    * Scale: identical regime to [[componentLabels]] — the O(E) edge table
+    * Scale: identical regime to [[graphComponents]] — the O(E) edge table
     * builds once (nation dims BROADCAST) and never re-shuffles; per round
-    * ONE broadcast-labels join + a dst min-aggregate + a left join back,
-    * all O(N) state, localCheckpoint'ed to cap lineage. Past broadcastable
-    * N, [[graphBfsBucketed]] is the implemented flip: src-bucketed edges,
-    * the distance vector shuffled to them, bit-identical.
+    * ONE distance-meets-edges join ([[bfsRelax]]) + one min-aggregate over
+    * its union with the distances, all O(N) state, localCheckpoint'ed to
+    * cap lineage.
     */
-  private[graft] def bfsDistances(spark: SparkSession, dir: String,
-      rounds: Int): DataFrame =
-    bfsDistancesOf(domesticEdges(spark, dir), rounds,
-      nodes = Some(domesticNodes(spark, dir)))
+  def graphBfs(spark: SparkSession, dir: String): DataFrame =
+    rollup(bfsDistances(domestic(spark, dir, bucketed = false), BfsRounds)
+      .filter(col("d") < Unreached), "d", "dist")
 
-  /** [[bfsDistances]] over an already-materialized edge table — the
-    * [[componentLabelsOf]] rationale, including its caller-chooses
-    * `broadcastLabels` contract (`false` = the src-bucketed edge regime
-    * of [[graphBfsBucketed]], where the O(N) distance vector shuffles to
-    * the edges' fixed bucketing instead).
-    */
-  private[graft] def bfsDistancesOf(e: DataFrame, rounds: Int,
-      broadcastLabels: Boolean = true,
-      nodes: Option[DataFrame] = None): DataFrame = {
+  /** [[graphBfs]] in the bucketed regime ([[Edges.meet]]). */
+  def graphBfsBucketed(spark: SparkSession, dir: String): DataFrame =
+    rollup(bfsDistances(domestic(spark, dir, bucketed = true), BfsRounds)
+      .filter(col("d") < Unreached), "d", "dist")
+
+  /** The distance vector after `rounds` relaxation rounds — split out so
+    * the spec can pin convergence (rounds+1 is a fixed point). */
+  private[graft] def bfsDistances(g: Edges, rounds: Int): DataFrame = {
     // Seed = the lowest-keyed customer IN THE NODE SET — seeding on a
     // customer with no domestic trade (not a node) would leave every
-    // distance at the sentinel and the output empty. Both the seed scan
-    // and the init's node set read the memoized [[domesticNodes]] when
-    // provided (the distinct-src set IS the node set, so min over it
-    // equals min over the raw src stream).
-    val seedSrc = nodes.map(_.select(col("node").as("cnode")))
-      .getOrElse(e.select(col("src").as("cnode")))
-    val seeds = seedSrc.filter(col("cnode") < 1000000L)
+    // distance at the sentinel and the output empty.
+    val seeds = g.nodes.select(col("node").as("cnode"))
+      .filter(col("cnode") < 1000000L)
       .agg(min(col("cnode")).as("seed"))
-    var dist = nodes.getOrElse(e.select(col("src").as("node")).distinct())
+    val init = g.nodes
       .join(seeds, col("node") === col("seed"), "left")
       .select(col("node"),
         when(col("seed").isNotNull, 0L).otherwise(Unreached).as("d"))
       .localCheckpoint()
-    // One aggregate per round, no fold-back join (r15): Bellman-Ford's
-    // dist_i(v) = min(dist_{i-1}(v), 1 + min over in-neighbors) is a
-    // single min over the union of the self-distance and the relaxed
-    // contributions — same union-min shape as [[componentLabelsOf]],
-    // one exchange per round instead of aggregate + broadcast + join.
-    def round(d: DataFrame): DataFrame = {
-      val relaxed = bfsRelax(e, d, broadcastLabels)
-        .select(col("inode").as("node"), col("in_d").as("d"))
-      relaxed.unionAll(d).groupBy("node").agg(min(col("d")).as("d"))
-    }
     // NOT fused (r16): the [[graphPagerank]] two-rounds-per-action fusion
     // was A/B'd here too — job count stayed flat (31→31; AQE stage jobs
     // replace the saved checkpoint actions) and task count ROSE (the
     // relax-join + union diamond over the inner round is not fully
     // exchange-reused), so per-round checkpoints stay.
-    for (_ <- 1 to rounds) {
-      dist = round(dist).localCheckpoint()
-    }
-    dist
+    supersteps(init, rounds) { (dist, _) =>
+      // One aggregate per round, no fold-back join (r15): Bellman-Ford's
+      // dist_i(v) = min(dist_{i-1}(v), 1 + min over in-neighbors) is a
+      // single min over the union of the self-distance and the relaxed
+      // contributions — the [[componentLabels]] union-min shape, one
+      // exchange per round instead of aggregate + broadcast + join.
+      bfsRelax(g, dist).select(col("inode").as("node"), col("in_d").as("d"))
+        .unionAll(dist).groupBy("node").agg(min(col("d")).as("d"))
+    }.last
   }
 
   /** The edge-touching stage of one Bellman-Ford relaxation round — split
     * out (and used verbatim by the plan-shape spec) so the pinned plan IS
     * the production stage, the [[labelPropIncoming]] convention.
     */
-  private[graft] def bfsRelax(e: DataFrame, dist: DataFrame,
-      broadcastLabels: Boolean = true): DataFrame = {
-    val d = if (broadcastLabels) broadcast(dist) else dist
-    e.join(d, e("src") === dist("node"))
+  private[graft] def bfsRelax(g: Edges, dist: DataFrame): DataFrame =
+    g.table.join(g.meet(dist), g.table("src") === dist("node"))
       .groupBy(col("dst").as("inode")).agg(min(col("d") + 1L).as("in_d"))
-  }
-
-  /** The shared ring-by-ring rollup of a converged distance vector. */
-  private def bfsRollup(dist: DataFrame): DataFrame =
-    dist
-      .filter(col("d") < Unreached)
-      .groupBy(col("d").as("dist"))
-      .agg(count(lit(1)).as("n_nodes"),
-        sum(when(col("node") < 1000000L, 1L).otherwise(0L)).as("n_customers"),
-        sum(when(col("node") >= 1000000L, 1L).otherwise(0L)).as("n_suppliers"),
-        min(col("node")).as("min_node"),
-        max(col("node")).as("max_node"))
-      .orderBy("dist")
-
-  def graphBfs(spark: SparkSession, dir: String): DataFrame =
-    bfsRollup(bfsDistances(spark, dir, BfsRounds))
-
-  /** BFS for the beyond-broadcast regime — the fourth bucketed-graph
-    * adoption, on the same once-written [[bucketedDomesticEdges]] table:
-    * each Bellman-Ford round's relaxation join is a MERGE-hinted
-    * sort-merge join reading edge bucket i directly (zero edge re-shuffle,
-    * plan-pinned on the [[bfsRelax]] production stage itself), only the
-    * O(N) distance vector moves, shuffled to the edges' fixed bucketing.
-    * Same relaxation algebra via the shared `broadcastLabels` flag, so the
-    * flip is a pure cost decision — bit-identical to [[graphBfs]] on the
-    * same unrolled-CTE oracle.
-    */
-  def graphBfsBucketed(spark: SparkSession, dir: String): DataFrame = {
-    val eb = spark.table(bucketedDomesticEdges(spark, dir)).hint("MERGE")
-    bfsRollup(bfsDistancesOf(eb, BfsRounds, broadcastLabels = false,
-      nodes = Some(domesticNodes(spark, dir))))
-  }
 
   /** DuckDB oracle for [[graphBfs]]: the same fixed Bellman-Ford rounds as
     * unrolled CTEs over the same edge construction. */
@@ -870,29 +761,6 @@ object Graph {
     * converged well before this (pinned in the oracle's unrolled CTEs). */
   val KcoreRounds = 6
 
-  /** 2-core decomposition by synchronous iterative peeling (Matula &
-    * Beck 1983, batch-synchronous form): each round drops every node whose
-    * CURRENT degree is below k, then keeps only edges with both endpoints
-    * surviving; the fixed point is the k-core — the maximal subgraph where
-    * everyone keeps ≥ k neighbors. The substrate is the UNIPARTITE part
-    * co-occurrence graph (support ≥ 2 basket pairs, the
-    * [[graphTriangles]] edge set) — on the bipartite trade graph the peel
-    * converges in one round (supplier degrees sit two orders above any
-    * customer-scale k), while here the cascade is real and measured:
-    * dropping a pendant part lowers its neighbors' degrees, which peels
-    * them next round (583 → 87 → 13 → 5 → 3 surviving parts at sf0.1).
-    * k=2 is the canonical cycle-core: trees and pendant chains dissolve,
-    * cycles survive. Output: one row per round with surviving node/edge
-    * counts — the peeling TRAJECTORY, which pins the whole recurrence, not
-    * just its fixed point.
-    *
-    * Scale: each round is ONE degree aggregate (map-side combined, O(N)
-    * result) + a semi-join of edges against survivors — the same
-    * per-superstep shape as PageRank, with a localCheckpoint per round
-    * capping plan depth. Round count is O(peel depth), not O(N);
-    * degeneracy ordering at 100 TB would batch by degree buckets exactly
-    * like this, k at a time.
-    */
   /** The undirected part co-occurrence graph (support ≥ 2 basket pairs,
     * the [[graphTriangles]] edge construction) as a DIRECTED-both-ways edge
     * table — the graph LOAD for part-space analytics, memoized per
@@ -918,16 +786,6 @@ object Graph {
         .localCheckpoint()
     }
 
-  /** The part co-occurrence graph persisted ONCE bucketed by `src` — the
-    * k-core sibling of [[bucketedDomesticEdges]] (same 8-bucket layout,
-    * same exit-cleaned external-table discipline), for the regime where
-    * the surviving-node vector has outgrown broadcast.
-    */
-  private[graft] def bucketedPartsCoGraph(spark: SparkSession, dir: String): String =
-    graft.Tables.memo(spark, dir, "parts-cograph-bkt") {
-      writeBucketedEdges(partsCoGraph(spark, dir), "pedges", dir)
-    }
-
   /** [[domesticNodes]] for the part co-occurrence graph — the k-core peel's
     * round-0 alive set (same memo discipline).
     */
@@ -936,29 +794,39 @@ object Graph {
       partsCoGraph(spark, dir).select(col("src").as("node")).distinct().localCheckpoint()
     }
 
-  /** The edge-touching stage of one peel round in the STATIC-edge
-    * formulation ([[graphKcoreBucketed]]): alive-in-neighbor counts for
-    * every node — deg(v) = #{s ∈ alive : (s,v) ∈ E} over the ORIGINAL
-    * edge table. Split out (and used verbatim by the plan-shape spec) so
-    * the pinned plan IS the production stage, the [[labelPropIncoming]]
-    * convention; `broadcastAlive = false` is the bucketed-edge regime
-    * where the O(N) alive vector shuffles to the edges' fixed bucketing.
+  /** 2-core decomposition by synchronous iterative peeling (Matula &
+    * Beck 1983, batch-synchronous form): each round drops every node whose
+    * CURRENT degree is below k, then keeps only edges with both endpoints
+    * surviving; the fixed point is the k-core — the maximal subgraph where
+    * everyone keeps ≥ k neighbors. The substrate is the UNIPARTITE part
+    * co-occurrence graph (support ≥ 2 basket pairs, the
+    * [[graphTriangles]] edge set) — on the bipartite trade graph the peel
+    * converges in one round (supplier degrees sit two orders above any
+    * customer-scale k), while here the cascade is real and measured:
+    * dropping a pendant part lowers its neighbors' degrees, which peels
+    * them next round (583 → 87 → 13 → 5 → 3 surviving parts at sf0.1).
+    * k=2 is the canonical cycle-core: trees and pendant chains dissolve,
+    * cycles survive. Output: one row per round with surviving node/edge
+    * counts — the peeling TRAJECTORY, which pins the whole recurrence, not
+    * just its fixed point.
+    *
+    * Scale: each round ([[kcorePeel]]) is ONE degree aggregate (map-side
+    * combined, O(N) result) + a semi-join of edges against survivors — the
+    * same per-superstep shape as PageRank, with a localCheckpoint per round
+    * capping plan depth. Round count is O(peel depth), not O(N);
+    * degeneracy ordering at 100 TB would batch by degree buckets exactly
+    * like this, k at a time.
     */
-  private[graft] def kcoreAliveDeg(e: DataFrame, alive: DataFrame,
-      broadcastAlive: Boolean = true): DataFrame = {
-    val a = if (broadcastAlive) broadcast(alive) else alive
-    e.join(a, e("src") === alive("node"))
-      .groupBy(col("dst").as("node")).agg(count(lit(1)).as("deg"))
-  }
+  def graphKcore(spark: SparkSession, dir: String, kCore: Int = 2): DataFrame =
+    kcoreTrajectoryRewrite(partsCoGraph(spark, dir), kCore)
 
-  /** k-core for the beyond-broadcast regime — the fifth bucketed-graph
-    * adoption, and the one where the flip changes the recurrence SHAPE,
-    * not just the join strategy: [[graphKcore]] REWRITES the edge table
-    * every round (two endpoint semi-joins + a checkpoint), which is
-    * exactly what a fixed bucketed layout cannot absorb — rewriting
-    * destroys the bucketing. The static-edge formulation keeps the O(E)
-    * table untouched in its buckets and iterates only the O(N) ALIVE
-    * vector:
+  /** k-core for the beyond-broadcast regime — the one bucketed flip that
+    * changes the recurrence SHAPE, not just the join strategy:
+    * [[graphKcore]] REWRITES the edge table every round (two endpoint
+    * semi-joins + a checkpoint), which is exactly what a fixed bucketed
+    * layout cannot absorb — rewriting destroys the bucketing. The
+    * static-edge formulation keeps the O(E) table untouched in its buckets
+    * and iterates only the O(N) ALIVE vector:
     *
     *   deg_i(v) = #{s ∈ alive_{i-1} : (s,v) ∈ E}   ([[kcoreAliveDeg]]:
     *              one co-partitioned merge join reading edge bucket i
@@ -981,81 +849,81 @@ object Graph {
     * plan-pinned in `PlanShapeSpec`.
     */
   def graphKcoreBucketed(spark: SparkSession, dir: String, kCore: Int = 2): DataFrame =
-    kcoreTrajectoryStatic(
-      spark.table(bucketedPartsCoGraph(spark, dir)).hint("MERGE"),
-      kCore, broadcastAlive = false, nodes = Some(partsNodes(spark, dir)))
-
-  /** The static-edge alive-vector peel over a given edge table — the
-    * [[graphKcoreBucketed]] body, parameterized ([[kcoreTrajectoryRewrite]]
-    * rationale) so the scale bench can run both shapes on identical
-    * inflated edges.
-    */
-  private[graft] def kcoreTrajectoryStatic(e: DataFrame, kCore: Int,
-      broadcastAlive: Boolean = true,
-      nodes: Option[DataFrame] = None): DataFrame = {
-    // Only `deg` is checkpointed (r16): `alive` is a cheap narrow filter
-    // over the checkpointed deg RDD, so leaving it LAZY keeps lineage at
-    // depth one while dropping one materializing action per round (7 of
-    // the query's ~14 actions — JobTrace: 51 → 37 jobs); each of its two
-    // consumers (the relax join, the round summary) just re-filters the
-    // in-memory deg blocks. Same for the round-0 distinct, which the first
-    // deg checkpoint materializes inline.
-    var deg = kcoreAliveDeg(e,
-      nodes.getOrElse(e.select(col("src").as("node")).distinct()),
-      broadcastAlive).localCheckpoint()
-    val summaries = (1 to KcoreRounds).map { round =>
-      val alive = deg.filter(col("deg") >= kCore).select("node")
-      deg = kcoreAliveDeg(e, alive, broadcastAlive).localCheckpoint()
-      // deg now counts alive in-neighbors for EVERY node; restricted to
-      // the alive set it reads off this round's surviving subgraph:
-      //   n_parts = alive nodes with ≥ 1 alive neighbor (= distinct src
-      //             of the rewrite's e_round, by both-ways symmetry)
-      //   n_edges = Σ_{v ∈ alive} deg(v) (= |e_round|, each directed
-      //             edge counted once at its dst endpoint)
-      deg.join(alive.withColumnRenamed("node", "anode"), col("node") === col("anode"))
-        .agg(count(lit(1)).as("n_parts"),
-          coalesce(sum(col("deg")), lit(0L)).as("n_edges_directed"))
-        .select(lit(round.toLong).as("round"), col("n_parts"),
-          col("n_edges_directed"))
-    }
-    summaries.reduce(_ unionAll _).orderBy("round")
-  }
-
-  def graphKcore(spark: SparkSession, dir: String, kCore: Int = 2): DataFrame =
-    kcoreTrajectoryRewrite(partsCoGraph(spark, dir), kCore)
+    kcoreTrajectoryStatic(parts(spark, dir, bucketed = true), kCore)
 
   /** The rewrite-recurrence peel over a given starting edge table — the
     * [[graphKcore]] body, parameterized so the scale bench can adjudicate
     * the two recurrence SHAPES on identical inflated edges.
+    */
+  private[graft] def kcoreTrajectoryRewrite(e0: DataFrame, kCore: Int): DataFrame =
+    trajectory(supersteps(e0, KcoreRounds)((e, _) => kcorePeel(e, kCore)).tail.map(
+      _.agg(countDistinct(col("src")).as("n_parts"), count(lit(1)).as("n_edges_directed"))))
+
+  /** One rewrite peel round: drop every edge with an endpoint of degree
+    * < k. Split out (and used verbatim by the plan-shape spec) so the
+    * pinned plan IS the production stage.
     *
-    * Per-round: the survivor set is O(N) ≪ O(E) and BROADCASTS into both
-    * endpoint semi-joins (the [[graphPagerank]] rank-vector argument — a
+    * The survivor set is O(N) ≪ O(E) and BROADCASTS into both endpoint
+    * semi-joins (the [[Edges.meet]] broadcast regime, always: a
     * checkpointed table has no stats, so without the hint both joins went
-    * sort-merge; measured 0.9 s → 0.3 s per round at sf0.1; beyond
-    * broadcast scale [[graphKcoreBucketed]] is the implemented flip —
-    * note it must also change the recurrence shape, since the per-round
-    * edge REWRITE here destroys a fixed bucketing). localCheckpoint per
-    * round caps plan depth and materializes each round exactly once — a
+    * sort-merge; measured 0.9 s → 0.3 s per round at sf0.1). The driver's
+    * localCheckpoint per round materializes each round exactly once — a
     * lazy persist chain instead let AQE's eager broadcast-stage
     * materialization race ahead of the unfilled caches and recompute the
     * whole prefix per round (measured 21 s vs 3 s steady-state).
     */
-  private[graft] def kcoreTrajectoryRewrite(e0: DataFrame, kCore: Int): DataFrame = {
-    var e = e0
-    val summaries = (1 to KcoreRounds).map { round =>
-      val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= kCore).select("src")
-      e = e.join(broadcast(keep), "src")
-        .join(broadcast(keep.withColumnRenamed("src", "dst")), "dst")
-        .select("src", "dst").localCheckpoint()
-      e.agg(
-        countDistinct(col("src")).as("n_parts"),
-        count(lit(1)).as("n_edges_directed"))
-        .select(lit(round.toLong).as("round"), col("n_parts"),
-          col("n_edges_directed"))
-    }
-    summaries.reduce(_ unionAll _).orderBy("round")
+  private[graft] def kcorePeel(e: DataFrame, kCore: Int): DataFrame = {
+    val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
+      .filter(col("deg") >= kCore).select("src")
+    e.join(broadcast(keep), "src")
+      .join(broadcast(keep.withColumnRenamed("src", "dst")), "dst")
+      .select("src", "dst")
   }
+
+  /** The static-edge alive-vector peel over a given edge value — the
+    * [[graphKcoreBucketed]] body, parameterized so the scale bench can run
+    * both shapes on identical inflated edges.
+    */
+  private[graft] def kcoreTrajectoryStatic(g: Edges, kCore: Int): DataFrame = {
+    def alive(deg: DataFrame) = deg.filter(col("deg") >= kCore).select("node")
+    // Only `deg` is checkpointed (r16): `alive` is a cheap narrow filter
+    // over the checkpointed deg RDD, so leaving it LAZY keeps lineage at
+    // depth one while dropping one materializing action per round (7 of
+    // the query's ~14 actions — JobTrace: 51 → 37 jobs); each of its two
+    // consumers (the next round's join, the round summary) just re-filters
+    // the in-memory deg blocks. Same for the round-0 node set, which the
+    // eager round-0 deg checkpoint materializes inline.
+    val degs = supersteps(kcoreAliveDeg(g, g.nodes).localCheckpoint(), KcoreRounds)(
+      (deg, _) => kcoreAliveDeg(g, alive(deg)))
+    // deg_i counts alive in-neighbors for EVERY node; restricted to alive_i
+    // it reads off round i's surviving subgraph:
+    //   n_parts = alive nodes with ≥ 1 alive neighbor (= distinct src
+    //             of the rewrite's e_i, by both-ways symmetry)
+    //   n_edges = Σ_{v ∈ alive} deg(v) (= |e_i|, each directed edge
+    //             counted once at its dst endpoint)
+    trajectory((1 to KcoreRounds).map { i =>
+      degs(i).join(alive(degs(i - 1)).withColumnRenamed("node", "anode"), col("node") === col("anode"))
+        .agg(count(lit(1)).as("n_parts"),
+          coalesce(sum(col("deg")), lit(0L)).as("n_edges_directed"))
+    })
+  }
+
+  /** The edge-touching stage of one static-edge peel round: alive-in-
+    * neighbor counts for every node — deg(v) = #{s ∈ alive : (s,v) ∈ E}
+    * over the ORIGINAL edge table. Split out (and used verbatim by the
+    * plan-shape spec) so the pinned plan IS the production stage, the
+    * [[labelPropIncoming]] convention.
+    */
+  private[graft] def kcoreAliveDeg(g: Edges, alive: DataFrame): DataFrame =
+    g.table.join(g.meet(alive), g.table("src") === alive("node"))
+      .groupBy(col("dst").as("node")).agg(count(lit(1)).as("deg"))
+
+  /** A peel trajectory from its per-round (n_parts, n_edges_directed)
+    * summaries: one row per round, numbered from 1. */
+  private def trajectory(summaries: Seq[DataFrame]): DataFrame =
+    summaries.zipWithIndex.map { case (s, i) =>
+      s.select(lit(i + 1L).as("round"), col("n_parts"), col("n_edges_directed"))
+    }.reduce(_ unionAll _).orderBy("round")
 
   /** DuckDB oracle for [[graphKcore]]: the same peel rounds as unrolled
     * materialized CTEs over the same co-occurrence edge construction. */

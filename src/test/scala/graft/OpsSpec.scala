@@ -1264,9 +1264,16 @@ class OpsSpec extends SparkSpec {
   }
 
   test("bucketed pagerank is bit-identical to the broadcast variant") {
-    val a = Graph.graphPagerank(spark, sf).collect().toSeq
-    val b = Graph.graphPagerankBucketed(spark, sf).collect().toSeq
-    assert(a == b, "the two join regimes must agree bit-for-bit (integer algebra)")
+    // Every loop family's broadcast/bucketed pair, not PageRank alone: each
+    // pair is one round body over two `Edges.meet` regimes (k-core also
+    // swaps the rewrite recurrence for the static-edge one).
+    for (q <- Seq("graph_pagerank", "graph_components", "graph_label_prop", "graph_bfs",
+        "graph_kcore")) {
+      val a = SparkEntry.queries(q)(spark, sf).collect().toSeq
+      val b = SparkEntry.queries(s"${q}_bucketed")(spark, sf).collect().toSeq
+      assert(a.nonEmpty, s"$q is empty at fixture scale")
+      assert(a == b, s"$q: the two join regimes must agree bit-for-bit (integer algebra)")
+    }
   }
 
   test("graphComponents splits a constructed two-nation fixture exactly") {
@@ -1418,9 +1425,9 @@ class OpsSpec extends SparkSpec {
   }
 
   test("graphBfs distances are converged, deep, and bipartite at fixture scale") {
-    val a = Graph.bfsDistances(spark, sf, Graph.BfsRounds)
+    val a = Graph.bfsDistances(Graph.domestic(spark, sf, bucketed = false), Graph.BfsRounds)
       .orderBy("node").collect().toSeq
-    val b = Graph.bfsDistances(spark, sf, Graph.BfsRounds + 1)
+    val b = Graph.bfsDistances(Graph.domestic(spark, sf, bucketed = false), Graph.BfsRounds + 1)
       .orderBy("node").collect().toSeq
     assert(a == b, "an extra relaxation round changed distances — not converged")
     val rings = Graph.graphBfs(spark, sf).collect()
@@ -1508,7 +1515,7 @@ class OpsSpec extends SparkSpec {
     import spark.implicits._
     val big = (1L << 32) + 5L
     val e = Seq((1L, big), (big, 1L)).toDF("src", "dst")
-    val msg = failureText(Graph.labelPropLabelsOf(e, rounds = 1).collect())
+    val msg = failureText(Graph.labelPropLabels(Graph.Edges.of(e), rounds = 1).collect())
     assert(msg.contains("label-prop packs labels into 32 bits"), msg)
   }
 
@@ -1561,11 +1568,11 @@ class OpsSpec extends SparkSpec {
   }
 
   test("graphComponents labels are converged at fixture scale (extra round is a fixed point)") {
-    val a = Graph.componentLabels(spark, sf, Graph.ComponentRounds)
+    val a = Graph.componentLabels(Graph.domestic(spark, sf, bucketed = false), Graph.ComponentRounds)
       .orderBy("node").collect().toSeq
-    val b = Graph.componentLabels(spark, sf, Graph.ComponentRounds + 1)
+    val b = Graph.componentLabels(Graph.domestic(spark, sf, bucketed = false), Graph.ComponentRounds + 1)
       .orderBy("node").collect().toSeq
-    assert(a == b, "a 9th min-propagation round changed labels — not converged")
+    assert(a == b, "an extra min-propagation round changed labels — not converged")
     assert(Graph.graphComponents(spark, sf).count() > 1,
       "fixture collapsed to one component — domestic restriction not fragmenting")
   }
@@ -2427,10 +2434,10 @@ class OpsSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     Seq((11L, 0), (12L, 0), (19L, 0)).toDF("s_suppkey", "s_nationkey")
       .write.mode("overwrite").parquet(s"$dir/supplier.parquet")
-    val lpa = Graph.labelPropLabels(spark, dir, 2).collect()
+    val lpa = Graph.labelPropLabels(Graph.domestic(spark, dir, bucketed = false), 2).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(lpa(1000019L) == 1000012L, s"plurality must beat the smaller minority label: $lpa")
-    val minProp = Graph.componentLabels(spark, dir, 2).collect()
+    val minProp = Graph.componentLabels(Graph.domestic(spark, dir, bucketed = false), 2).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(minProp(1000019L) == 1L,
       s"min-propagation reaches label 1 via c1 in two rounds: $minProp")

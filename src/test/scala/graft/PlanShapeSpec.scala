@@ -380,10 +380,10 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("bucketed pagerank superstep never re-shuffles the edge table") {
-    val eb = spark.table(graft.ops.Graph.bucketedTradeGraph(spark, sf)).hint("MERGE")
-    val ranks = eb.select(col("src").as("node")).distinct()
+    val g = graft.ops.Graph.trade(spark, sf, bucketed = true)
+    val ranks = g.table.select(col("src").as("node")).distinct()
       .select(col("node"), lit(graft.ops.Graph.Scale).as("pr")).localCheckpoint()
-    val step = graft.ops.Graph.superstep(eb, ranks)
+    val step = graft.ops.Graph.superstep(g, ranks)
     step.count() // materialize through AQE so the final plan is inspectable
     val p = step.queryExecution.executedPlan.toString
     assert(p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"),
@@ -395,13 +395,12 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("bucketed components round never re-shuffles the edge table") {
-    val eb = spark.table(graft.ops.Graph.bucketedDomesticEdges(spark, sf)).hint("MERGE")
-    val labels = eb.select(col("src").as("node")).distinct()
+    val g = graft.ops.Graph.domestic(spark, sf, bucketed = true)
+    val labels = g.table.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl")).localCheckpoint()
-    // One min-propagation round's incoming-min join — the per-round edge
-    // touch of graph_components_bucketed.
-    val incoming = eb.join(labels, eb("src") === labels("node"))
-      .groupBy(col("dst")).agg(org.apache.spark.sql.functions.min(col("lbl")).as("in_lbl"))
+    // The PRODUCTION round's edge stage (componentsIncoming) — the
+    // per-round edge touch of graph_components_bucketed.
+    val incoming = graft.ops.Graph.componentsIncoming(g, labels)
     incoming.count() // materialize through AQE so the final plan is inspectable
     val p = incoming.queryExecution.executedPlan.toString
     assert(p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"),
@@ -413,10 +412,10 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("bucketed label-prop round never re-shuffles the edge table") {
-    val eb = spark.table(graft.ops.Graph.bucketedDomesticEdges(spark, sf)).hint("MERGE")
-    val labels = eb.select(col("src").as("node")).distinct()
+    val g = graft.ops.Graph.domestic(spark, sf, bucketed = true)
+    val labels = g.table.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl")).localCheckpoint()
-    val best = graft.ops.Graph.labelPropIncoming(eb, labels, broadcastLabels = false)
+    val best = graft.ops.Graph.labelPropIncoming(g, labels)
     best.count() // materialize through AQE so the final plan is inspectable
     val p = best.queryExecution.executedPlan.toString
     assert(p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"),
@@ -428,10 +427,10 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("bucketed BFS relaxation round never re-shuffles the edge table") {
-    val eb = spark.table(graft.ops.Graph.bucketedDomesticEdges(spark, sf)).hint("MERGE")
-    val dist = eb.select(col("src").as("node")).distinct()
+    val g = graft.ops.Graph.domestic(spark, sf, bucketed = true)
+    val dist = g.table.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("d")).localCheckpoint()
-    val relaxed = graft.ops.Graph.bfsRelax(eb, dist, broadcastLabels = false)
+    val relaxed = graft.ops.Graph.bfsRelax(g, dist)
     relaxed.count() // materialize through AQE so the final plan is inspectable
     val p = relaxed.queryExecution.executedPlan.toString
     assert(p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"),
@@ -443,9 +442,9 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("bucketed k-core alive-degree round never re-shuffles the edge table") {
-    val eb = spark.table(graft.ops.Graph.bucketedPartsCoGraph(spark, sf)).hint("MERGE")
-    val alive = eb.select(col("src").as("node")).distinct().localCheckpoint()
-    val deg = graft.ops.Graph.kcoreAliveDeg(eb, alive, broadcastAlive = false)
+    val g = graft.ops.Graph.parts(spark, sf, bucketed = true)
+    val alive = g.table.select(col("src").as("node")).distinct().localCheckpoint()
+    val deg = graft.ops.Graph.kcoreAliveDeg(g, alive)
     deg.count() // materialize through AQE so the final plan is inspectable
     val p = deg.queryExecution.executedPlan.toString
     assert(p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"),
@@ -506,12 +505,8 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("kcore round joins broadcast the survivor set — the edge table never re-shuffles") {
-    val e = graft.ops.Graph.partsCoGraph(spark, sf)
-    val keep = e.groupBy("src").agg(org.apache.spark.sql.functions.count(lit(1)).as("deg"))
-      .filter(col("deg") >= 2).select("src")
-    val round = e.join(org.apache.spark.sql.functions.broadcast(keep), "src")
-      .join(org.apache.spark.sql.functions.broadcast(keep.withColumnRenamed("src", "dst")), "dst")
-      .select("src", "dst")
+    // The PRODUCTION peel round (kcorePeel), not a test-side copy.
+    val round = graft.ops.Graph.kcorePeel(graft.ops.Graph.partsCoGraph(spark, sf), 2)
     round.count()
     val p = round.queryExecution.executedPlan.toString
     assert("BroadcastHashJoin".r.findAllIn(p).length >= 2,
@@ -530,10 +525,10 @@ class PlanShapeSpec extends SparkSpec {
   test("label-prop round joins broadcast the label vector — edges never re-shuffle") {
     // The PRODUCTION round stage (labelPropIncoming — the exact code the
     // superstep loop runs), not a test-side reimplementation.
-    val e = graft.ops.Graph.domesticEdges(spark, sf)
-    val labels = e.select(col("src").as("node")).distinct()
+    val g = graft.ops.Graph.domestic(spark, sf, bucketed = false)
+    val labels = g.table.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
-    val best = graft.ops.Graph.labelPropIncoming(e, labels)
+    val best = graft.ops.Graph.labelPropIncoming(g, labels)
     best.count()
     val p = best.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"), s"labels must broadcast to the edges:\n$p")
