@@ -1,12 +1,11 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graft.{FooterStats, SkippingFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
@@ -18,9 +17,17 @@ import scala.util.{Failure, Try}
   * never declares schemas either (mkpipe_extractor_clickhouse/__init__.py:43,
   * `reader.load()` infers from the source).
   *
-  * A cold read launches no Spark job: [[readParquet]] reads on the driver
-  * the one footer Spark's own inference would read in a job, and hands the
-  * schema to `spark.read`.
+  * A cold read launches no Spark job and lists its path once:
+  * [[readParquet]] reads on the driver the one footer Spark's own inference
+  * would read in a job, and builds the relation over the file index it
+  * listed. That index skips, per scan, the files whose footer statistics
+  * prove no row passes the scan's pushed filters — the same decision the
+  * task-side parquet reader makes per row group, plus the TIMESTAMP_NTZ
+  * and raw-nanos comparisons Spark 4.1's `ParquetFilters` does not convert
+  * (so an incremental `ts >= wm` scan reads only the files holding rows at
+  * or past the watermark). Footers are memoized per session by (path,
+  * length, mtime) ([[footerMemo]]), which survives [[invalidate]] of the
+  * dir: a landed file's footer is read once.
   *
   * Timestamp normalization (session TZ is pinned UTC):
   *   - the fixtures' `events.ts` is µs TIMESTAMP_NTZ parquet at every scale
@@ -122,6 +129,17 @@ object Tables {
     spark.catalog.refreshByPath(dir)
   }
 
+  /** The parquet footers [[org.apache.spark.sql.graft.FooterStats]] has
+    * read under one table path, by (path, length, mtime): one [[memo]]
+    * cell per (session, qualified table path). A key names one version of
+    * one file, so the map never serves a stale footer; FooterStats prunes
+    * it to the files a listing of the path sees. It is keyed by the table
+    * path, not the fixture dir, so `invalidate(spark, dir)` after a delta
+    * lands keeps it: the next cycle reads only the new files' footers.
+    */
+  def footerMemo(spark: SparkSession, root: String): ConcurrentHashMap[(String, Long, Long), ParquetMetadata] =
+    memo(spark, root, "parquet-footers")(new ConcurrentHashMap[(String, Long, Long), ParquetMetadata]())
+
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Session-level setup runs on every call, not only on a memo miss, so
     // a conf reset between reads cannot leave a warm key without it.
@@ -141,21 +159,41 @@ object Tables {
       else col(f.name)
     }: _*)
 
-  /** `spark.read.parquet(path)` without its schema-inference job. Spark's
-    * non-merging inference reads one footer — `_common_metadata`, else
-    * `_metadata`, else the first data file by path — in a one-task job
-    * (57–70 ms per cold read). Here that footer is read on the driver and
-    * converted with the flags that job uses, and Spark reads the path with
-    * the result as its schema: the scan, its listing and its checks stay
-    * Spark's. With schema merging on, no file to read (an empty dir, a
-    * missing path) or a footer that will not read, Spark infers as usual
-    * and raises its own errors.
+  /** `spark.read.parquet(path)` without its schema-inference job, over one
+    * listing, skipping files by their footer statistics.
+    *
+    * Schema: Spark's non-merging inference reads one footer —
+    * `_common_metadata`, else `_metadata`, else the first data file by path
+    * — in a one-task job (57–70 ms per cold read). Here that footer comes
+    * from [[FooterStats]] (read on the driver, or memoized) and is converted
+    * with the flags that job uses.
+    *
+    * Relation: the one [[SkippingFileIndex]] listed here is the relation's
+    * file index, built as `spark.read.schema(s).parquet(path)` builds it
+    * (same partition discovery, data schema and format), so a cold read
+    * lists the path once, not twice. Its `listFiles` drops every file whose
+    * row-group statistics prove no row passes the scan's pushed data
+    * filters: Spark's own `ParquetFilters` conversion, evaluated by
+    * parquet-mr's `RowGroupFilter` at the STATISTICS level, which is the
+    * first of the levels the task-side reader drops row groups at — so a
+    * skipped file is one that reader would read no row from. On top of that
+    * it converts what `ParquetFilters` leaves out: comparisons on INT64
+    * TIMESTAMP(MICROS, isAdjustedToUTC=false) columns (TIMESTAMP_NTZ; the
+    * fixtures' `events.ts`) and on TIMESTAMP(NANOS) read as raw-nanos
+    * longs. Without them an incremental `ts >= wm` scan decodes every landed
+    * file's rows on every cycle.
+    *
+    * With schema merging on, no file to read (an empty dir, a missing
+    * path) or a footer that will not read, Spark infers as usual and raises
+    * its own errors; a footer column named like a partition column goes
+    * through `spark.read.schema(s)`, which types that partition column.
     */
   private def readParquet(spark: SparkSession, path: String): DataFrame = {
     val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
     val conf = state.conf
-    val files = new InMemoryFileIndex(spark, Seq(new Path(path)), Map.empty, None)
-      .allFiles().sortBy(_.getPath.toString)
+    val root = new Path(path)
+    val index = new SkippingFileIndex(spark, root.getFileSystem(state.newHadoopConf()).makeQualified(root))
+    val files = index.allFiles().sortBy(_.getPath.toString)
     val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
     val footerFile = summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
       .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
@@ -166,14 +204,11 @@ object Tables {
       nanosAsLong = conf.legacyParquetNanosAsLong,
       respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
     val schema: Option[StructType] = footerFile.flatMap { f =>
-      Try {
-        val footer = ParquetFooterReader.readFooter(
-          HadoopInputFile.fromStatus(f, state.newHadoopConf()), ParquetMetadataConverter.SKIP_ROW_GROUPS)
-        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter)
-      }.toOption
+      FooterStats.footers(spark, index, Seq(f)).get(f.getPath.toString).flatMap(m =>
+        Try(ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, m), converter)).toOption)
     }
     schema.filter(_ => !conf.isParquetSchemaMergingEnabled) match {
-      case Some(s) => spark.read.schema(s).parquet(path)
+      case Some(s) => index.relation(s).getOrElse(spark.read.schema(s).parquet(path))
       case None    => spark.read.parquet(path)
     }
   }

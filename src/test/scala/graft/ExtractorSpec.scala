@@ -373,4 +373,56 @@ class ExtractorSpec extends SparkSpec {
       wm => ns.zipWithIndex.collect { case (v, i) if v / 1000 >= usOf(wm) => i.toLong }.sorted,
       wm => s"GreaterThanOrEqual(ts,${usOf(wm) * 1000})")
   }
+
+  test("the native watermark probe comes from footer statistics; custom_query, bounds, JDBC and stats-less files take the aggregate") {
+    import org.apache.spark.sql.graft.FooterStats
+    def jobs[T](body: => T) = org.apache.spark.JobCount(spark.sparkContext)(body)
+    def aggregate(cfg: TableConfig, lp: Option[String], from: Extractor) = {
+      val (pred, _) = Predicates.incrementalPredicate(cfg, lp)
+      val r = from.readTable(spark, cfg.name).filter(pred).agg(max(col(cfg.iterateColumn.get))).head()
+      Option(r.get(0)).map(Extractor.stringify)
+    }
+    // Native path, exact statistics: no job, the aggregate's watermark.
+    for ((cfg, lp) <- Seq(incrId -> None, incrId -> Some("990"), incrTs -> None, incrTs -> Some("2024-01-10 00:00:00"))) {
+      val (r, n) = jobs(ex.extract(spark, cfg, lp))
+      assert(n == 0, s"${cfg.iterateColumn} from $lp: $n jobs")
+      assert(r.lastPoint.isDefined && r.lastPoint == aggregate(cfg, lp, ex), s"${cfg.iterateColumn} from $lp")
+    }
+    // custom_query and bounds: the aggregate.
+    val custom = incrId.copy(customQuery = Some("SELECT * FROM events {query_filter}"))
+    val (rc, nc) = jobs(ex.extract(spark, custom, Some("990")))
+    assert(nc >= 1 && rc.lastPoint.contains("999"), s"custom_query: $nc jobs, ${rc.lastPoint}")
+    val (rb, nb) = jobs(ex.extract(spark, incrId.copy(filterLowerBound = Some("10")), None))
+    assert(nb >= 1 && rb.lastPoint.contains("999"), s"bounds: $nb jobs, ${rb.lastPoint}")
+
+    // A file written without column statistics: no probe, the aggregate.
+    val noStats = java.nio.file.Files.createTempDirectory("graft-nostats").toString
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; }")
+    val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$noStats/events.parquet/part-00000.parquet"))
+      .withType(schema).withStatisticsEnabled(false).build()
+    try (0L until 50L).foreach(i => w.write(groups.newGroup().append("event_id", i))) finally w.close()
+    val bare = new Extractor(noStats)
+    assert(FooterStats.probe(Tables.t(spark, noStats, "events"), "event_id").isEmpty)
+    val (rs, ns) = jobs(bare.extract(spark, incrId, Some("40")))
+    assert(ns >= 1 && rs.lastPoint.contains("49"), s"no statistics: $ns jobs, ${rs.lastPoint}")
+
+    // A JDBC source: not a file relation, the aggregate.
+    val url = "jdbc:derby:memory:graftprobe;create=true"
+    val jconn = java.sql.DriverManager.getConnection(url)
+    try {
+      jconn.createStatement().executeUpdate("CREATE TABLE events_p (event_id BIGINT NOT NULL)")
+      val ps = jconn.prepareStatement("INSERT INTO events_p VALUES (?)")
+      for (i <- 0 until 20) { ps.setLong(1, i.toLong); ps.addBatch() }
+      ps.executeBatch()
+      val conn = ConnectionConfig(jdbcUrl = Some(url), user = "", password = "")
+      val jdbc = new Extractor("-", source = Some((s, n) => graft.extract.JdbcSource.load(s, conn, TableConfig(n))))
+      val cfg = incrId.copy(name = "events_p")
+      assert(FooterStats.probe(jdbc.readTable(spark, "events_p").filter(col("event_id") >= 5L), "event_id").isEmpty)
+      val (rj, nj) = jobs(jdbc.extract(spark, cfg, Some("5")))
+      assert(nj >= 1 && rj.lastPoint.contains("19"), s"JDBC: $nj jobs, ${rj.lastPoint}")
+    } finally jconn.close()
+  }
 }

@@ -46,6 +46,22 @@ class ParquetReadSpec extends SparkSpec {
     assert(Tables.t(spark, dir.toString, "lineitem").inputFiles.length == 3)
   }
 
+  test("a cold read lists its path once: files discovered = files read") {
+    import org.apache.spark.metrics.source.HiveCatalogMetrics
+    val dir = Files.createTempDirectory("graft-listing")
+    val table = dir.resolve("lineitem.parquet")
+    Files.createDirectories(table)
+    Files.copy(Paths.get(s"$sf01/lineitem.parquet"), table.resolve("part-0.parquet"))
+    val li = spark.read.parquet(s"$sf01/lineitem.parquet")
+    for (k <- 0 until 3)
+      li.filter(s"l_orderkey % 5 = $k").write.mode("append").parquet(table.toString)
+    Tables.invalidate(spark, dir.toString)
+    val before = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+    val files = Tables.t(spark, dir.toString, "lineitem").inputFiles.length
+    val discovered = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - before
+    assert(files == 4 && discovered == files, s"$discovered files discovered for $files")
+  }
+
   test("summary files: the _common_metadata footer is the one read, as in Spark") {
     val dir = Files.createTempDirectory("graft-summary")
     val table = dir.resolve("orders.parquet").toString

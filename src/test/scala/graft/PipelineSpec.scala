@@ -83,6 +83,77 @@ class PipelineSpec extends SparkSpec {
     assert(persisted.isEmpty, s"a batch was persisted: RDDs $persisted")
   }
 
+  test("landing history does not cost: after 5 or 50 deltas the incremental load reads the same files") {
+    import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.functions.{col, lit}
+    val base = spark.read.parquet(s"$sf/lineitem.parquet")
+    val perDelta = base.filter("l_orderkey <= 3").count()
+    val boundary = base.filter("l_orderkey = 3").count()
+    val li = TableConfig("lineitem", replicationMethod = ReplicationMethod.Incremental,
+      iterateColumn = Some("l_orderkey"), iterateColumnType = IterateType.IntCol)
+    // Delta k: orders 1-3 re-keyed past every earlier key, one file.
+    def land(dir: String, k: Int): Unit =
+      base.filter("l_orderkey <= 3").withColumn("l_orderkey", col("l_orderkey") + lit(100000L * k))
+        .coalesce(1).write.mode("append").parquet(s"$dir/lineitem.parquet")
+
+    // The files each load's landing scan read (the scan's numFiles).
+    def scanFiles(p: SparkPlan): Seq[Long] = p match {
+      case c: CommandResultExec => scanFiles(c.commandPhysicalPlan)
+      case a: AdaptiveSparkPlanExec => scanFiles(a.executedPlan)
+      case q: QueryStageExec => scanFiles(q.plan)
+      case f: FileSourceScanExec => Seq(f.metrics("numFiles").value)
+      case other => other.children.flatMap(scanFiles)
+    }
+    val read = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        scanFiles(qe.executedPlan).foreach(read.add(_))
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+
+    /** Lands `history` deltas, loads, lands one more and loads again:
+      * (files read by the second load, its jobs, watermark, sink rows).
+      */
+    def cycle(history: Int) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-history")
+      java.nio.file.Files.createDirectories(dir.resolve("lineitem.parquet"))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/lineitem.parquet"), dir.resolve("lineitem.parquet/part-0.parquet"))
+      (1 to history).foreach(land(dir.toString, _))
+      val store = new InMemoryWatermarkStore
+      val out = java.nio.file.Files.createTempDirectory("graft-history-out").toString
+      val pipe = new Pipeline(new Extractor(dir.toString), store)
+      assert(pipe.run(spark, Seq(li), out).head._2.isSuccess)
+      assert(store.get("lineitem").contains(s"${100000L * history + 3}"))
+      land(dir.toString, history + 1)
+      Tables.invalidate(spark, dir.toString)
+      read.clear()
+      spark.listenerManager.register(listener)
+      val (run, jobs) = try org.apache.spark.JobCount(spark.sparkContext)(pipe.run(spark, Seq(li), out))
+        finally spark.listenerManager.unregister(listener)
+      assert(run.head._2.isSuccess)
+      // The custom-query path keeps the aggregate, within the 3-job ceiling.
+      val custom = li.copy(customQuery = Some("SELECT * FROM lineitem {query_filter}"))
+      val cstore = new InMemoryWatermarkStore
+      cstore.put("lineitem", s"${100000L * history + 3}")
+      val cout = java.nio.file.Files.createTempDirectory("graft-history-cq").toString
+      val (crun, cjobs) = org.apache.spark.JobCount(spark.sparkContext)(
+        new Pipeline(new Extractor(dir.toString), cstore).run(spark, Seq(custom), cout))
+      assert(crun.head._2.isSuccess && cjobs <= 3, s"custom-query run took $cjobs jobs")
+      assert(cstore.get("lineitem") == store.get("lineitem"))
+      (read.toArray.toSeq, jobs, store.get("lineitem"), spark.read.parquet(s"$out/lineitem").count())
+    }
+
+    val (files5, jobs5, wm5, rows5) = cycle(5)
+    val (files50, jobs50, wm50, rows50) = cycle(50)
+    // The delta holding the watermark (the inclusive boundary) and the new one.
+    assert(files5 == Seq(2L) && files50 == files5, s"files read: $files5 after 5 deltas, $files50 after 50")
+    assert(jobs5 == 1 && jobs50 == 1, s"second load took $jobs5 and $jobs50 jobs")
+    assert(wm5.contains(s"${100000L * 6 + 3}") && wm50.contains(s"${100000L * 51 + 3}"))
+    assert(rows5 == base.count() + 6 * perDelta + boundary)
+    assert(rows50 == base.count() + 51 * perDelta + boundary)
+  }
+
   test("watermark file: a stray partial temp file from a crashed put leaves the previous watermarks readable") {
     val dir = java.nio.file.Files.createTempDirectory("graft-wm-crash")
     val wmPath = dir.resolve("watermarks.properties")
