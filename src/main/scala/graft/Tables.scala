@@ -146,6 +146,7 @@ object Tables {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.plans.PushdownNanosTimestamp.install(spark)
     graft.plans.SessionRules.addStrategy(spark, graft.plans.ParamScanFilters)
+    graft.extract.LocalFs.install(spark)
     // DataFrames are immutable plans — memoized so repeated reads skip the
     // file listing and the footer read.
     memo(spark, dir, s"table/$name")(normalize(readParquet(spark, s"$dir/$name.parquet")))

@@ -73,7 +73,11 @@ import org.apache.spark.sql.graft.FooterStats
   * The watermark reaches the generated code as a parameter
   * ([[graft.plans.ParamScanFilters]]), so a cycle's plans generate the
   * same source as the last cycle's: each executor JVM compiles a class
-  * once and reuses it for every later cycle.
+  * once and reuses it for every later cycle. On local disk the load's
+  * files and dirs get their permissions in-process ([[LocalFs]]) where
+  * Hadoop's local filesystem forks a `chmod` for each; that cost exists
+  * only there (single-node deployments, tests, perfbench), and HDFS and
+  * object-store sinks are untouched.
   */
 final class Extractor(
     sfDir: String,

@@ -40,6 +40,13 @@ import org.apache.spark.sql.SparkSession
   * leave a half-moved dir. At 100 TB the swap becomes a table format's
   * atomic commit (Delta/Iceberg/Hudi `replaceWhere` / `INSERT OVERWRITE`
   * snapshots): same staged-then-publish shape, one metadata pointer swap.
+  *
+  * Local disk: a write there creates every file and dir through
+  * [[LocalFs]], which sets their permissions in-process where Hadoop's
+  * local filesystem forks a `chmod` for each (`.crc` files and the
+  * commit's `_temporary` dirs included). That cost exists only on local
+  * disk (single-node deployments, the test suite, perfbench); HDFS and
+  * object-store paths are untouched.
   */
 object StagedReplace {
 
@@ -67,9 +74,12 @@ object StagedReplace {
     * are in the object scaladoc). Refuses, loudly, the one state it cannot
     * settle: no live `dir` beside a committed `dir.staging-<n>` left by the
     * earlier per-batch protocol, whose replayed batch would rebuild the
-    * sink from its own rows alone and drop all pre-batch history.
+    * sink from its own rows alone and drop all pre-batch history. Every
+    * sink writer calls this first, so it also installs graft's local
+    * filesystem ([[LocalFs.install]]) for the writes that follow.
     */
   def heal(spark: SparkSession, dir: String): Unit = {
+    LocalFs.install(spark)
     val (fs, live, staged) = (this.fs(spark, dir), new Path(dir), new Path(s"$dir.staged"))
     val liveData = hasData(spark, dir)
     if (!liveData && fs.exists(new Path(staged, "_SUCCESS"))) {
