@@ -1,110 +1,47 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-import graft.functions._
-import graft.plans.PushdownNanosTimestamp
 
 /** The library's one-line install: `--conf spark.sql.extensions=graft.GraftExtensions`
   * (or `SparkSession.builder().withExtensions(new GraftExtensions)`).
   *
-  * Injects every custom surface at session build — the idiomatic packaging
-  * for a Spark-native library, vs. the per-call registration
-  * (`functionRegistry.createOrReplaceTempFunction`) the query helpers also
-  * perform so they work on vanilla sessions:
-  *   - optimizer rule: [[graft.plans.PushdownNanosTimestamp]] (parquet
-  *     pushdown through the ns→µs normalization)
-  *   - planner strategy: [[graft.plans.ParamScanFilters]] (a scan filter's
+  * Injects, at session build, the engine's one list of session parts
+  * ([[Engine.inject]]; a plain session gets the same list from
+  * [[Engine.ensure]]):
+  *   - optimizer rules: [[graft.plans.PushdownNanosTimestamp]] (parquet
+  *     pushdown through the ns→µs normalization) and
+  *     [[graft.plans.LevenshteinLengthGuard]] (a `levenshtein(a, b) <= k`
+  *     filter gains the `abs(length(a) - length(b)) <= k` pre-check);
+  *   - planner strategies: [[graft.plans.AsOfJoinStrategy]] and
+  *     [[graft.plans.IntervalJoinStrategy]] (the native as-of and interval
+  *     joins) and [[graft.plans.ParamScanFilters]] (a scan filter's
   *     constants stay out of the generated code, so a new watermark reuses
-  *     the compiled class)
-  *   - SQL functions: graft_minhash, graft_shingle_hashes, graft_token_count,
-  *     graft_dot, graft_simhash, graft_rolling_fp, graft_deflate_len,
-  *     graft_dhash, and the graft_char_ngrams GENERATOR — all native
-  *     Expressions (scalar, aggregate-adjacent, and table-generating),
-  *     available to pure SQL users with no Scala imports.
+  *     the compiled class);
+  *   - SQL functions, all native Expressions: the as-of and interval
+  *     markers (graft_asof_match[_inner][_strict], graft_interval_match),
+  *     graft_hilbert, graft_minhash, graft_shingle_hashes,
+  *     graft_token_count, graft_dot, graft_simhash, graft_rolling_fp,
+  *     graft_deflate_len, graft_dhash, graft_bloom_might_contain, the
+  *     graft_char_ngrams and graft_qgram_hashes GENERATORS, and the
+  *     ClickHouse dialect's names ([[graft.plans.ClickHouseFunctions]]) —
+  *     available to pure SQL users with no Scala imports. A Spark built-in
+  *     of the same name is never replaced.
+  *
+  * Extension-only, because a live session's parser is fixed when it is
+  * built: the parser ([[graft.plans.GraftSqlParser]]: ASOF JOIN …
+  * MATCH_CONDITION → marked LEFT JOIN, and the ClickHouse clauses LIMIT BY
+  * / QUALIFY / quantile(p)(x) … for statements the stock parser rejects)
+  * and the resolution rule [[graft.plans.ResolveAsOfSql]] that turns the
+  * marked Join into the AsOfJoin node.
   *
   * Proven end-to-end by [[ExtensionsDemo]] (extensions bind at session
   * construction, so the proof needs a session built WITH the conf).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String): ExpressionInfo =
-    // The full 11-arg constructor is the only non-deprecated one that keeps
-    // the usage string (shown by `DESCRIBE FUNCTION`).
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
-      "", "", "", "", "", "", "built-in")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => PushdownNanosTimestamp)
-    ext.injectOptimizerRule(_ => graft.plans.LevenshteinLengthGuard)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectPlannerStrategy(_ => graft.plans.IntervalJoinStrategy)
-    ext.injectPlannerStrategy(_ => graft.plans.ParamScanFilters)
-    // SQL surface for the as-of operator: parser rewrite (ASOF JOIN …
-    // MATCH_CONDITION → marked LEFT JOIN), marker functions, and the
-    // resolution rule converting the marked Join into the AsOfJoin node.
+    Engine.inject(ext)
     ext.injectParser((_, delegate) => new graft.plans.GraftSqlParser(delegate))
     ext.injectResolutionRule(_ => graft.plans.ResolveAsOfSql)
-    ext.injectFunction((FunctionIdentifier("graft_asof_match"),
-      info("graft_asof_match",
-        "graft_asof_match(l_time, r_time[, tiebreaks...]) - as-of marker in a LEFT JOIN condition: match the last right row with r_time <= l_time"),
-      (exprs: Seq[Expression]) => graft.plans.AsOfMatch(exprs, inner = false)))
-    ext.injectFunction((FunctionIdentifier("graft_asof_match_inner"),
-      info("graft_asof_match_inner",
-        "graft_asof_match_inner(l_time, r_time[, tiebreaks...]) - as-of marker dropping unmatched left rows (DuckDB ASOF JOIN default)"),
-      (exprs: Seq[Expression]) => graft.plans.AsOfMatch(exprs, inner = true)))
-    ext.injectFunction((FunctionIdentifier("graft_asof_match_strict"),
-      info("graft_asof_match_strict",
-        "graft_asof_match_strict(l_time, r_time[, tiebreaks...]) - as-of marker matching the latest STRICTLY-prior right row (r_time < l_time; DuckDB's > MATCH_CONDITION)"),
-      (exprs: Seq[Expression]) => graft.plans.AsOfMatch(exprs, inner = false, strict = true)))
-    ext.injectFunction((FunctionIdentifier("graft_asof_match_inner_strict"),
-      info("graft_asof_match_inner_strict",
-        "graft_asof_match_inner_strict(l_time, r_time[, tiebreaks...]) - strictly-prior as-of marker dropping unmatched left rows"),
-      (exprs: Seq[Expression]) => graft.plans.AsOfMatch(exprs, inner = true, strict = true)))
-    ext.injectFunction((FunctionIdentifier("graft_interval_match"),
-      info("graft_interval_match",
-        "graft_interval_match(l_time, r_time, lo_us, hi_us) - interval marker in an INNER or LEFT JOIN condition: match pairs with r_time in [l_time+lo_us, l_time+hi_us]; planned as the native sorted-sweep IntervalJoinExec"),
-      (exprs: Seq[Expression]) => graft.plans.IntervalMatch(exprs)))
-    ext.injectFunction((FunctionIdentifier("graft_hilbert"),
-      info("graft_hilbert",
-        "graft_hilbert(x, y[, bits]) - 2-D Hilbert-curve index of grid cell (x, y) on the 2^bits grid (default 16); the continuous space-filling order behind the hilbert lake layout"),
-      (exprs: Seq[Expression]) => HilbertIndex.fromExprs(exprs)))
-    ext.injectFunction((FunctionIdentifier("graft_minhash"),
-      info("graft_minhash", "graft_minhash(text) - 64-hash MinHash signature (3-word shingles)"),
-      (exprs: Seq[Expression]) => MinHashSignature(exprs.head, 64, 3)))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
-      info("graft_shingle_hashes", "graft_shingle_hashes(text) - distinct 3-word shingle hash set"),
-      (exprs: Seq[Expression]) => ShingleHashes(exprs.head, 3)))
-    ext.injectFunction((FunctionIdentifier("graft_token_count"),
-      info("graft_token_count", "graft_token_count(text) - whitespace token count"),
-      (exprs: Seq[Expression]) => TokenCount(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_dot"),
-      info("graft_dot", "graft_dot(a, b) - dot product of two numeric arrays"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_simhash"),
-      info("graft_simhash", "graft_simhash(text) - 64-bit SimHash fingerprint"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_rolling_fp"),
-      info("graft_rolling_fp", "graft_rolling_fp(text) - content-defined rolling-hash anchor set (16-char window, 1/64 rate)"),
-      (exprs: Seq[Expression]) => RollingFingerprint(exprs.head, 16, 0x3f)))
-    ext.injectFunction((FunctionIdentifier("graft_deflate_len"),
-      info("graft_deflate_len", "graft_deflate_len(text) - DEFLATE-compressed byte length (level 6)"),
-      (exprs: Seq[Expression]) => DeflateLen(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_dhash"),
-      info("graft_dhash", "graft_dhash(binary) - 64-bit byte-grid perceptual difference hash"),
-      (exprs: Seq[Expression]) => DHash64(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_char_ngrams"),
-      info("graft_char_ngrams", "graft_char_ngrams(text, n) - generator: one (pos, gram) row per n-char window"),
-      (exprs: Seq[Expression]) => CharNgrams(exprs(0), exprs(1))))
-    // ClickHouse dialect compat (the reference's custom_query migration
-    // path): the combinator/conversion function names; the LIMIT BY /
-    // QUALIFY / quantile(p)(x) / uniq clauses ride the injected parser
-    // (GraftSqlParser chains ClickHouseSqlRewrite before AsOfSqlRewrite).
-    graft.plans.ClickHouseFunctions.builders.foreach { case (name, usage, builder) =>
-      ext.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
-    }
   }
 }
 

@@ -35,8 +35,10 @@ import scala.util.{Failure, Try}
   *     any other NTZ column;
   *   - a genuine TIMESTAMP(NANOS) column (a ClickHouse DateTime64(9)
   *     export) is unreadable on Spark 4.1.2 (PARQUET_TYPE_ILLEGAL) unless
-  *     `spark.sql.legacy.parquet.nanosAsLong` is set, and then reads as a
-  *     raw-nanos long: the LongType branch truncates ns→µs and
+  *     `spark.sql.legacy.parquet.nanosAsLong` is set — an engine
+  *     requirement that [[Engine.ensure]] sets on the session, and checks
+  *     again on every [[t]] — and then reads as a raw-nanos long: the
+  *     LongType branch truncates ns→µs and
   *     [[graft.plans.PushdownNanosTimestamp]] restores scan pushdown.
   *     `PlansSpec` covers this with a real nanos file;
   *   - ms-precision columns load as TIMESTAMP_NTZ (isAdjustedToUTC=false);
@@ -141,12 +143,9 @@ object Tables {
     memo(spark, root, "parquet-footers")(new ConcurrentHashMap[(String, Long, Long), ParquetMetadata]())
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Session-level setup runs on every call, not only on a memo miss, so
-    // a conf reset between reads cannot leave a warm key without it.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    graft.plans.PushdownNanosTimestamp.install(spark)
-    graft.plans.SessionRules.addStrategy(spark, graft.plans.ParamScanFilters)
-    graft.extract.LocalFs.install(spark)
+    // Runs on every call, not only on a memo miss, so a conf reset between
+    // reads cannot leave a warm key without the nanos conf.
+    Engine.ensure(spark)
     // DataFrames are immutable plans — memoized so repeated reads skip the
     // file listing and the footer read.
     memo(spark, dir, s"table/$name")(normalize(readParquet(spark, s"$dir/$name.parquet")))

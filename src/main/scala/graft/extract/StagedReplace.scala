@@ -75,11 +75,12 @@ object StagedReplace {
     * settle: no live `dir` beside a committed `dir.staging-<n>` left by the
     * earlier per-batch protocol, whose replayed batch would rebuild the
     * sink from its own rows alone and drop all pre-batch history. Every
-    * sink writer calls this first, so it also installs graft's local
-    * filesystem ([[LocalFs.install]]) for the writes that follow.
+    * sink writer calls this first, so it also ensures the engine
+    * ([[graft.Engine.ensure]]), graft's local filesystem included, for the
+    * writes that follow.
     */
   def heal(spark: SparkSession, dir: String): Unit = {
-    LocalFs.install(spark)
+    graft.Engine.ensure(spark)
     val (fs, live, staged) = (this.fs(spark, dir), new Path(dir), new Path(s"$dir.staged"))
     val liveData = hasData(spark, dir)
     if (!liveData && fs.exists(new Path(staged, "_SUCCESS"))) {

@@ -61,13 +61,11 @@ case class CharNgrams(child: Expression, nExpr: Expression)
 }
 
 object CharNgrams {
-  /** Register `graft_char_ngrams(s, n)` and return an invocation column
+  /** An invocation column of the engine's `graft_char_ngrams(s, n)`
     * (explodes to (pos, gram) rows wherever a generator is legal).
     */
   def charNgrams(spark: org.apache.spark.sql.SparkSession, s: Column, n: Column): Column = {
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_char_ngrams", exprs => CharNgrams(exprs(0), exprs(1)), "built-in")
+    graft.Engine.ensure(spark)
     org.apache.spark.sql.functions.call_function("graft_char_ngrams", s, n)
   }
 }

@@ -63,11 +63,9 @@ object DHash64 {
     h
   }
 
-  /** Register `graft_dhash(binary)` and return an invocation column. */
+  /** An invocation column of the engine's `graft_dhash(binary)`. */
   def dhash(spark: org.apache.spark.sql.SparkSession, payload: Column): Column = {
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_dhash", exprs => DHash64(exprs.head), "built-in")
+    graft.Engine.ensure(spark)
     org.apache.spark.sql.functions.call_function("graft_dhash", payload)
   }
 }

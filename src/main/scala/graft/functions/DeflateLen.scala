@@ -48,11 +48,9 @@ object DeflateLen {
     } finally d.end()
   }
 
-  /** Register `graft_deflate_len(text)` and return an invocation column. */
+  /** An invocation column of the engine's `graft_deflate_len(text)`. */
   def deflateLen(spark: org.apache.spark.sql.SparkSession, text: Column): Column = {
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_deflate_len", exprs => DeflateLen(exprs.head), "built-in")
+    graft.Engine.ensure(spark)
     org.apache.spark.sql.functions.call_function("graft_deflate_len", text)
   }
 }

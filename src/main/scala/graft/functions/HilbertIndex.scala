@@ -106,11 +106,6 @@ case class HilbertIndex(left: Expression, right: Expression, bits: Int)
 }
 
 object HilbertIndex {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_hilbert", exprs => fromExprs(exprs), "built-in")
-
   /** SQL-surface constructor: `graft_hilbert(x, y[, bits])` — `bits` must
     * be a foldable non-null integer literal (default 16). Arity and the
     * bits literal are validated HERE (analysis time) so a bad call fails
@@ -135,7 +130,7 @@ object HilbertIndex {
 
   def hilbert(spark: org.apache.spark.sql.SparkSession, x: Column, y: Column,
       bits: Int = 16): Column = {
-    register(spark)
+    graft.Engine.ensure(spark)
     org.apache.spark.sql.functions.call_function("graft_hilbert", x, y,
       org.apache.spark.sql.functions.lit(bits))
   }

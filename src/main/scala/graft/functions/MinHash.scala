@@ -118,7 +118,7 @@ object ShingleHashes {
     * `call_function` resolves at analysis time, not Column construction, so
     * a single shared name would silently rebind earlier Columns to whatever
     * shingleLen the most recent caller passed (and could shadow the
-    * GraftExtensions-injected len=3 SQL binding, which keeps the plain
+    * engine's len=3 SQL binding, which keeps the plain
     * `graft_shingle_hashes` name).
     */
   def register(spark: org.apache.spark.sql.SparkSession, shingleLen: Int): String = {
@@ -180,13 +180,8 @@ case class SimHash64(child: Expression) extends UnaryExpression with CodegenFall
 }
 
 object SimHash64 {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_simhash", exprs => SimHash64(exprs.head), "built-in")
-
   def simhash(spark: org.apache.spark.sql.SparkSession, text: Column): Column = {
-    register(spark)
+    graft.Engine.ensure(spark)
     org.apache.spark.sql.functions.call_function("graft_simhash", text)
   }
 }
@@ -204,8 +199,8 @@ object MinHashSignature {
     * registered builder + `call_function` is the public bridge from
     * Expression to Column — and it makes the function available to SQL too).
     * Name-per-parameter for the same rebinding reason as
-    * [[ShingleHashes.register]]; the plain `graft_minhash` SQL name belongs
-    * to GraftExtensions (64 hashes, 3-shingles).
+    * [[ShingleHashes.register]]; the plain `graft_minhash` SQL name is the
+    * engine's ([[graft.Engine]]: 64 hashes, 3-shingles).
     */
   def register(spark: org.apache.spark.sql.SparkSession,
       numHashes: Int, shingleLen: Int): String = {

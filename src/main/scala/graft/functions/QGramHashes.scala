@@ -89,13 +89,11 @@ case class QGramHashes(child: Expression, qExpr: Expression)
 }
 
 object QGramHashes {
-  /** Register `graft_qgram_hashes(s, q)` and return an invocation column
+  /** An invocation column of the engine's `graft_qgram_hashes(s, q)`
     * (explodes to (gram BIGINT) rows wherever a generator is legal).
     */
   def qgramHashes(spark: org.apache.spark.sql.SparkSession, s: Column, q: Column): Column = {
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_qgram_hashes", exprs => QGramHashes(exprs(0), exprs(1)), "built-in")
+    graft.Engine.ensure(spark)
     org.apache.spark.sql.functions.call_function("graft_qgram_hashes", s, q)
   }
 }

@@ -47,11 +47,9 @@ case class TokenCount(child: Expression) extends UnaryExpression {
 }
 
 object TokenCount {
-  /** Register `graft_token_count(text)` and return an invocation column. */
+  /** An invocation column of the engine's `graft_token_count(text)`. */
   def tokenCount(spark: org.apache.spark.sql.SparkSession, text: Column): Column = {
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_token_count", exprs => TokenCount(exprs.head), "built-in")
+    graft.Engine.ensure(spark)
     org.apache.spark.sql.functions.call_function("graft_token_count", text)
   }
 }

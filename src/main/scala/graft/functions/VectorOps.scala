@@ -116,19 +116,12 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
 
 object VectorOps {
 
-  /** Register `graft_dot(a, b)` (same registry bridge as graft_minhash: the
-    * Column companion is private[sql] in Spark 4, so Expression → Column goes
+  /** An invocation column of the engine's `graft_dot(a, b)` (the Column
+    * companion is private[sql] in Spark 4, so Expression → Column goes
     * through a registered builder + `call_function`).
     */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_dot",
-        exprs => DotProduct(exprs(0), exprs(1)),
-        "built-in")
-
   def dot(spark: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+    graft.Engine.ensure(spark)
     org.apache.spark.sql.functions.call_function("graft_dot", a, b)
   }
 

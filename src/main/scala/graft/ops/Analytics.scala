@@ -1040,7 +1040,6 @@ object Analytics {
     * collapsed to the maybe slice.
     */
   def joinBloomAnti(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
     val banned = t(spark, dir, "customer")
       .filter(col("c_acctbal") < 0).select(col("c_custkey"))
     // Size the sketch from the actual ban-list cardinality (one count agg —
@@ -1053,10 +1052,7 @@ object Analytics {
       bf.writeTo(out)
       out.toByteArray
     }
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_bloom_might_contain",
-        exprs => BloomFilterMightContain(exprs.head, exprs(1)), "built-in")
+    // `graft_bloom_might_contain` is an Engine function; `t` ensured it.
     val mightHit = call_function("graft_bloom_might_contain",
       lit(bytes), col("o_custkey"))
     val orders = t(spark, dir, "orders")
@@ -1488,10 +1484,6 @@ object Analytics {
     * [[graft.ops.Skew]]'s salting). Never all-pairs.
     */
   def erBlockedMatch(spark: SparkSession, dir: String): DataFrame = {
-    // Installs the length-guard rule: the levenshtein threshold filter gets
-    // an implied abs(len-diff) pre-check so the DP runs only on
-    // length-compatible pairs (plan-pinned in PlanShapeSpec).
-    graft.plans.LevenshteinLengthGuard.install(spark)
     val c = t(spark, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey").cast("long").as("nation"),
         substring(col("c_name"), 10, 9).as("c_suf"))

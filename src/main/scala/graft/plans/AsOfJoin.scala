@@ -65,9 +65,9 @@ case class AsOfJoin(
 }
 
 /** Planner strategy: the one-case translation [[AsOfJoin]] → [[AsOfJoinExec]].
-  * Register via `spark.experimental.extraStrategies` (what
-  * [[graft.spark.AsOf.asofJoin]] does idempotently) or
-  * `SparkSessionExtensions.injectPlannerStrategy` ([[graft.GraftExtensions]]).
+  * One of the [[graft.Engine]] strategies: `injectPlannerStrategy`
+  * ([[graft.GraftExtensions]]) or `spark.experimental.extraStrategies`
+  * ([[graft.Engine.ensure]], which [[graft.spark.AsOf.asofJoin]] calls).
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

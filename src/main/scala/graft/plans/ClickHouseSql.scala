@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.UnresolvedExtractValue
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
@@ -106,6 +105,7 @@ object ClickHouseSqlRewrite {
   private def rewriteOne(sql: String): String = {
     val masked = mask(sql)
     failOnTableModifiers(masked)
+    if (XxHash64Re.matcher(masked).find()) throw ClickHouseFunctions.hashError("xxHash64")
     // WITH FILL needs the result SCHEMA (generated rows take type
     // defaults in the other columns), which a text rewrite cannot know.
     // ClickHouseSql.sql peels the clause off BEFORE this rewrite and
@@ -1552,6 +1552,15 @@ object ClickHouseSqlRewrite {
     s"(?i)\\b(?:FROM|JOIN)\\s+$NotClauseKw[A-Za-z_][\\w.]*\\s+FINAL\\b")
   private val SampleRe = java.util.regex.Pattern.compile(
     s"(?i)\\b(?:FROM|JOIN)\\s+$NotClauseKw[A-Za-z_][\\w.]*\\s+SAMPLE\\s+[0-9.]")
+
+  /** A call of ClickHouse's `xxHash64`, spelled as ClickHouse resolves it
+    * (case-sensitively). It shares Spark's `xxhash64` name, and no engine
+    * walk replaces a Spark built-in, so the registry cannot hold the hash
+    * family's named error for it ([[ClickHouseFunctions.hashError]]): the
+    * dialect raises it here. Spark's own `xxhash64`, the spelling the
+    * SAMPLE error recommends, passes.
+    */
+  private val XxHash64Re = java.util.regex.Pattern.compile("(?<![\\w.$])xxHash64\\s*\\(")
 
   /** `FROM t FINAL` and `FROM t SAMPLE k` cannot be translated without
     * silently changing results, so both are NAMED errors: FINAL's
@@ -3363,13 +3372,17 @@ object ClickHouseFunctions {
     */
   private def chHashError(name: String): (String, String, Seq[Expression] => Expression) =
     (name, s"$name - NOT SUPPORTED: ClickHouse-specific hash algorithm",
-      _ => throw new IllegalArgumentException(
-        s"ClickHouse SQL: $name cannot be mapped — ClickHouse and Spark " +
-          "implement different hash algorithms/seeds (Spark's xxhash64 " +
-          "seeds with 42 where ClickHouse's xxHash64 seeds with 0), so any " +
-          "mapping would silently produce different hash values and break " +
-          "sharding/sampling/dedup logic ported from ClickHouse; recompute " +
-          "the hashes with Spark's xxhash64/hash consistently on every side"))
+      _ => throw hashError(name))
+
+  /** The hash family's named error; `xxHash64` raises it from the rewrite. */
+  private[plans] def hashError(name: String): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"ClickHouse SQL: $name cannot be mapped — ClickHouse and Spark " +
+        "implement different hash algorithms/seeds (Spark's xxhash64 " +
+        "seeds with 42 where ClickHouse's xxHash64 seeds with 0), so any " +
+        "mapping would silently produce different hash values and break " +
+        "sharding/sampling/dedup logic ported from ClickHouse; recompute " +
+        "the hashes with Spark's xxhash64/hash consistently on every side")
 
   /** Typed empty-array constructor (`emptyArrayInt64()` …) — the UInt
     * widths widen onto the same signed carriers as the to* casts
@@ -5311,7 +5324,7 @@ object ClickHouseFunctions {
     chHashError("cityHash64"), chHashError("sipHash64"),
     chHashError("sipHash128"), chHashError("farmHash64"),
     chHashError("farmFingerprint64"), chHashError("halfMD5"),
-    chHashError("xxHash32"), chHashError("xxHash64"),
+    chHashError("xxHash32"),
     chHashError("intHash32"), chHashError("intHash64"),
     // dict* on an extension session: the mapping needs a TEXT rewrite
     // (the lookup becomes a scalar subquery, which a function builder
@@ -6463,21 +6476,6 @@ object ClickHouseFunctions {
     }
   }
 
-  /** Vanilla-session registration. A same-named function that ALREADY
-    * exists — a Spark built-in would have shadowed these anyway, and a
-    * user's own temp function was registered deliberately — WINS: the
-    * registrar never replaces, so calling [[ClickHouseSql.sql]] cannot
-    * silently clobber a user registration as a side effect. Rename the
-    * user function if the ClickHouse semantics are wanted. (Extension
-    * sessions inject the same builders at session build.)
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, _, builder) =>
-      if (!reg.functionExists(FunctionIdentifier(name.toLowerCase)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
 }
 
 /** ClickHouse's `ORDER BY col WITH FILL [FROM a] [TO b] [STEP s]` —
@@ -7033,16 +7031,18 @@ object ClickHouseWithFill {
   * parser rejects). Same kernel both ways, but HERE the rewrite is
   * unconditional: the caller has explicitly declared the statement to be
   * ClickHouse dialect, so there is no standard-SQL behavior to preserve.
-  * [[ClickHouseFunctions.register]] supplies the function names (never
-  * replacing an existing registration — see its scaladoc), and the
-  * statement then also flows through [[AsOfSqlRewrite]] so ASOF clauses
-  * keep working inside ported queries. `WITH FILL` peels off first —
+  * [[graft.Engine.ensure]] (via [[org.apache.spark.sql.graft.AsOf.sql]])
+  * supplies the function names — never replacing an existing one: a Spark
+  * built-in or a user's own temp function of the same name wins, so a
+  * user function is never clobbered as a side effect; rename it if the
+  * ClickHouse semantics are wanted — and the statement then also flows
+  * through [[AsOfSqlRewrite]] so ASOF clauses keep working inside ported
+  * queries. `WITH FILL` peels off first —
   * it is a DataFrame post-step ([[ClickHouseWithFill]]), the one clause
   * whose semantics need the result schema.
   */
 object ClickHouseSql {
   def sql(spark: SparkSession, chSql: String): DataFrame = {
-    ClickHouseFunctions.register(spark)
     val (core, fill) = ClickHouseWithFill.extract(chSql)
     val df = org.apache.spark.sql.graft.AsOf.sql(spark, ClickHouseSqlRewrite(core))
     fill.fold(df)(ClickHouseWithFill.apply(df, _))

@@ -30,8 +30,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * bounded by the maximum number of right rows simultaneously inside one
   * window (the interval-overlap depth), no cell fan-out, no dedup pass.
   * Built on the same public seams: `BinaryNode` + `SparkStrategy` +
-  * `BinaryExecNode`, registered via `injectPlannerStrategy` /
-  * `extraStrategies`.
+  * `BinaryExecNode`, one of the [[graft.Engine]] strategies
+  * (`injectPlannerStrategy` / `extraStrategies`).
   *
   * Null keys and null times never match (SQL equality semantics). Times
   * must be LongType/TimestampType/TimestampNTZType (micros-long-backed);

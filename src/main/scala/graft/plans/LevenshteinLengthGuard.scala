@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -24,9 +23,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * runs to fixpoint): conjuncts are split, and a guard is added only if no
   * semantically-equal conjunct is already present.
   *
-  * Registered via [[GraftExtensions]] for extensions sessions and
-  * installable on a live session via [[install]] (same
-  * `experimental.extraOptimizations` route as [[PushdownNanosTimestamp]]).
+  * One of the [[graft.Engine]] rules: injected by [[graft.GraftExtensions]],
+  * installed on a live session by [[graft.Engine.ensure]].
   */
 object LevenshteinLengthGuard extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -36,21 +34,30 @@ object LevenshteinLengthGuard extends Rule[LogicalPlan] with PredicateHelper {
     case other => other
   }
 
+  // The guard has the shape an optimizer batch leaves alone: a cast only
+  // where k's type differs, and its place just ahead of the conjunct it
+  // guards. An extensions session runs this rule inside the
+  // operator-optimization batch, where SimplifyCasts stripped the no-op cast
+  // (the stripped guard then failed the check below and was added again)
+  // and filter inference prepends its isnotnull conjuncts; a plain session
+  // runs it after both. In this shape both seams plan the guard alike.
   private def mkGuard(a: Expression, b: Expression, k: Literal, strict: Boolean): Expression = {
-    val diff = Cast(Abs(Subtract(Length(a), Length(b))), k.dataType)
+    val d = Abs(Subtract(Length(a), Length(b)))
+    val diff = if (d.dataType == k.dataType) d else Cast(d, k.dataType)
     if (strict) LessThan(diff, k) else LessThanOrEqual(diff, k)
   }
 
-  /** Guards to prepend to `cond`'s conjunction, if any are missing. All four
-    * equivalent threshold spellings are matched — `lev <= k`, `k >= lev`,
-    * and the strict `lev < k` / `k > lev` (whose implied guard is itself
-    * strict: lev ≥ |Δlen|, so lev < k ⟹ |Δlen| < k). The guard DUPLICATES
-    * the levenshtein's argument expressions, so injection is skipped when
+  /** `cond` with each missing guard inserted just ahead of its threshold
+    * conjunct, or None when none is missing. All four equivalent threshold
+    * spellings are matched — `lev <= k`, `k >= lev`, and the strict
+    * `lev < k` / `k > lev` (whose implied guard is itself strict:
+    * lev ≥ |Δlen|, so lev < k ⟹ |Δlen| < k). The guard DUPLICATES the
+    * levenshtein's argument expressions, so injection is skipped when
     * either argument is non-deterministic (e.g. rand-derived): evaluating
     * such an argument a second time would change filter semantics, not just
     * cost.
     */
-  private def guards(cond: Expression): Seq[Expression] = {
+  private def guarded(cond: Expression): Option[Expression] = {
     val conjuncts = splitConjunctivePredicates(cond)
     def guardFor(levSide: Expression, k: Literal, strict: Boolean): Option[Expression] =
       stripCast(levSide) match {
@@ -59,13 +66,17 @@ object LevenshteinLengthGuard extends Rule[LogicalPlan] with PredicateHelper {
           if (conjuncts.exists(_.semanticEquals(g))) None else Some(g)
         case _ => None
       }
-    conjuncts.flatMap {
-      case LessThanOrEqual(l, k: Literal) => guardFor(l, k, strict = false)
-      case GreaterThanOrEqual(k: Literal, r) => guardFor(r, k, strict = false)
-      case LessThan(l, k: Literal) => guardFor(l, k, strict = true)
-      case GreaterThan(k: Literal, r) => guardFor(r, k, strict = true)
-      case _ => None
+    val withGuards = conjuncts.flatMap { c =>
+      val g = c match {
+        case LessThanOrEqual(l, k: Literal) => guardFor(l, k, strict = false)
+        case GreaterThanOrEqual(k: Literal, r) => guardFor(r, k, strict = false)
+        case LessThan(l, k: Literal) => guardFor(l, k, strict = true)
+        case GreaterThan(k: Literal, r) => guardFor(r, k, strict = true)
+        case _ => None
+      }
+      g.toSeq :+ c
     }
+    if (withGuards.length == conjuncts.length) None else Some(withGuards.reduce(And))
   }
 
   // By the time the user-provided batch runs, PushDownPredicates has
@@ -73,15 +84,8 @@ object LevenshteinLengthGuard extends Rule[LogicalPlan] with PredicateHelper {
   // entity-resolution shape) — so both Filter and Join conditions are
   // guarded.
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, child) =>
-      val add = guards(cond)
-      if (add.isEmpty) f else Filter((add :+ cond).reduce(And), child)
+    case f @ Filter(cond, child) => guarded(cond).fold(f)(Filter(_, child))
     case j: org.apache.spark.sql.catalyst.plans.logical.Join if j.condition.isDefined =>
-      val add = guards(j.condition.get)
-      if (add.isEmpty) j
-      else j.copy(condition = Some((add :+ j.condition.get).reduce(And)))
+      guarded(j.condition.get).fold(j)(c => j.copy(condition = Some(c)))
   }
-
-  /** Idempotent per-session install (mirrors [[PushdownNanosTimestamp.install]]). */
-  def install(spark: SparkSession): Unit = SessionRules.addOptimization(spark, this)
 }

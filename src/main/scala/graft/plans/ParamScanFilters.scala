@@ -68,9 +68,9 @@ case class ParamLiteral(value: Any, dataType: DataType) extends LeafExpression {
   * executor JVM compiles a class once and reuses it for later cycles, so
   * executors gain as the driver does.
   *
-  * Registered through [[graft.GraftExtensions]]' `injectPlannerStrategy`
-  * and, on a plain session, by [[graft.Tables.t]] via
-  * [[SessionRules.addStrategy]].
+  * One of the [[graft.Engine]] strategies: injected by
+  * [[graft.GraftExtensions]], installed on a live session by
+  * [[graft.Engine.ensure]].
   */
 object ParamScanFilters extends SparkStrategy {
 

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -37,10 +36,13 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * untouched (they keep correctness at the cost of pushdown, which no real
   * watermark hits).
   *
-  * Registered via `spark.experimental.extraOptimizations` (runs after the
-  * standard batches — by then PushDownPredicates has already collapsed the
-  * filter through the normalizing Project, so the rewritten conjuncts sit
-  * directly above the relation and FileSourceStrategy pushes them).
+  * One of the [[graft.Engine]] rules. On a plain session
+  * [[graft.Engine.ensure]] adds it to `spark.experimental.extraOptimizations`
+  * (runs after the standard batches — by then PushDownPredicates has
+  * already collapsed the filter through the normalizing Project, so the
+  * rewritten conjuncts sit directly above the relation and
+  * FileSourceStrategy pushes them); [[graft.GraftExtensions]] injects it
+  * into the operator-optimization batch.
   */
 object PushdownNanosTimestamp extends Rule[LogicalPlan] {
 
@@ -93,7 +95,4 @@ object PushdownNanosTimestamp extends Rule[LogicalPlan] {
           LessThan(ns, nsLit(us + 1))
       })
   }
-
-  /** Idempotently install into the session's experimental optimizations. */
-  def install(spark: SparkSession): Unit = SessionRules.addOptimization(spark, this)
 }

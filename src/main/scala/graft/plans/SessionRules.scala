@@ -6,20 +6,25 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkStrategy
 
 /** The one registrar for the engine's live-session installs into
-  * `spark.experimental`. `extraOptimizations` and `extraStrategies` are
-  * plain vars on the session's `ExperimentalMethods`, so an unlocked
-  * read-append-write from two threads (two concurrent pipeline table runs
-  * both reading through [[graft.Tables.t]] or both planning a custom query)
-  * can drop the other thread's entry. Every append here holds the
-  * session's `ExperimentalMethods` monitor and is idempotent.
+  * `spark.experimental`, used by [[graft.Engine.ensure]].
+  * `extraOptimizations` and `extraStrategies` are plain vars on the
+  * session's `ExperimentalMethods`, so an unlocked read-append-write from
+  * two threads can drop the other thread's entry. Every append here holds
+  * the session's `ExperimentalMethods` monitor and is idempotent.
   */
 object SessionRules {
 
-  /** Append `rule` to the session's extra optimizations unless present. */
+  /** Append `rule` to the session's extra optimizations unless the
+    * optimizer already carries it — via an earlier call or
+    * [[graft.GraftExtensions]]' `injectOptimizerRule`, which leaves
+    * `extraOptimizations` empty.
+    */
   def addOptimization(spark: SparkSession, rule: Rule[LogicalPlan]): Unit = {
+    val optimizer = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.optimizer
     val em = spark.experimental
     em.synchronized {
-      if (!em.extraOptimizations.contains(rule)) em.extraOptimizations = em.extraOptimizations :+ rule
+      if (!em.extraOptimizations.contains(rule) && !optimizer.extendedOperatorOptimizationRules.contains(rule))
+        em.extraOptimizations = em.extraOptimizations :+ rule
     }
   }
 

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-import graft.plans.{AsOfJoin, AsOfJoinStrategy, IntervalJoinStrategy, SessionRules}
+import graft.Engine
+import graft.plans.AsOfJoin
 
 /** Public entry for the native as-of join ([[graft.plans.AsOfJoin]]).
   *
@@ -12,10 +13,11 @@ import graft.plans.{AsOfJoin, AsOfJoinStrategy, IntervalJoinStrategy, SessionRul
   * DataFrame from a custom logical plan needs the `private[sql]`
   * `Dataset.ofRows` — the standard seam every Spark extension library uses
   * for exactly this (there is no public constructor from a LogicalPlan).
-  * Everything else goes through public APIs; the planner strategy registers
-  * idempotently via `spark.experimental.extraStrategies`, so the operator
-  * works in ANY session, not just one built with
-  * [[graft.GraftExtensions]] (which also injects it properly).
+  * Everything else goes through public APIs. Both entries call
+  * [[graft.Engine.ensure]], which installs the planner strategies and the
+  * marker functions on a live session, so the operator works in ANY
+  * session, not just one built with [[graft.GraftExtensions]] (which
+  * injects the same parts at session build).
   */
 object AsOf {
 
@@ -35,7 +37,7 @@ object AsOf {
     require(leftKeys.nonEmpty && leftKeys.length == rightKeys.length,
       "as-of join needs matching non-empty key lists")
     val spark = left.sparkSession
-    SessionRules.addStrategy(spark, AsOfJoinStrategy)
+    Engine.ensure(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     // An unaliased self join would duplicate exprIds across the node's
@@ -85,33 +87,16 @@ object AsOf {
     * [[graft.plans.AsOfSqlRewrite]] turns the clause into a marked LEFT
     * JOIN the stock parser accepts, the session analyzes it, and
     * [[graft.plans.ResolveAsOfSql]] converts the marked Join into the
-    * native [[graft.plans.AsOfJoin]] node (planned by the idempotently
-    * registered strategy). An extensions-built session converts during
-    * analysis, leaving nothing for the post-pass — idempotent by the
-    * marker guard.
+    * native [[graft.plans.AsOfJoin]] node (planned by the strategy
+    * [[graft.Engine.ensure]] installs). An extensions-built session
+    * converts during analysis, leaving nothing for the post-pass —
+    * idempotent by the marker guard.
     */
   def sql(spark: SparkSession, asofSql: String): DataFrame = {
-    SessionRules.addStrategy(spark, AsOfJoinStrategy)
-    // The same entry also serves the interval marker
-    // (`graft_interval_match` in a plain INNER JOIN condition), so its
-    // strategy registers alongside (one shared idempotent registrar).
-    SessionRules.addStrategy(spark, IntervalJoinStrategy)
+    // The marker functions (as-of and `graft_interval_match`) and both
+    // join strategies are Engine parts.
+    Engine.ensure(spark)
     val cs = spark.asInstanceOf[ClassicSparkSession]
-    cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_asof_match",
-      exprs => graft.plans.AsOfMatch(exprs, inner = false), "built-in")
-    cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_asof_match_inner",
-      exprs => graft.plans.AsOfMatch(exprs, inner = true), "built-in")
-    cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_asof_match_strict",
-      exprs => graft.plans.AsOfMatch(exprs, inner = false, strict = true), "built-in")
-    cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_asof_match_inner_strict",
-      exprs => graft.plans.AsOfMatch(exprs, inner = true, strict = true), "built-in")
-    cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_interval_match",
-      exprs => graft.plans.IntervalMatch(exprs), "built-in")
     val analyzed = spark.sql(graft.plans.AsOfSqlRewrite(asofSql))
       .queryExecution.analyzed
     ClassicDataset.ofRows(cs, graft.plans.ResolveAsOfSql(analyzed))

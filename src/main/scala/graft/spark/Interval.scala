@@ -4,13 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-import graft.plans.{IntervalJoin, IntervalJoinStrategy, SessionRules}
+import graft.Engine
+import graft.plans.IntervalJoin
 
 /** Public entry for the native keyed interval join
   * ([[graft.plans.IntervalJoin]]). Same `org.apache.spark.sql` placement
   * and `Dataset.ofRows` seam rationale as [[AsOf]], and the same
-  * idempotent strategy registration so the operator works on any session
-  * (an extensions-built session carries [[graft.plans.IntervalJoinStrategy]]
+  * [[graft.Engine.ensure]] so the operator works on any session (an
+  * extensions-built session carries [[graft.plans.IntervalJoinStrategy]]
   * already; `extraStrategies` stays empty there).
   */
 object Interval {
@@ -32,7 +33,7 @@ object Interval {
       "interval join needs matching non-empty key lists")
     require(loUs <= hiUs, s"interval window is empty: [$loUs, $hiUs]")
     val spark = left.sparkSession
-    SessionRules.addStrategy(spark, IntervalJoinStrategy)
+    Engine.ensure(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     require(lPlan.outputSet.intersect(rPlan.outputSet).isEmpty,

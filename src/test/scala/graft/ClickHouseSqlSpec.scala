@@ -1971,6 +1971,19 @@ class ClickHouseSqlSpec extends SparkSpec {
     assert((e.getMessage + msg).contains("different hash algorithms"), e.getMessage)
   }
 
+  test("execution: xxHash64 is a named error, xxhash64 stays Spark's") {
+    // xxHash64 shares Spark's built-in name (the registry is
+    // case-insensitive), so the dialect must not answer with Spark's
+    // seed-42 hash.
+    val e = intercept[Exception](ClickHouseSql.sql(spark, "SELECT xxHash64('x')").collect())
+    assert(e.getMessage.contains("different hash algorithms"), e.getMessage)
+    // The spelling the SAMPLE error recommends runs Spark's own hash.
+    val spark42 = spark.range(1).select(org.apache.spark.sql.functions.xxhash64(
+      org.apache.spark.sql.functions.lit("x"))).head().getLong(0)
+    assert(ClickHouseSql.sql(spark, "SELECT xxhash64('x')").head().getLong(0) == spark42)
+    assert(spark.sql("SELECT xxHash64('x')").head().getLong(0) == spark42)
+  }
+
   test("execution: toDayOfWeek's four modes, toMonday, toLastDayOfMonth, clamped month arithmetic, floor-divided toRelative*Num") {
     // 2024-01-01 is a Monday.
     val r = ClickHouseSql.sql(spark,

@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Proves the library's install paths in-suite: a FRESH session carrying
-  * [[GraftExtensions]] gets the optimizer rule and every SQL function with
-  * zero Scala imports. `spark.sql.extensions` is a STATIC conf — Spark reads
+  * [[GraftExtensions]] gets Engine's rules, strategies and every SQL
+  * function with zero Scala imports, and a plain session gets the same
+  * engine from [[Engine.ensure]]. `spark.sql.extensions` is a STATIC conf — Spark reads
   * it from the SparkContext's conf at session construction — so the
   * conf-string route only binds when this spec creates the JVM's first
   * context; when a shared [[SparkSpec]] context already exists (suite
@@ -22,7 +23,7 @@ class ExtensionsSpec extends AnyFunSuite {
 
   val sf = "/root/testdata/sf0.001"
 
-  test("spark.sql.extensions=graft.GraftExtensions injects the rule, the as-of planner strategy, 9 scalar SQL functions, and the generator") {
+  test("GraftExtensions injects Engine's rules, strategies, SQL functions, parser") {
     val prior = SparkSession.getActiveSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -134,11 +135,11 @@ class ExtensionsSpec extends AnyFunSuite {
         "the ON-conjunct ASOF spelling must plan the native operator")
       assert(conjunct.count() > 0)
 
-      // Negative control: the plain SQL names exist ONLY via the extensions —
-      // helper registrations use parameter-suffixed names, so a vanilla
-      // session must not resolve graft_minhash.
+      // Negative control: the plain SQL names exist only via the
+      // extensions or Engine.ensure — a vanilla session no entry point has
+      // touched must not resolve graft_minhash.
       prior.foreach { vanilla =>
-        val err = intercept[Exception](vanilla.sql("SELECT graft_minhash('a b c d')"))
+        val err = intercept[Exception](vanilla.newSession().sql("SELECT graft_minhash('a b c d')"))
         assert(err.getMessage.contains("UNRESOLVED_ROUTINE")
           || err.getMessage.toLowerCase.contains("cannot resolve"), err.getMessage)
       }
@@ -161,6 +162,104 @@ class ExtensionsSpec extends AnyFunSuite {
         """SELECT doc_id, row_number() OVER (ORDER BY doc_id) AS rn
           |FROM documents QUALIFY rn = 1""".stripMargin).head().getLong(0)
       assert(chq == 0L, "ClickHouse QUALIFY must run on plain spark.sql")
+    } finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      prior.foreach { p =>
+        SparkSession.setActiveSession(p)
+        SparkSession.setDefaultSession(p)
+      }
+    }
+  }
+
+  test("two seams, one engine: an extensions session and an ensured plain session") {
+    import org.apache.spark.sql.functions.{col, expr, lit, unix_micros}
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.classic.{SparkSession => Classic}
+    val prior = SparkSession.getActiveSession
+    val builder = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    // A context this suite built through the spark.sql.extensions conf
+    // route carries the extension into every session; stop it so the
+    // plain session below is plain.
+    if (prior.isEmpty && org.apache.spark.SparkEnv.get != null) {
+      val sc = builder.getOrCreate().sparkContext
+      if (sc.getConf.contains("spark.sql.extensions")) sc.stop()
+    }
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val plain = prior.getOrElse(builder.getOrCreate()).newSession()
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      val ext = builder.withExtensions(new GraftExtensions).getOrCreate()
+      assert(plain.asInstanceOf[Classic].sessionState.optimizer.extendedOperatorOptimizationRules.isEmpty,
+        "the plain session must not carry the extension")
+      Engine.ensure(plain)
+      val nanosDir = NanosFixture.write()
+      // Every plan below reads through Tables.t, which ensures the
+      // extensions session too: nothing may be installed twice there.
+      def parts(s: SparkSession) = {
+        val st = s.asInstanceOf[Classic].sessionState
+        (st.optimizer.extendedOperatorOptimizationRules ++ s.experimental.extraOptimizations,
+          st.planner.strategies.map(_.getClass.getName),
+          Engine.functions.map { case (name, _, builder) =>
+            name -> st.functionRegistry.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq builder)
+          })
+      }
+      def plans(s: SparkSession): Seq[(String, org.apache.spark.sql.execution.SparkPlan)] = {
+        val ev = Tables.t(s, sf, "events")
+        val purch = ev.filter(col("event_type") === "purchase")
+          .select(col("event_id").as("pid"), col("user_id"), unix_micros(col("ts")).as("pus"))
+        val clicks = ev.filter(col("event_type") === "click")
+          .select(col("event_id").as("cid"), col("user_id").as("cu"), unix_micros(col("ts")).as("cus"))
+        val since = lit("2024-01-15 00:00:00").cast("timestamp")
+        Seq(
+          "as-of join" -> org.apache.spark.sql.graft.AsOf.asofJoin(
+            purch, clicks, Seq("user_id"), Seq("cu"), "pus", "cus", Seq("cid")),
+          "interval join" -> org.apache.spark.sql.graft.Interval.intervalJoin(
+            purch, clicks, Seq("user_id"), Seq("cu"), "pus", "cus", -3600000000L, 0L),
+          "nanos pushdown" -> Tables.t(s, nanosDir, "events").filter(col("ts") >= since),
+          "levenshtein guard" -> Tables.t(s, sf, "customer")
+            .filter(expr("levenshtein(c_name, c_mktsegment) <= 2")),
+          "watermark scan" -> ev.filter(col("ts") >= since)
+        ).map { case (name, df) => name -> df.queryExecution.executedPlan }
+      }
+      def text(p: org.apache.spark.sql.execution.SparkPlan): String =
+        p.toString.replaceAll("#\\d+", "#N").replaceAll("plan_id=\\d+", "plan_id=N")
+      val (extPlans, plainPlans) = (plans(ext), plans(plain))
+      val Seq(asof, interval, nanos, guard, wm) = plainPlans.map(_._2)
+      // Each case shows the part it depends on.
+      assert(text(asof).contains("AsOfJoin ["), text(asof))
+      assert(text(interval).contains("IntervalJoin"), text(interval))
+      assert(text(nanos).contains(s"GreaterThanOrEqual(ts,${1705276800000000L * 1000})"), text(nanos))
+      assert(text(guard).contains("abs((length("), text(guard))
+      assert(wm.collect { case f: org.apache.spark.sql.execution.FilterExec => f.condition }
+        .exists(_.exists(_.isInstanceOf[graft.plans.ParamLiteral])), text(wm))
+      extPlans.zip(plainPlans).foreach { case ((name, e), (_, p)) =>
+        assert(text(e) == text(p), s"$name: the seams plan differently\n--- extensions\n${text(e)}\n--- plain\n${text(p)}")
+      }
+      val (extParts, plainParts) = (parts(ext), parts(plain))
+      assert(extParts._1 == Engine.rules && plainParts._1 == Engine.rules, (extParts._1, plainParts._1))
+      assert(extParts._2 == plainParts._2, (extParts._2, plainParts._2))
+      assert(Engine.strategies.forall(st => plainParts._2.count(_ == st.getClass.getName) == 1), plainParts._2)
+      assert(extParts._3.filterNot(_._2).isEmpty, extParts._3.filterNot(_._2))
+      assert(plainParts._3.filterNot(_._2).isEmpty, plainParts._3.filterNot(_._2))
+      assert(ext.experimental.extraStrategies.isEmpty && ext.experimental.extraOptimizations.isEmpty)
+
+      // Neither seam replaces Spark's xxhash64 ...
+      def xx(s: SparkSession) = s.sql("SELECT xxhash64('a')").head().getLong(0)
+      assert(xx(ext) == xx(plain))
+      assert(xx(plain) == plain.range(1).select(org.apache.spark.sql.functions.xxhash64(lit("a"))).head().getLong(0))
+      // ... and the ClickHouse dialect names ClickHouse's xxHash64 an error
+      // on both, as it does cityHash64.
+      for (s <- Seq(ext, plain)) {
+        val e = intercept[Exception](graft.plans.ClickHouseSql.sql(s, "SELECT xxHash64('x')").collect())
+        assert(e.getMessage.contains("different hash algorithms"), e.getMessage)
+      }
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

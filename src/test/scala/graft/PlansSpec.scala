@@ -52,7 +52,7 @@ class PlansSpec extends SparkSpec {
     // it must satisfy ts >= epoch. The old unguarded rewrite (ns >= 0) would
     // drop it. The rule now only fires for strictly positive µs literals.
     import spark.implicits._
-    graft.plans.PushdownNanosTimestamp.install(spark)
+    Engine.ensure(spark)
     val df = Seq(-1500L, -500L, 0L, 500L, 1500L).toDF("ns")
       .select(col("ns"), timestamp_micros(expr("ns DIV 1000")).as("ts"))
     val epoch = lit(new Timestamp(0L)) // µs = 0 → not rewritten
@@ -116,7 +116,6 @@ class PlansSpec extends SparkSpec {
   }
 
   test("levenshtein guard covers reversed and strict spellings, skips non-deterministic args") {
-    graft.plans.LevenshteinLengthGuard.install(spark)
     val c = Tables.t(spark, sf, "customer")
     def opt(cond: String): String =
       c.filter(expr(cond)).queryExecution.optimizedPlan.toString
@@ -151,38 +150,52 @@ class PlansSpec extends SparkSpec {
   }
 
   test("session registrars: 8 concurrent threads install each rule and strategy exactly once") {
-    import graft.plans.{AsOfJoinStrategy, IntervalJoinStrategy, LevenshteinLengthGuard, ParamScanFilters, PushdownNanosTimestamp, SessionRules}
-    // The five registrars: the two rule installs, and the strategy
-    // registrations the as-of and interval entries and Tables.t make.
-    val installs: Seq[org.apache.spark.sql.SparkSession => Unit] = Seq(
-      PushdownNanosTimestamp.install, LevenshteinLengthGuard.install,
-      SessionRules.addStrategy(_, AsOfJoinStrategy), SessionRules.addStrategy(_, IntervalJoinStrategy),
-      SessionRules.addStrategy(_, ParamScanFilters))
+    import org.apache.hadoop.fs.FileSystem
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val fileFs = java.util.concurrent.ConcurrentHashMap.newKeySet[FileSystem]()
     try {
       for (rep <- 0 until 20) {
         val s = spark.newSession()
         val start = new java.util.concurrent.CountDownLatch(1)
-        // Thread w starts at registrar w % 5, so different registrars race.
-        val futs = (0 until 8).map { w =>
+        val futs = (0 until 8).map { _ =>
           pool.submit(new Runnable {
             def run(): Unit = {
               start.await()
-              installs.indices.foreach(k => installs((w + k) % installs.size)(s))
+              Engine.ensure(s)
+              fileFs.add(FileSystem.get(java.net.URI.create("file:///"), s.sparkContext.hadoopConfiguration))
             }
           })
         }
         start.countDown()
         futs.foreach(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
         val opts = s.experimental.extraOptimizations
-        val planned = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.planner.strategies
-        assert(opts.count(_ eq PushdownNanosTimestamp) == 1, s"rep $rep: $opts")
-        assert(opts.count(_ eq LevenshteinLengthGuard) == 1, s"rep $rep: $opts")
-        assert(planned.count(_ eq AsOfJoinStrategy) == 1, s"rep $rep: ${s.experimental.extraStrategies}")
-        assert(planned.count(_ eq IntervalJoinStrategy) == 1, s"rep $rep: ${s.experimental.extraStrategies}")
-        assert(planned.count(_ eq ParamScanFilters) == 1, s"rep $rep: ${s.experimental.extraStrategies}")
+        val st = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+        Engine.rules.foreach(r => assert(opts.count(_ eq r) == 1, s"rep $rep: $opts"))
+        Engine.strategies.foreach(g =>
+          assert(st.planner.strategies.count(_ eq g) == 1, s"rep $rep: ${s.experimental.extraStrategies}"))
+        Engine.fixedFunctions.foreach { case (name, _, builder) =>
+          assert(st.functionRegistry.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq builder), s"rep $rep: $name")
+        }
+        assert(st.conf.legacyParquetNanosAsLong, s"rep $rep")
       }
     } finally pool.shutdown()
+    // One graft `file` filesystem, cached once, seen by every thread.
+    assert(fileFs.size == 1 && fileFs.iterator.next().isInstanceOf[graft.extract.LocalFs], fileFs)
+  }
+
+  test("no plan depends on session history: the first read brings the guard and nanos conf") {
+    // The length guard no longer waits for the entity-resolution query to
+    // install it: the first Tables.t read brings every rule.
+    val fresh = spark.newSession()
+    val guarded = Tables.t(fresh, sf, "customer")
+      .filter(expr("levenshtein(c_name, c_mktsegment) <= 2")).queryExecution.optimizedPlan.toString
+    assert(guarded.contains("abs((length("), guarded)
+    // A conf reset between reads: the next read still has the nanos conf.
+    val dir = NanosFixture.write()
+    assert(Tables.t(fresh, dir, "events").count() == NanosFixture.ns.size)
+    fresh.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    assert(Tables.t(fresh, dir, "events").collect().length == NanosFixture.ns.size)
   }
 
   test("native as-of join: constructed boundary/tie/unmatched/null-time semantics") {
